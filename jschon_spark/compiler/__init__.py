@@ -11,9 +11,8 @@ from jschon_spark.compiler.core import (
     CompileError,
     CompiledSchema,
     Compiler,
-    apply_stages,
+    Plan,
     compile_schema,
-    drop_stage_columns,
 )
 from jschon_spark.compiler.catalog import SchemaCatalog
 from jschon_spark.compiler.vocabulary import CustomKeyword
@@ -40,9 +39,8 @@ __all__ = [
     "CompileError",
     "CompiledSchema",
     "Compiler",
+    "Plan",
     "compile_schema",
-    "apply_stages",
-    "drop_stage_columns",
     "SchemaDerivationError",
     "spark_schema_for",
     "validate_json_column",

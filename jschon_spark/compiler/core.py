@@ -18,10 +18,13 @@ items ← prefixItems) is resolved through the ``results`` dict, mirroring
 
 from __future__ import annotations
 
+import copy
 import json
 import re
-from dataclasses import replace as _replace
-from typing import Any, Callable, Optional
+import threading
+from dataclasses import dataclass, replace as _replace
+from types import MappingProxyType
+from typing import Any, Callable, Mapping, Optional
 from urllib.parse import unquote, urldefrag, urljoin as _std_urljoin
 
 
@@ -160,6 +163,10 @@ _ANNOTATION_ONLY = {
 }
 
 _MAX_DEPTH = 48
+
+# staged materialization spills a row-scope node once its subtree folds
+# this many subschema applications inline (see Compiler.plan)
+STAGE_THRESHOLD = 12
 
 # 2020-12 vocabulary URIs → the keywords they contribute (reference:
 # vocabulary registration in jschon/catalog/_2020_12.py via
@@ -365,7 +372,6 @@ class Compiler:
         catalog: Optional[Any] = None,
         validate_schema: bool = True,
         max_nodes: int = 60_000,
-        stage_threshold: int = 12,
     ):
         from jschon_spark.compiler.legacy import rewrite_legacy
         from jschon_spark.compiler.metaschema import check_schema_document
@@ -423,41 +429,9 @@ class Compiler:
         # applications and fail FAST with a pointer instead — the same
         # philosophy as max_depth for cycles.
         self.max_nodes = max_nodes
-        # STAGED MATERIALIZATION (fixes the round-3 known limit, fuzz
-        # main seed 5069 / ext 5088): Catalyst's analysis expands the
-        # shared expression DAG into a tree, and because every node's
-        # viols channel re-references its children's `valid` trees
-        # (inside `when` gates), materialized size grew ~2x per NESTING
-        # level — a ~600-node compile of a 7+-level-nested schema
-        # exhausted a 12g driver heap at .select() analysis. The fix:
-        # when staging is active (CompiledSchema.validate and every
-        # other DataFrame-producing consumer turn it on), apply() spills
-        # any row-scope subschema node whose subtree weight reaches
-        # ``stage_threshold`` applications into a numbered STAGE — a
-        # dict of named intermediate Columns — and returns cheap
-        # ``F.col`` references instead. Consumers replay ``self.stages``
-        # as successive ``withColumns`` projections, so analysis sees
-        # bounded expressions referencing named attributes, and
-        # Spark's CollapseProject keeps multiply-referenced non-cheap
-        # expressions un-inlined. Bare ``columns()`` (expression-only
-        # callers) keeps staging OFF so its Columns stay standalone.
-        # Nodes compiled inside higher-order-function lambdas
-        # (ctx.no_trace) reference lambda variables and cannot be
-        # selected at row scope — they stay inline (array-nested depth
-        # is still bounded by the enclosing row-scope node's spill).
-        self.stage_threshold = stage_threshold
-        self._staging = False
-        self.stages: list[dict[str, Column]] = []
-        self._stage_tmp = 0
-        self._expr_stage = 0  # max stage of any F.col temp the current expression references
-        self._expr_weight = 0  # subschema applications folded into the current expression
-        self._node_count = 0
-        # trace spaths currently held by a ref-inlined application (the
-        # canonical application of the same site replaces them)
-        self._trace_via_ref: set[str] = set()
-        # dynamic ref-application spath → canonical URI prefix, for
-        # absoluteKeywordLocation translation (absolute_location)
-        self.ref_sites: dict[str, str] = {}
+        # The fields below describe the schema documents (catalog
+        # documents join lazily, on their first $ref) and are shared by
+        # every plan; per-plan state lives only on the copy plan() makes.
         # URI → (schema_node, canonical spath); ≙ Catalog schema cache
         self.registry: dict[str, tuple[Any, str]] = {}
         # $dynamicAnchor name → [(node, spath)] in document (outermost-first) order
@@ -475,6 +449,9 @@ class Compiler:
         # carriers, keyed by their enclosing resource
         self.dynamic_in_resource: dict[tuple[str, str], tuple[Any, str]] = {}
         self.catalog = catalog  # SchemaCatalog for cross-document $ref
+        # makes resolve_ref's check-then-load of a catalog document atomic:
+        # concurrent plans share the registry, and must index a document once
+        self._load_lock = threading.Lock()
         # user-defined keywords (catalog.create_vocabulary); dispatched
         # only in resources whose metaschema enables the vocabulary —
         # under the standard dialects they stay inert, exactly like the
@@ -488,17 +465,6 @@ class Compiler:
                         f"custom keyword {name!r} shadows a built-in keyword"
                     )
                 self.custom_keywords[name] = spec
-        # opt-in verbose trace: spath → (schema_node, path Column, Compiled,
-        # applied Column|None, static dtype, value Column) for every node
-        # applied at row scope (set to {} before apply)
-        self.trace: Optional[dict[str, tuple[Any, Column, Compiled]]] = None
-        # spath → [(keyword, annotation value JSON, needs_nonnull,
-        # own-validity Column|None)] for ACTIVE custom keywords that
-        # annotate (≙ result.annotate on success); recorded during
-        # _apply_custom so the output layer never emits for a resource
-        # whose dialect left the keyword inert, and gated on the
-        # keyword's OWN success for asserting keywords
-        self.custom_annotations: dict[str, list] = {}
         # resource URI → (enabled keyword set or None, dialect asserts
         # formats) — per-resource $schema/$vocabulary resolution, ≙ the
         # reference resolving a metaschema PER SCHEMA RESOURCE rather
@@ -522,6 +488,62 @@ class Compiler:
         self.root_doc_resources: set[str] = {self.base_uri} | {
             u for u in self.registry if "#" not in u
         }
+
+    def plan(self, schema: Any, ctx: Ctx, *, trace: bool, staged: bool) -> "Plan":
+        """Compile ``schema`` at ``ctx`` into a frozen :class:`Plan`.
+
+        Pure: the compile runs on a shallow copy of this Compiler whose
+        per-plan fields start empty while the document registry,
+        dialects and anchors stay shared, so a plan never depends on
+        what was planned before and concurrent plans do not interfere.
+        The plan's root is a result node: its pending noassert-if viols
+        resolve under its own outcome (basic output reports errors only
+        for invalid instances, jschon/output.py:46-70).
+
+        ``trace`` records one entry per row-scope schema node for the
+        verbose, audit and annotation outputs. ``staged`` turns on
+        STAGED MATERIALIZATION (fixes the round-3 known limit, fuzz main
+        seed 5069 / ext 5088): Catalyst's analysis expands the shared
+        expression DAG into a tree, and because every node's viols
+        channel re-references its children's `valid` trees (inside
+        `when` gates), materialized size grew ~2x per NESTING level — a
+        ~600-node compile of a 7+-level-nested schema exhausted a 12g
+        driver heap at .select() analysis. Staged, apply() spills any
+        row-scope subschema node whose subtree weight reaches
+        ``STAGE_THRESHOLD`` applications into a numbered STAGE of named
+        intermediate Columns and returns cheap ``F.col`` references
+        instead; ``Plan.replay`` adds the stages as successive
+        ``withColumns`` projections, so analysis sees bounded
+        expressions referencing named attributes, and Spark's
+        CollapseProject keeps multiply-referenced non-cheap expressions
+        un-inlined. An unstaged plan has no stages, so its Columns
+        select standalone. Nodes compiled inside higher-order-function
+        lambdas (ctx.no_trace) reference lambda variables and cannot be
+        selected at row scope — they stay inline (array-nested depth is
+        still bounded by the enclosing row-scope node's spill)."""
+        run = copy.copy(self)
+        run._staged = staged
+        # spath → (schema_node, path Column, Compiled, applied Column|None,
+        # static dtype, value Column) for every node applied at row scope
+        run._trace = {} if trace else None
+        # trace spaths currently held by a ref-inlined application (the
+        # canonical application of the same site replaces them)
+        run._trace_via_ref = set()
+        # spath → [(keyword, annotation value JSON, needs_nonnull,
+        # own-validity Column|None)] for ACTIVE custom keywords that
+        # annotate (≙ result.annotate on success); recorded during
+        # _apply_custom so the output layer never emits for a resource
+        # whose dialect left the keyword inert, and gated on the
+        # keyword's OWN success for asserting keywords
+        run._custom_annotations = {}
+        # dynamic ref-application spath → canonical URI prefix, for
+        # absoluteKeywordLocation translation
+        run._ref_sites = {}
+        run._stages = []  # stage k → {temp column name: Column}
+        run._stage_tmp = 0
+        run._expr_stage = 0  # max stage of any F.col temp the current expression references
+        run._expr_weight = 0  # subschema applications folded into the current expression
+        run._node_count = 0  # the max_nodes budget is per plan
         # Memo for coverage-guard RE-applications (unevaluated* keywords
         # re-derive sibling/branch validity at the SAME instance column):
         # (id(subschema), id(ctx.col), ctx.scope[, kw]) → validity
@@ -534,13 +556,22 @@ class Compiler:
         # validity expression depends on (viols, which embed the
         # instance path, are never memoized). Values keep a strong ref
         # to the keyed schema node so its id() can't be recycled.
-        self._reapply_cache: dict[tuple, tuple[Any, Column]] = {}
+        run._reapply_cache = {}
         # Top-level _coverage_sources results per (id(schema), scope):
         # the walk synthesizes guard dicts ({"allOf": subs}…) — caching
         # the whole result list makes those guard objects STABLE across
         # the per-field calls of _prop_covered, which is what lets
         # _reapply_cache actually hit (and keeps the ids alive).
-        self._coverage_cache: dict[tuple, tuple[Any, list]] = {}
+        run._coverage_cache = {}
+        node = resolve_node(run.apply(schema, ctx))
+        return Plan(
+            node.valid,
+            node.viols,
+            tuple(tuple(stage.items()) for stage in run._stages if stage),
+            tuple(sorted(run._trace.items())) if trace else (),
+            MappingProxyType(run._custom_annotations),
+            MappingProxyType(run._ref_sites),
+        )
 
     def _target_spath(self, ctx: "Ctx", target: Any, spath: str, refkw: str) -> str:
         """Location prefix for a resolved ref target: the referring
@@ -669,14 +700,16 @@ class Compiler:
         frag = unquote(frag)
         if frag and not frag.startswith("/"):
             key = uri + "#" + frag
-            if key not in self.registry and uri and uri != self.base_uri:
-                self._load_external(uri)
+            with self._load_lock:
+                if key not in self.registry and uri and uri != self.base_uri:
+                    self._load_external(uri)
             if key in self.registry:
                 return self.registry[key]
             raise CompileError(f"unresolvable $anchor reference {ref!r}")
         if uri and uri != self.base_uri:
-            if uri not in self.registry:
-                self._load_external(uri)
+            with self._load_lock:
+                if uri not in self.registry:
+                    self._load_external(uri)
             if uri in self.registry:
                 doc, spath = self.registry[uri]
                 if frag:
@@ -731,11 +764,11 @@ class Compiler:
         ``stage`` and return an attribute reference to it. Stage k's
         expressions may reference only base columns and temps defined
         in stages < k (consumers replay stages in order)."""
-        while len(self.stages) <= stage:
-            self.stages.append({})
+        while len(self._stages) <= stage:
+            self._stages.append({})
         name = f"__jsv{self._stage_tmp}_{tag}"
         self._stage_tmp += 1
-        self.stages[stage][name] = col
+        self._stages[stage][name] = col
         return F.col(name)
 
     def _materialize(self, node: Compiled, stage: int) -> Compiled:
@@ -758,19 +791,10 @@ class Compiler:
             raise CompileError(
                 f"schema recursion exceeds max depth {self.max_depth} at {ctx.spath!r}"
             )
-        if ctx.depth == 0:
-            # fresh root application (every nested compile path raises
-            # depth): the budget is per compiled plan, not per Compiler
-            self._node_count = 0
-            self._trace_via_ref = set()
-            self.custom_annotations = {}
-            self.stages = []
-            self._expr_stage = 0
-            self._expr_weight = 0
         self._node_count += 1
         # save the ENCLOSING expression's accumulators; this node's
-        # subtree accumulates from zero (see staged-materialization note
-        # in __init__)
+        # subtree accumulates from zero (see staged materialization in
+        # plan())
         _outer_stage, _outer_weight = self._expr_stage, self._expr_weight
         self._expr_stage, self._expr_weight = 0, 0
         if self._node_count > self.max_nodes:
@@ -804,15 +828,15 @@ class Compiler:
             # bare boolean (campaign neg seed 5075: an untraced `false`
             # prefixItems entry made the /prefixItems gate bail out and
             # a pruned annotation leaked)
-            if self.trace is not None and not ctx.no_trace:
+            if self._trace is not None and not ctx.no_trace:
                 walk = ~node.valid if negate_result else node.valid
                 traced = Compiled(walk, node.viols) if negate_result else node
-                if ctx.spath not in self.trace:
-                    self.trace[ctx.spath] = (schema, ctx.path, traced, ctx.applied, ctx.dtype, ctx.col)
+                if ctx.spath not in self._trace:
+                    self._trace[ctx.spath] = (schema, ctx.path, traced, ctx.applied, ctx.dtype, ctx.col)
                     if ctx.via_ref:
                         self._trace_via_ref.add(ctx.spath)
                 elif not ctx.via_ref and ctx.spath in self._trace_via_ref:
-                    self.trace[ctx.spath] = (schema, ctx.path, traced, ctx.applied, ctx.dtype, ctx.col)
+                    self._trace[ctx.spath] = (schema, ctx.path, traced, ctx.applied, ctx.dtype, ctx.col)
                     self._trace_via_ref.discard(ctx.spath)
             self._expr_stage = _outer_stage
             self._expr_weight = _outer_weight + 1
@@ -885,10 +909,10 @@ class Compiler:
         # applications folded inline — once a child spills, it counts 1.
         my_stage, my_weight = self._expr_stage, self._expr_weight + 1
         if (
-            self._staging
+            self._staged
             and ctx.depth > 0
             and not ctx.no_trace
-            and my_weight >= self.stage_threshold
+            and my_weight >= STAGE_THRESHOLD
         ):
             node = self._materialize(node, my_stage)
             self._expr_stage = max(_outer_stage, my_stage + 1)
@@ -903,7 +927,7 @@ class Compiler:
         # result-tree validity: errors descend through invalid nodes,
         # annotations through valid ones.
         walk_valid = ~node.valid if negate_result else node.valid
-        if self.trace is not None and not ctx.no_trace:
+        if self._trace is not None and not ctx.no_trace:
             traced = Compiled(walk_valid, node.viols) if negate_result else node
             # Since round 4, ref targets compile under SITE-BASED dynamic
             # spaths (_target_spath: .../$ref/...), so every ref
@@ -914,12 +938,12 @@ class Compiler:
             # canonical-wins replacement below is kept as a safety net
             # for any remaining aliasing (first writer wins otherwise).
             entry = (schema, ctx.path, traced, ctx.applied, ctx.dtype, ctx.col)
-            if ctx.spath not in self.trace:
-                self.trace[ctx.spath] = entry
+            if ctx.spath not in self._trace:
+                self._trace[ctx.spath] = entry
                 if ctx.via_ref:
                     self._trace_via_ref.add(ctx.spath)
             elif not ctx.via_ref and ctx.spath in self._trace_via_ref:
-                self.trace[ctx.spath] = entry
+                self._trace[ctx.spath] = entry
                 self._trace_via_ref.discard(ctx.spath)
         return node
 
@@ -1011,7 +1035,7 @@ class Compiler:
             own = None
             if node is not None:
                 own = node.valid & ctx.col.isNotNull()
-            lst = self.custom_annotations.setdefault(ctx.spath, [])
+            lst = self._custom_annotations.setdefault(ctx.spath, [])
             if all(k != spec.key for k, _, _, _ in lst):
                 # null instances are JSON type "null": a type-scoped
                 # keyword skips them at runtime, so its annotation needs
@@ -1815,30 +1839,16 @@ class Compiler:
         application's dynamic spath; value = the target's resource URI +
         '#' + its pointer WITHIN that resource. Deliberately not stored
         per violation row — at table scale the absolute location is
-        derivable driver-side (absolute_location) or by a bounded
-        longest-prefix expression (output.basic_output), so the shuffled
-        violation payload stays 4 fields."""
+        derivable driver-side (CompiledSchema.absolute_keyword_location)
+        or by a bounded longest-prefix expression (output.basic_output),
+        so the shuffled violation payload stays 4 fields."""
         owner = self.enclosing_uri.get(id(target))
         if owner is None or owner == self.base_uri:
             res_spath = ""
             owner = self.base_uri
         else:
             _node, res_spath = self.registry.get(owner, (None, ""))
-        self.ref_sites[dyn_spath] = owner + "#" + spath[len(res_spath):]
-
-    def absolute_location(self, keyword_path: str) -> str:
-        """Translate a dynamic keywordLocation (violation keyword_path)
-        to the reference's absoluteKeywordLocation: longest recorded
-        ref-site prefix wins; paths with no ref traversal are
-        document-rooted under the root resource URI."""
-        best = None
-        for pref in self.ref_sites:
-            if keyword_path == pref or keyword_path.startswith(pref + "/"):
-                if best is None or len(pref) > len(best):
-                    best = pref
-        if best is None:
-            return self.base_uri + "#" + keyword_path
-        return self.ref_sites[best] + keyword_path[len(best):]
+        self._ref_sites[dyn_spath] = owner + "#" + spath[len(res_spath):]
 
     def _k_dynamicRef(self, value, schema, ctx: Ctx, results) -> Compiled:
         """$dynamicRef: resolves like $ref, then rebinds to the
@@ -2102,7 +2112,7 @@ class Compiler:
             if hit is None:
                 gctx = _replace(ctx, depth=ctx.depth + 1, no_trace=True)
                 g = self.apply(guard, gctx).valid
-                if self._staging and not ctx.no_trace:
+                if self._staged and not ctx.no_trace:
                     # the re-application tree embeds once PER FIELD via
                     # the cache — spill it so each embedding is a column
                     # ref. no_trace blocks materialization inside the
@@ -2115,7 +2125,7 @@ class Compiler:
                 self._reapply_cache[key] = (guard, ctx.col, g)
             else:
                 g = hit[2]
-                if self._staging and not ctx.no_trace and self.stages:
+                if self._staged and not ctx.no_trace and self._stages:
                     self._expr_stage = max(self._expr_stage, 1)
             cond = cond & (~g if negate else g)
         return cond
@@ -2132,14 +2142,14 @@ class Compiler:
         key = (id(src), id(ctx.col), ctx.scope, kw)
         cached = self._reapply_cache.get(key)
         if cached is not None:
-            if self._staging and not ctx.no_trace and self.stages:
+            if self._staged and not ctx.no_trace and self._stages:
                 self._expr_stage = max(self._expr_stage, 1)
             return cached[2]
         handler = getattr(self, "_k_" + kw)
         gctx = _replace(ctx, depth=ctx.depth + 1, no_trace=True)
         out = handler(src[kw], src, gctx, {})
         v = F.lit(True) if out is None else F.coalesce(out.valid, F.lit(True))
-        if self._staging and not ctx.no_trace:
+        if self._staged and not ctx.no_trace:
             # embedded per covered field like _guard_cond's trees; the
             # no_trace re-application references only base columns
             v = self._spill(v, 0, "k")
@@ -2535,11 +2545,58 @@ _BUILTIN_FORMATS["regex"] = python_format(is_regex)
 _BUILTIN_FORMATS["idn-hostname"] = python_format(is_idn_hostname)
 
 
+@dataclass(frozen=True, eq=False)  # Column == Column builds an expression
+class Plan:
+    """One compile of a schema at one instance Column: the root node's
+    ``valid``/``viols`` Columns plus everything the compile recorded.
+
+    ``stages`` holds the staged-materialization temps as ((name,
+    Column), ...) per stage, in replay order; ``trace_entries`` the
+    sorted (spath, entry) pairs of a traced compile; ``custom_annotations``
+    the active custom-keyword annotations per spath; ``ref_sites`` the
+    dynamic ref-application spath → canonical URI map behind
+    absoluteKeywordLocation."""
+
+    valid: Column
+    viols: Column
+    stages: tuple
+    trace_entries: tuple
+    custom_annotations: Mapping[str, list]
+    ref_sites: Mapping[str, str]
+
+    def replay(self, df: DataFrame) -> DataFrame:
+        """``df`` plus the stage temps, one ``withColumns`` projection
+        per stage: stage k references only base columns and earlier
+        temps, and each projection stays within ``STAGE_THRESHOLD``-ish
+        expression weight, which keeps Catalyst analysis linear in
+        schema size. Select or drop the temps afterwards."""
+        for stage in self.stages:
+            df = df.withColumns(dict(stage))
+        return df
+
+    def drop_temps(self, df: DataFrame) -> DataFrame:
+        names = [name for stage in self.stages for name, _ in stage]
+        return df.drop(*names) if names else df
+
+
+def row_instance(df: DataFrame, cols: list[str]) -> tuple[T.StructType, Column]:
+    """(static type, Column) of the instance a row presents: the struct
+    of ``cols``. Catalyst's SimplifyExtractValueOps collapses
+    struct(cols).getField back to the raw columns, so parquet column
+    pruning is preserved."""
+    dtype = T.StructType([df.schema[c] for c in cols])
+    return dtype, F.struct(*[F.col(c).alias(c) for c in cols])
+
+
 class CompiledSchema:
     """A compiled schema document, applicable to typed DataFrames.
 
     ≙ a cached ``JSONSchema`` in the reference's catalog
     (jschon/catalog/__init__.py:281-297); compile once, validate many.
+    ``plan(dtype, col)`` returns a frozen :class:`Plan` built on fresh
+    per-call state, so every ``validate()`` behaves the same whatever
+    ran before, long-lived instances do not grow, and one instance can
+    be shared across threads.
     """
 
     def __init__(self, schema: Any, assert_formats: bool = False, **kw):
@@ -2547,40 +2604,61 @@ class CompiledSchema:
         # the compiler's root is the legacy-normalized document — use it
         # so tuple-form items etc. compile in their 2020-12 spelling
         self.schema = self.compiler.root
+        # union of the ref sites of every plan built so far (bounded by
+        # the schema: one entry per dynamic ref-application path);
+        # None until the first plan
+        self._ref_sites: Optional[dict[str, str]] = None
+        self._lock = threading.Lock()
 
-    def apply(self, ctx: Ctx) -> Compiled:
-        # the root IS a result node: pending noassert-if viols resolve
-        # under the overall outcome (basic output reports errors only
-        # for invalid instances, jschon/output.py:46-70)
-        return resolve_node(self.compiler.apply(self.schema, ctx))
+    def _plan(self, dtype: T.DataType, col: Column, trace: bool, staged: bool) -> Plan:
+        ctx = Ctx(col=col, dtype=dtype, path=F.lit(""), spath="")
+        plan = self.compiler.plan(self.schema, ctx, trace=trace, staged=staged)
+        with self._lock:
+            self._ref_sites = {**(self._ref_sites or {}), **plan.ref_sites}
+        return plan
+
+    def plan(self, dtype: T.DataType, col: Column, *, trace: bool = False) -> Plan:
+        """Staged :class:`Plan` of the schema applied to ``col`` (static
+        type ``dtype``): ``plan.replay(df)`` adds the stage temps, then
+        select ``plan.valid``/``plan.viols``. ``trace`` also records the
+        per-node entries the verbose/audit/annotation outputs read."""
+        return self._plan(dtype, col, trace, staged=True)
 
     def columns(self, dtype: T.DataType, col: Column) -> Compiled:
-        return self.apply(Ctx(col=col, dtype=dtype, path=F.lit(""), spath=""))
+        """Unstaged valid/viols Columns that select standalone — for
+        expression-only callers; deep schemas should use ``plan``."""
+        plan = self._plan(dtype, col, trace=False, staged=False)
+        return Compiled(plan.valid, plan.viols)
+
+    @property
+    def ref_sites(self) -> Mapping[str, str]:
+        """Dynamic ref-application spath → canonical URI, from the plans
+        built so far."""
+        sites = self._ref_sites
+        if sites is None:
+            raise RuntimeError(
+                "absolute keyword locations come from the ref sites a plan "
+                "records, and this CompiledSchema has built no plan yet: "
+                "call validate(), plan() or columns() first"
+            )
+        return MappingProxyType(sites)
 
     def absolute_keyword_location(self, keyword_path: str) -> str:
         """Reference absoluteKeywordLocation for a violation's dynamic
         keyword_path (jschon/output.py:54-59): resource canonical URI +
-        '#' + pointer within that resource, via the compile-recorded
-        ref-site prefix map. Only defined after a compile pass
-        (validate/columns) has run."""
-        return self.compiler.absolute_location(keyword_path)
-
-    def columns_staged(
-        self, dtype: T.DataType, col: Column
-    ) -> tuple[Compiled, list[dict[str, Column]]]:
-        """Like ``columns`` but with staged materialization enabled:
-        deeply nested schemas spill intermediate node-validity columns
-        into the returned stage list instead of building one exponential
-        expression tree (see Compiler.__init__). Replay the stages on
-        the target DataFrame with :func:`apply_stages` before selecting
-        the returned Columns, then drop the temps."""
-        comp = self.compiler
-        comp._staging = True
-        try:
-            c = self.columns(dtype, col)
-        finally:
-            comp._staging = False
-        return c, comp.stages
+        '#' + pointer within that resource. The longest recorded
+        ref-site prefix wins; paths with no ref traversal are
+        document-rooted under the root resource URI. Raises
+        RuntimeError before any plan has been built."""
+        sites = self.ref_sites
+        best = max(
+            (p for p in sites if keyword_path == p or keyword_path.startswith(p + "/")),
+            key=len,
+            default=None,
+        )
+        if best is None:
+            return self.compiler.base_uri + "#" + keyword_path
+        return sites[best] + keyword_path[len(best):]
 
     def validate(
         self,
@@ -2590,36 +2668,14 @@ class CompiledSchema:
         violations_col: str = "violations",
     ) -> DataFrame:
         """Append ``valid`` + ``violations`` columns; the row (or the
-        selected columns) is the instance object. Catalyst's
-        SimplifyExtractValueOps collapses struct(cols).getField back to
-        the raw columns, so parquet column pruning is preserved."""
-        cols = instance_columns or df.columns
-        dtype = T.StructType([df.schema[c] for c in cols])
-        root = F.struct(*[F.col(c).alias(c) for c in cols])
-        c, stages = self.columns_staged(dtype, root)
+        selected columns) is the instance object."""
+        plan = self.plan(*row_instance(df, instance_columns or df.columns))
         out = (
-            apply_stages(df, stages)
-            .withColumn(valid_col, c.valid)
-            .withColumn(violations_col, c.viols)
+            plan.replay(df)
+            .withColumn(valid_col, plan.valid)
+            .withColumn(violations_col, plan.viols)
         )
-        return drop_stage_columns(out, stages)
-
-
-def apply_stages(df: DataFrame, stages: list[dict[str, Column]]) -> DataFrame:
-    """Replay materialization stages from a staged compile as successive
-    projections. Stage k's expressions reference only base columns and
-    stage <k temps, so in-order ``withColumns`` always resolves; each
-    projection is bounded by ``stage_threshold``-ish expression weight,
-    which is what keeps Catalyst analysis linear in schema size."""
-    for stage in stages:
-        if stage:
-            df = df.withColumns(stage)
-    return df
-
-
-def drop_stage_columns(df: DataFrame, stages: list[dict[str, Column]]) -> DataFrame:
-    names = [n for stage in stages for n in stage]
-    return df.drop(*names) if names else df
+        return plan.drop_temps(out)
 
 
 def compile_schema(schema: Any, assert_formats: bool = False, **kw) -> CompiledSchema:

@@ -234,11 +234,8 @@ def validate_json_column(
         )
         parse_failed_extra = F.lit(False)
     parsed = F.col(tmp_parsed)
-    compiled = compile_schema(schema, assert_formats=assert_formats)
-    c, stages = compiled.columns_staged(dtype, parsed)
-    from jschon_spark.compiler.core import apply_stages
-
-    staged = apply_stages(staged, stages)
+    plan = compile_schema(schema, assert_formats=assert_formats).plan(dtype, parsed)
+    staged = plan.replay(staged)
     parse_failed = (F.col(json_col).isNotNull() & parsed.isNull()) | parse_failed_extra
     parse_viol = F.when(
         parse_failed,
@@ -250,11 +247,9 @@ def validate_json_column(
             )
         ),
     ).otherwise(empty_violations())
-    valid = F.when(parse_failed, F.lit(False)).otherwise(c.valid)
-    viols = F.when(parse_failed, parse_viol).otherwise(c.viols)
+    valid = F.when(parse_failed, F.lit(False)).otherwise(plan.valid)
+    viols = F.when(parse_failed, parse_viol).otherwise(plan.viols)
     out = staged.withColumn(valid_col, valid).withColumn(violations_col, viols)
     if parsed_col:
         out = out.withColumn(parsed_col, parsed)
-    from jschon_spark.compiler.core import drop_stage_columns
-
-    return drop_stage_columns(out.drop(tmp_parsed, tmp_corrupt), stages)
+    return plan.drop_temps(out.drop(tmp_parsed, tmp_corrupt))

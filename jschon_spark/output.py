@@ -26,7 +26,7 @@ def basic_output(
     ``CompiledSchema`` that produced the violations to ALSO emit
     ``absolute_keyword_path`` (≙ absoluteKeywordLocation,
     jschon/output.py:54-59) — translated by a bounded longest-prefix
-    expression over the compile-recorded ref sites, so the shuffled
+    expression over the ref sites its plans recorded, so the shuffled
     violation payload itself stays 4 fields."""
     v = F.explode(F.col(violations_col)).alias("v")
     cols = [
@@ -36,13 +36,13 @@ def basic_output(
         F.col("v.error").alias("error"),
     ]
     if compiled is not None:
-        comp = getattr(compiled, "compiler", compiled)
+        sites = compiled.ref_sites
         kp = F.col("v.keyword_path")
         # longest prefix first: deeper ref applications have strictly
         # longer dynamic prefixes, so the first match is the right one
-        expr = F.concat(F.lit(comp.base_uri + "#"), kp)
-        for pref in sorted(comp.ref_sites, key=len):
-            absolute = F.lit(comp.ref_sites[pref])
+        expr = F.concat(F.lit(compiled.compiler.base_uri + "#"), kp)
+        for pref in sorted(sites, key=len):
+            absolute = F.lit(sites[pref])
             expr = F.when(
                 (kp == F.lit(pref)) | kp.startswith(pref + "/"),
                 F.concat(absolute, F.substring(kp, len(pref) + 1, 1_000_000)),
@@ -184,6 +184,18 @@ _ANNOTATION_KEYS = (
 _CONTENT_KEYS = ("contentEncoding", "contentMediaType", "contentSchema")
 
 
+def _traced_plan(schema, df: DataFrame, instance_columns, id_cols, compile_kw):
+    """(CompiledSchema, traced Plan, root dtype, root Column) for the
+    output formats: the instance is the struct of ``instance_columns``
+    (default: every column that is not an id column)."""
+    from jschon_spark.compiler.core import CompiledSchema, row_instance
+
+    cs = CompiledSchema(schema, **compile_kw)
+    cols = instance_columns or [c for c in df.columns if c not in (id_cols or [])]
+    dtype, root_col = row_instance(df, cols)
+    return cs, cs.plan(dtype, root_col, trace=True), dtype, root_col
+
+
 def audit_output(
     schema,
     df: DataFrame,
@@ -216,23 +228,8 @@ def audit_output(
     ``detailed``-style audit."""
     import json as _json
 
-    from pyspark.sql import types as T
-
-    from jschon_spark.compiler.context import Ctx
-    from jschon_spark.compiler.core import Compiler, apply_stages
-
-    comp = Compiler(schema, **compile_kw)
-    comp.trace = {}
-    comp._staging = True
-    cols = instance_columns or [c for c in df.columns if c not in (id_cols or [])]
-    dtype = T.StructType([df.schema[c] for c in cols])
-    root_col = F.struct(*[F.col(c).alias(c) for c in cols])
-    try:
-        comp.apply(comp.root, Ctx(col=root_col, dtype=dtype, path=F.lit(""), spath=""))
-    finally:
-        comp._staging = False
-
-    entries = sorted(comp.trace.items())
+    _, plan, _, _ = _traced_plan(schema, df, instance_columns, id_cols, compile_kw)
+    entries = plan.trace_entries
     structs = []
     for spath, ent in entries:
         node_schema, path_col, compiled = ent[0], ent[1], ent[2]
@@ -280,7 +277,7 @@ def audit_output(
 
     base = df.where(where) if where is not None else df
     out = (
-        apply_stages(base, comp.stages)
+        plan.replay(base)
         .select(*(id_cols or []), F.explode(F.array(*structs)).alias("n"))
         .select(
             *(id_cols or []),
@@ -310,97 +307,88 @@ def verbose_output(
     jschon/output.py:106-126; `detailed` prunes to failures, `verbose`
     does not).
 
-    Implementation: the compiler re-runs with its trace enabled, which
-    records one (valid, instanceLocation) Column pair per schema node
-    applied at row scope; one Spark job selects them all for
-    ``max_rows`` sampled rows and the tree is nested driver-side by
-    keyword-location prefix. Subtrees compiled inside higher-order
-    function lambdas (array items / prefixItems / contains) cannot be
-    selected at row scope, so for the sampled documents they are
-    RE-EVALUATED per element — one batched Spark job per array node
-    (the elements become rows), giving the reference's full
-    per-element result tree (jschon/output.py:106-126); MapType
-    property subtrees are expanded the same way per entry. Driver-side and
-    sampled by design: the flat violations DataFrame is the at-scale
-    product; this is the human-debugging view.
+    Implementation: a traced plan records one (valid,
+    instanceLocation) Column pair per schema node applied at row scope;
+    one Spark job selects them all for ``max_rows`` sampled rows and the
+    tree is nested driver-side by keyword-location prefix. Subtrees
+    compiled inside higher-order function lambdas (array items /
+    prefixItems / contains) cannot be selected at row scope, so for the
+    sampled documents they are RE-EVALUATED per element — one batched
+    Spark job per array node (the elements become rows), giving the
+    reference's full per-element result tree (jschon/output.py:106-126);
+    MapType property subtrees are expanded the same way per entry.
+    Driver-side and sampled by design: the flat violations DataFrame is
+    the at-scale product; this is the human-debugging view.
     """
-    from pyspark.sql import types as T
-
-    from jschon_spark.compiler.context import Ctx
-    from jschon_spark.compiler.core import Compiler
-
-    from jschon_spark.compiler.core import apply_stages
-
-    comp = Compiler(schema, **compile_kw)
-    comp.trace = {}
-    comp._staging = True
-    cols = instance_columns or [c for c in df.columns if c not in (id_cols or [])]
-    dtype = T.StructType([df.schema[c] for c in cols])
-    root_col = F.struct(*[F.col(c).alias(c) for c in cols])
-    try:
-        comp.apply(comp.root, Ctx(col=root_col, dtype=dtype, path=F.lit(""), spath=""))
-    finally:
-        comp._staging = False
-
-    entries = sorted(comp.trace.items())  # (spath, (schema_node, path, compiled))
+    cs, plan, dtype, root_col = _traced_plan(schema, df, instance_columns, id_cols, compile_kw)
     sel_cols = list(id_cols or []) + [root_col.alias("__instance")]
-    for i, (_, (_, path_col, compiled, *_x)) in enumerate(entries):
-        sel_cols.append(compiled.valid.alias(f"__v{i}"))
-        sel_cols.append(path_col.alias(f"__p{i}"))
-    rows = apply_stages(df, comp.stages).select(*sel_cols).limit(max_rows).collect()
+    sel_cols += _trace_columns(plan.trace_entries)
+    rows = plan.replay(df).select(*sel_cols).limit(max_rows).collect()
     spark = df.sparkSession
 
     out = []
     for r in rows:
-        index: dict[str, dict] = {}
-        roots: list[dict] = []
-        for i, (spath, (node_schema, *_x)) in enumerate(entries):
-            node: dict = {
-                "valid": bool(r[f"__v{i}"]),
-                "keywordLocation": spath or "",
-                "instanceLocation": r[f"__p{i}"] or "",
-            }
-            if isinstance(node_schema, dict) and node["valid"]:
-                # verbose units carry annotations only on VALID nodes
-                # (invalid ones carry errors — ref output.py verbose)
-                # a null-valued annotation (e.g. ``"default": null``) is
-                # stored but invisible in output: reference output.py:52
-                # filters on ``msgval is not None``
-                ann = {
-                    k: node_schema[k]
-                    for k in _ANNOTATION_KEYS
-                    if k in node_schema and node_schema[k] is not None
-                }
-                if ann:
-                    node["annotations"] = ann
-            index[spath] = node
-            # deepest traced ancestor by keyword-location prefix
-            parent = None
-            segs = [s for s in spath.split("/") if s != ""]
-            prefix = ""
-            for s in segs[:-1]:
-                prefix = f"{prefix}/{s}"
-                if prefix in index:
-                    parent = index[prefix]
-            if spath and "" in index:
-                parent = parent or index[""]
-            if parent is not None and parent is not node:
-                parent.setdefault("results", []).append(node)
-            else:
-                roots.append(node)
+
+        def expand(node, node_schema, spath, ipath, _inst=r["__instance"]):
             # per-element / per-entry expansion of HOF-applied subschemas
-            if isinstance(node_schema, dict):
-                _expand_array_subtrees(
-                    spark, comp, node, node_schema, spath,
-                    r["__instance"], dtype, r[f"__p{i}"] or "",
-                )
-                _expand_map_subtrees(
-                    spark, comp, node, node_schema, spath,
-                    r["__instance"], dtype, r[f"__p{i}"] or "",
-                )
+            for walk in (_expand_array_subtrees, _expand_map_subtrees):
+                walk(spark, cs.compiler, node, node_schema, spath, _inst, dtype, ipath)
+
+        roots = _result_nodes(plan.trace_entries, r, expand)
         ident = {c: r[c] for c in id_cols or []}
         out.append({**ident, "result": roots[0] if roots else {}})
     return out
+
+
+def _trace_columns(entries) -> list:
+    """``__v{i}``/``__p{i}``: each traced node's validity and instance
+    location, selected side by side for the verbose walk."""
+    cols = []
+    for i, (_, (_, path_col, compiled, *_x)) in enumerate(entries):
+        cols += [compiled.valid.alias(f"__v{i}"), path_col.alias(f"__p{i}")]
+    return cols
+
+
+def _result_nodes(entries, row, expand=None) -> list[dict]:
+    """One collected row's verbose result nodes, each nested under its
+    deepest traced keyword-location ancestor (the root node, when
+    traced, adopts every orphan); returns the top-level nodes.
+    ``expand(node, schema, spath, ipath)`` may attach per-element
+    subtrees to each dict-schema node."""
+    index: dict[str, dict] = {}
+    roots: list[dict] = []
+    for i, (spath, (node_schema, *_x)) in enumerate(entries):
+        node: dict = {
+            "valid": bool(row[f"__v{i}"]),
+            "keywordLocation": spath,
+            "instanceLocation": row[f"__p{i}"] or "",
+        }
+        if isinstance(node_schema, dict) and node["valid"]:
+            # verbose units carry annotations only on VALID nodes
+            # (invalid ones carry errors — ref output.py verbose)
+            # a null-valued annotation (e.g. ``"default": null``) is
+            # stored but invisible in output: reference output.py:52
+            # filters on ``msgval is not None``
+            ann = {
+                k: node_schema[k]
+                for k in _ANNOTATION_KEYS
+                if k in node_schema and node_schema[k] is not None
+            }
+            if ann:
+                node["annotations"] = ann
+        index[spath] = node
+        parent = index.get("") if spath else None
+        prefix = ""
+        for s in [s for s in spath.split("/") if s != ""][:-1]:
+            prefix = f"{prefix}/{s}"
+            parent = index.get(prefix, parent)
+        if parent is not None:
+            parent.setdefault("results", []).append(node)
+        else:
+            roots.append(node)
+        if expand is not None and isinstance(node_schema, dict):
+            expand(node, node_schema, spath, node["instanceLocation"])
+    return roots
 
 
 def _walk_value(value, dtype, ipath: str):
@@ -426,18 +414,33 @@ def _walk_value(value, dtype, ipath: str):
     return node, dt
 
 
+def _entry_results(spark, comp, sub, kw_spath: str, key, rows: list, val_dt, path) -> list[dict]:
+    """Full verbose results of ``sub`` for each entry of one sampled
+    array or map: the entries become the rows (``key`` field, value
+    ``e``) of a tiny DataFrame and the subschema's traced plan is
+    selected across them in ONE job; ``path`` is the entry's instance
+    location Column."""
+    from pyspark.sql import types as T
+
+    from jschon_spark.compiler.context import Ctx
+
+    edf = spark.createDataFrame(rows, T.StructType([key, T.StructField("e", val_dt, True)]))
+    ctx = Ctx(col=F.col("e"), dtype=val_dt, path=path, spath=kw_spath)
+    plan = comp.plan(sub, ctx, trace=True, staged=True)
+    got = plan.replay(edf).select(F.col(key.name), *_trace_columns(plan.trace_entries)).collect()
+    results: list[dict] = []
+    for er in sorted(got, key=lambda x: x[0]):
+        results.extend(_result_nodes(plan.trace_entries, er))
+    return results
+
+
 def _expand_array_subtrees(
     spark, comp, node: dict, node_schema: dict, spath: str, instance, root_dtype, ipath: str
 ) -> None:
     """Replace the summarized HOF subtrees (items / prefixItems /
-    contains) of one traced node with real per-element results: the
-    sampled document's array elements become the rows of a tiny
-    DataFrame and the subschema's full trace is selected across them in
-    ONE job per keyword."""
-    from pyspark.sql import Row as _Row
+    contains) of one traced node with real per-element results, one
+    job per keyword (see _entry_results)."""
     from pyspark.sql import types as T
-
-    from jschon_spark.compiler.context import Ctx
 
     if not any(k in node_schema for k in ("items", "prefixItems", "contains")):
         return
@@ -447,72 +450,13 @@ def _expand_array_subtrees(
     elems = list(value)
     if not elems:
         return
-    elem_dt = dt.elementType
     n_prefix = len(node_schema.get("prefixItems") or [])
+    key = T.StructField("idx", T.LongType(), False)
+    path = F.concat(F.lit(ipath + "/"), F.col("idx").cast("string"))
 
     def eval_elements(sub, kw_spath: str, idxs: list[int]) -> list[dict]:
-        df_schema = T.StructType(
-            [T.StructField("idx", T.LongType(), False), T.StructField("e", elem_dt, True)]
-        )
-        edf = spark.createDataFrame(
-            [_Row(idx=i, e=elems[i]) for i in idxs], df_schema
-        )
-        from jschon_spark.compiler.core import apply_stages
-
-        saved = comp.trace
-        comp.trace = {}
-        comp._staging = True
-        try:
-            ctx = Ctx(
-                col=F.col("e"),
-                dtype=elem_dt,
-                path=F.concat(F.lit(ipath + "/"), F.col("idx").cast("string")),
-                spath=kw_spath,
-            )
-            comp.apply(sub, ctx)
-            sub_entries = sorted(comp.trace.items())
-        finally:
-            comp._staging = False
-            comp.trace = saved
-        sel = [F.col("idx")]
-        for j, (_, (_, pc, cc, *_x)) in enumerate(sub_entries):
-            sel.append(cc.valid.alias(f"__v{j}"))
-            sel.append(pc.alias(f"__p{j}"))
-        got = apply_stages(edf, comp.stages).select(*sel).collect()
-        results = []
-        for er in sorted(got, key=lambda x: x["idx"]):
-            sub_index: dict[str, dict] = {}
-            sub_roots: list[dict] = []
-            for j, (sp, (ns, *_x)) in enumerate(sub_entries):
-                child = {
-                    "valid": bool(er[f"__v{j}"]),
-                    "keywordLocation": sp,
-                    "instanceLocation": er[f"__p{j}"] or "",
-                }
-                if isinstance(ns, dict) and child["valid"]:
-                    # null-valued annotations are invisible in output
-                    # (reference output.py:52 ``msgval is not None``)
-                    ann = {
-                        k: ns[k]
-                        for k in _ANNOTATION_KEYS
-                        if k in ns and ns[k] is not None
-                    }
-                    if ann:
-                        child["annotations"] = ann
-                sub_index[sp] = child
-                parent = None
-                segs = [s for s in sp.split("/") if s != ""]
-                prefix = ""
-                for s in segs[:-1]:
-                    prefix = f"{prefix}/{s}"
-                    if prefix in sub_index:
-                        parent = sub_index[prefix]
-                if parent is not None and parent is not child:
-                    parent.setdefault("results", []).append(child)
-                else:
-                    sub_roots.append(child)
-            results.extend(sub_roots)
-        return results
+        rows = [(i, elems[i]) for i in idxs]
+        return _entry_results(spark, comp, sub, kw_spath, key, rows, dt.elementType, path)
 
     expanded: list[dict] = []
     for i, sub in enumerate(node_schema.get("prefixItems") or []):
@@ -635,9 +579,9 @@ def _applicator_node_gates(entries):
     return gates
 
 
-def annotation_array(trace, custom_annotations=None) -> "F.Column":
+def annotation_array(plan) -> "F.Column":
     """array<struct<instance_path,keyword_path,keyword,value_json>> of
-    the annotation units a traced compilation contributes for one
+    the annotation units a traced :class:`Plan` contributes for one
     document. jschon collects annotations by walking the Result tree
     (jsonschema.py:515-524), which (a) has no node at all for UNAPPLIED
     subschemas (a `then` whose `if` failed, an absent property, a
@@ -647,16 +591,16 @@ def annotation_array(trace, custom_annotations=None) -> "F.Column":
     condition covers (a); the ancestor-chain validity conjunction
     covers (b).
 
-    ``custom_annotations`` (Compiler.custom_annotations: spath →
-    [(keyword, value_json, needs_nonnull, own_valid|None)]) adds units
-    for ACTIVE user-defined keywords that annotate (≙ result.annotate
-    from a custom Keyword.evaluate on success)."""
+    ``plan.custom_annotations`` (spath → [(keyword, value_json,
+    needs_nonnull, own_valid|None)]) adds units for ACTIVE user-defined
+    keywords that annotate (≙ result.annotate from a custom
+    Keyword.evaluate on success)."""
     import json as _json
 
     from pyspark.sql import types as T
 
     units = []
-    entries = sorted(trace.items())
+    entries = plan.trace_entries
     node_gates = _applicator_node_gates(entries)
 
     # Ancestor-chain gates, memoized along the schema-path tree. A node's
@@ -721,7 +665,7 @@ def annotation_array(trace, custom_annotations=None) -> "F.Column":
                 and node_schema[k] is not None
                 and (k != "contentSchema" or "contentMediaType" in node_schema)
             )
-        custom = (custom_annotations or {}).get(spath, ())
+        custom = plan.custom_annotations.get(spath, ())
         if (
             not content_keys
             and not custom
@@ -808,34 +752,12 @@ def annotation_output(
     from the compiler trace, scaling like any other projection. Rows
     where the DOCUMENT as a whole failed are excluded (jschon drops
     annotations of failed evaluations; output.py:46-70)."""
-    import json as _json
-
-    from pyspark.sql import types as T
-
-    from jschon_spark.compiler.context import Ctx
-    from jschon_spark.compiler.core import Compiler
-
-    from jschon_spark.compiler.core import apply_stages
-
-    comp = Compiler(schema, **compile_kw)
-    comp.trace = {}
-    comp._staging = True
-    cols = instance_columns or [c for c in df.columns if c not in (id_cols or [])]
-    dtype = T.StructType([df.schema[c] for c in cols])
-    root_col = F.struct(*[F.col(c).alias(c) for c in cols])
-    try:
-        root = comp.apply(
-            comp.root, Ctx(col=root_col, dtype=dtype, path=F.lit(""), spath="")
-        )
-    finally:
-        comp._staging = False
-
-    arr = annotation_array(comp.trace, comp.custom_annotations)
+    _, plan, _, _ = _traced_plan(schema, df, instance_columns, id_cols, compile_kw)
     ident = [F.col(c) for c in (id_cols or [])]
     out = (
-        apply_stages(df, comp.stages)
-        .where(root.valid)
-        .select(*ident, F.explode(arr).alias("a"))
+        plan.replay(df)
+        .where(plan.valid)
+        .select(*ident, F.explode(annotation_array(plan)).alias("a"))
     )
     return out.select(
         *(id_cols or []),
@@ -850,16 +772,14 @@ def _expand_map_subtrees(
     spark, comp, node: dict, node_schema: dict, spath: str, instance, root_dtype, ipath: str
 ) -> None:
     """Per-ENTRY results for MapType nodes (the map analogue of
-    `_expand_array_subtrees`): the sampled document's map entries become
-    rows and each applicable subschema's trace is selected across the
-    keys it governs — properties by name, patternProperties by regex,
-    additionalProperties for the rest."""
+    `_expand_array_subtrees`): each applicable subschema's trace is
+    selected across the keys it governs — properties by name,
+    patternProperties by regex, additionalProperties for the rest."""
     import re as _re
 
-    from pyspark.sql import Row as _Row
     from pyspark.sql import types as T
 
-    from jschon_spark.compiler.context import Ctx, escape_pointer, escape_pointer_col
+    from jschon_spark.compiler.context import escape_pointer, escape_pointer_col
 
     kws = ("properties", "patternProperties", "additionalProperties")
     if not any(k in node_schema for k in kws):
@@ -870,69 +790,12 @@ def _expand_map_subtrees(
     entries = dict(value)
     if not entries:
         return
-    val_dt = dt.valueType
+    key = T.StructField("k", T.StringType(), False)
+    path = F.concat(F.lit(ipath + "/"), escape_pointer_col(F.col("k")))
 
     def eval_keys(sub, kw_spath: str, keys: list[str]) -> list[dict]:
-        df_schema = T.StructType(
-            [T.StructField("k", T.StringType(), False), T.StructField("e", val_dt, True)]
-        )
-        edf = spark.createDataFrame([_Row(k=k, e=entries[k]) for k in keys], df_schema)
-        from jschon_spark.compiler.core import apply_stages
-
-        saved = comp.trace
-        comp.trace = {}
-        comp._staging = True
-        try:
-            ctx = Ctx(
-                col=F.col("e"),
-                dtype=val_dt,
-                path=F.concat(F.lit(ipath + "/"), escape_pointer_col(F.col("k"))),
-                spath=kw_spath,
-            )
-            comp.apply(sub, ctx)
-            sub_entries = sorted(comp.trace.items())
-        finally:
-            comp._staging = False
-            comp.trace = saved
-        sel = [F.col("k")]
-        for j, (_, (_, pc, cc, *_x)) in enumerate(sub_entries):
-            sel.append(cc.valid.alias(f"__v{j}"))
-            sel.append(pc.alias(f"__p{j}"))
-        got = apply_stages(edf, comp.stages).select(*sel).collect()
-        results = []
-        for er in sorted(got, key=lambda x: x["k"]):
-            sub_index: dict[str, dict] = {}
-            sub_roots: list[dict] = []
-            for j, (sp, (ns, *_x)) in enumerate(sub_entries):
-                child = {
-                    "valid": bool(er[f"__v{j}"]),
-                    "keywordLocation": sp,
-                    "instanceLocation": er[f"__p{j}"] or "",
-                }
-                if isinstance(ns, dict) and child["valid"]:
-                    # null-valued annotations are invisible in output
-                    # (reference output.py:52 ``msgval is not None``)
-                    ann = {
-                        k: ns[k]
-                        for k in _ANNOTATION_KEYS
-                        if k in ns and ns[k] is not None
-                    }
-                    if ann:
-                        child["annotations"] = ann
-                sub_index[sp] = child
-                parent = None
-                segs = [s for s in sp.split("/") if s != ""]
-                prefix = ""
-                for s in segs[:-1]:
-                    prefix = f"{prefix}/{s}"
-                    if prefix in sub_index:
-                        parent = sub_index[prefix]
-                if parent is not None and parent is not child:
-                    parent.setdefault("results", []).append(child)
-                else:
-                    sub_roots.append(child)
-            results.extend(sub_roots)
-        return results
+        rows = [(k, entries[k]) for k in keys]
+        return _entry_results(spark, comp, sub, kw_spath, key, rows, dt.valueType, path)
 
     expanded: list[dict] = []
     named = node_schema.get("properties") or {}

@@ -19,7 +19,7 @@ from pyspark.sql import Row, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from jschon_spark.compiler import Ctx, compile_schema
+from jschon_spark.compiler import compile_schema
 
 
 class Untypeable(Exception):
@@ -117,13 +117,10 @@ def evaluate_instance(
         df = spark.createDataFrame(
             [Row(value=_to_row(data, dtype))], T.StructType([T.StructField("value", dtype, True)])
         )
-    from jschon_spark.compiler.core import apply_stages
-
-    compiled = compile_schema(schema, assert_formats=assert_formats)
-    c, stages = compiled.columns_staged(dtype, F.col("value"))
+    plan = compile_schema(schema, assert_formats=assert_formats).plan(dtype, F.col("value"))
     out = (
-        apply_stages(df, stages)
-        .select(c.valid.alias("valid"), c.viols.alias("violations"))
+        plan.replay(df)
+        .select(plan.valid.alias("valid"), plan.viols.alias("violations"))
         .collect()[0]
     )
     return bool(out["valid"]), list(out["violations"])
@@ -251,57 +248,26 @@ def evaluate_batch(
             return (bool(row["v"]), list(row["viols"]))
         return bool(row["v"])
 
-    def _apply(dtype, col):
-        """ONE application of the compiled schema per group — STAGED
-        (deeply nested fuzz schemas spill intermediate node columns
-        instead of building one exponential tree). When annotation units
-        are wanted the apply runs TRACED (scratch trace on the shared
-        Compiler) and valid/viols/anns all derive from that single pass —
-        big fuzz schemas pay the expression-tree build exactly once
-        instead of twice."""
-        if not with_annotations:
-            c, stages = compiled.columns_staged(dtype, col)
-            return c, None, stages
+    def _select(df, dtype, col):
+        """ONE staged plan per group (deeply nested fuzz schemas spill
+        intermediate node columns instead of building one exponential
+        tree). With annotation units wanted the plan is traced, and
+        valid/viols/anns all derive from that single compile."""
         from jschon_spark.output import annotation_array
 
-        comp = compiled.compiler
-        saved = comp.trace
-        comp.trace = {}
-        comp._staging = True
-        try:
-            from jschon_spark.compiler.context import resolve_node
-
-            # raw Compiler.apply: resolve the root's pending noassert-if
-            # viols exactly as CompiledSchema.apply does
-            root = resolve_node(
-                comp.apply(
-                    compiled.schema, Ctx(col=col, dtype=dtype, path=F.lit(""), spath="")
-                )
-            )
-            arr = annotation_array(comp.trace, comp.custom_annotations)
-            stages = comp.stages
-        finally:
-            comp._staging = False
-            comp.trace = saved
-        # jschon drops every annotation of a failed evaluation
-        return root, F.when(root.valid, arr), stages
-
-    def _select(df, dtype, col):
-        from jschon_spark.compiler.core import apply_stages
-
-        c, ann, stages = _apply(dtype, col)
-        cols = [c.valid.alias("v")]
+        plan = compiled.plan(dtype, col, trace=with_annotations)
+        cols = [plan.valid.alias("v")]
         if with_violations:
-            cols.append(c.viols.alias("viols"))
+            cols.append(plan.viols.alias("viols"))
         if with_annotations:
-            cols.append(ann.alias("anns"))
-        return apply_stages(df, stages).select(
+            # jschon drops every annotation of a failed evaluation
+            cols.append(F.when(plan.valid, annotation_array(plan)).alias("anns"))
+        return plan.replay(df).select(
             *(["id"] if "id" in df.columns else []), *cols
         )
 
-    # Plan CONSTRUCTION stays serial (compiled.columns / _ann_col share
-    # the Compiler's mutable trace and hammer the single py4j gateway),
-    # but each group's collect() — where Catalyst analysis, Janino
+    # Plan CONSTRUCTION stays serial (it hammers the single py4j
+    # gateway), but each group's collect() — where Catalyst analysis, Janino
     # codegen and execution actually happen, the dominant cost for big
     # fuzz schemas — runs on a thread pool: Spark supports concurrent
     # actions on one session, and per-group plans are independent.

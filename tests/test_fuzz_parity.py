@@ -1394,7 +1394,6 @@ def evaluate_map_batch(spark, schema, datas: list, vtype: str) -> list:
     from pyspark.sql import types as T
 
     from jschon_spark.compiler import compile_schema
-    from jschon_spark.compiler.core import apply_stages
 
     val_t = T.StringType() if vtype == "string" else T.LongType()
     dtype = T.MapType(T.StringType(), val_t, True)
@@ -1404,11 +1403,10 @@ def evaluate_map_batch(spark, schema, datas: list, vtype: str) -> list:
     df = spark.createDataFrame(
         [_Row(i=i, m=d) for i, d in enumerate(datas)], df_schema
     )
-    compiled = compile_schema(schema)
-    c, stages = compiled.columns_staged(dtype, F.col("m"))
+    plan = compile_schema(schema).plan(dtype, F.col("m"))
     out = (
-        apply_stages(df, stages)
-        .select("i", c.valid.alias("valid"), c.viols.alias("violations"))
+        plan.replay(df)
+        .select("i", plan.valid.alias("valid"), plan.viols.alias("violations"))
         .collect()
     )
     res: list = [None] * len(datas)

@@ -30,6 +30,7 @@ import random
 import sys
 
 import pytest
+from conftest import REFERENCE_ABSENT, reference_params
 
 from jschon_spark.jsonpatch import PatchError, apply_op, apply_patch
 
@@ -45,7 +46,7 @@ def ref():
         from jschon.exceptions import JschonError
         from jschon.jsonpatch import JSONPatch
     except Exception as e:  # pragma: no cover
-        pytest.skip(f"reference not importable: {e}")
+        pytest.skip(f"{REFERENCE_ABSENT}: {e}")
     return {"JSON": JSON, "JSONPatch": JSONPatch, "JschonError": JschonError}
 
 
@@ -241,18 +242,13 @@ def test_leading_zero_index_delta(ref):
 # --- the reference's own test data ----------------------------------------
 
 def _ref_data_cases():
-    import json
-
     path = "/root/reference/tests/data/jsonpatch.json"
-    if not os.path.exists(path):  # pragma: no cover
-        return []
-    with open(path) as f:
-        return json.load(f)
+    return reference_params(
+        path, lambda cases: [pytest.param(c, id=c["description"]) for c in cases]
+    )
 
 
-@pytest.mark.parametrize(
-    "case", _ref_data_cases(), ids=lambda c: c["description"]
-)
+@pytest.mark.parametrize("case", _ref_data_cases())
 def test_reference_jsonpatch_data(case):
     """The reference's own fixture file (tests/data/jsonpatch.json,
     consumed by its tests/test_jsonpatch.py) run through our engine:

@@ -23,6 +23,7 @@ import os
 import sys
 
 import pytest
+from conftest import REFERENCE_ABSENT, reference_params
 
 from jschon_spark.compiler.pointer import (
     PointerError,
@@ -59,9 +60,7 @@ def _walk(data, pointer: str):
     return node
 
 
-def _fixture_cases():
-    with open(_FIXTURE) as f:
-        groups = json.load(f)
+def _fixture_cases(groups):
     out = []
     for gi, group in enumerate(groups):
         for ti, t in enumerate(group["tests"]):
@@ -77,7 +76,7 @@ def _fixture_cases():
     return out
 
 
-FIXTURE_CASES = _fixture_cases()
+FIXTURE_CASES = reference_params(_FIXTURE, _fixture_cases, argcount=4)
 
 
 @pytest.mark.parametrize("data,start,ref,expected", FIXTURE_CASES)
@@ -108,7 +107,7 @@ def ref_mod():
         from jschon import JSON
         from jschon.jsonpointer import JSONPointer, RelativeJSONPointer
     except Exception as e:  # pragma: no cover
-        pytest.skip(f"reference not importable: {e}")
+        pytest.skip(f"{REFERENCE_ABSENT}: {e}")
     return {"JSON": JSON, "JSONPointer": JSONPointer, "RelativeJSONPointer": RelativeJSONPointer}
 
 

@@ -292,14 +292,12 @@ def test_absolute_keyword_locations_match_reference(spark, ref, schema, data):
         [Row(value=_to_row(data, dtype))],
         T.StructType([T.StructField("value", dtype, True)]),
     )
-    from jschon_spark.compiler.core import apply_stages
-
     cs = compile_schema(schema)
-    c, stages = cs.columns_staged(dtype, F.col("value"))
+    plan = cs.plan(dtype, F.col("value"))
     out = (
-        apply_stages(df, stages)
-        .withColumn("valid", c.valid)
-        .withColumn("violations", c.viols)
+        plan.replay(df)
+        .withColumn("valid", plan.valid)
+        .withColumn("violations", plan.viols)
         .withColumn("rid", F.lit(1))
     )
     rows = basic_output(out, ["rid"], compiled=cs).collect()
