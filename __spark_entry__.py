@@ -868,7 +868,8 @@ def q_events_daily_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_events_value_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     # distribution drift as ONE distributed plan (PSI + two-sample KS
     # between the click and view event populations' `value` columns) —
-    # the SQL-oracle-checkable sibling of the pipeline's drift_check
+    # the SQL-oracle-checkable sibling of the pipeline's
+    # drift_check_distributed, which bins in Spark and folds on the driver
     # (≙ SURVEY §2.10 drift; each side reduces to <=20 bin-count rows
     # before any cross-side math)
     from jschon_spark.operators.table_checks import drift_statistics

@@ -370,7 +370,8 @@ def drift_statistics(
 ) -> DataFrame:
     """PSI + two-sample KS between two DataFrames' distributions of
     ``col``, as ONE fully-distributed Spark plan (no driver-side numpy
-    — the SQL-oracle-checkable sibling of ``drift_check``). Each side
+    — the SQL-oracle-checkable sibling of ``drift_check_distributed``,
+    for when both sides are Spark relations). Each side
     reduces to fixed-width bin counts via map-side combine (the only
     shuffle ships ≤ #bins rows), the bin tables full-outer join on the
     bin id, and PSI/KS fold over the joined bins — a window cumsum for
@@ -398,7 +399,7 @@ def _share_bins(counted: DataFrame, share_name: str) -> DataFrame:
 
 def _drift_from_bins(cur: DataFrame, base: DataFrame, eps: float = 1e-6) -> DataFrame:
     """PSI + KS as one distributed plan over two (bin, n) count frames
-    (the shared core of drift_statistics / drift_plan)."""
+    (the core of drift_statistics)."""
     from pyspark.sql import Window
 
     joined = (
@@ -427,50 +428,6 @@ def _drift_from_bins(cur: DataFrame, base: DataFrame, eps: float = 1e-6) -> Data
     )
 
 
-def drift_plan(
-    df: DataFrame,
-    baseline: pd.DataFrame,
-    dur_col: str = "dur_ms",
-    sr_col: str = "sr_hz",
-    bin_width: float = 100.0,
-) -> DataFrame:
-    """The pipeline's drift stage as ONE unexecuted distributed plan
-    (round-4 item: the default drift path is the fully distributed
-    variant, not driver-side numpy): KS on the duration distribution +
-    PSI on the sample-rate categories vs the frozen baseline snapshot
-    (FIXTURES.md §3 — a tiny pre-binned pandas table that enters the
-    plan as a broadcast local relation). The current side reduces to
-    bin counts via map-side combine; everything downstream is O(bins).
-    Returns one row: (ks_dur double, psi_sr double)."""
-    spark = df.sparkSession
-    base_dur = baseline[baseline["column_name"] == dur_col]
-    width = (
-        float(base_dur["bin_hi"].iloc[0] - base_dur["bin_lo"].iloc[0])
-        if len(base_dur)
-        else bin_width
-    )
-    cur_dur = (
-        df.where(F.col(dur_col).isNotNull())
-        .groupBy(F.floor(F.col(dur_col) / F.lit(width)).alias("bin"))
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-    base_dur_bins = spark.createDataFrame(
-        base_dur[["bin_lo", "count"]].astype(float)
-    ).select(
-        F.floor(F.col("bin_lo") / F.lit(width)).alias("bin"),
-        F.col("count").alias("n"),
-    )
-    cur_sr = df.groupBy(F.col(sr_col).cast("double").alias("bin")).agg(
-        F.count(F.lit(1)).alias("n")
-    )
-    base_sr_bins = spark.createDataFrame(
-        baseline[baseline["column_name"] == sr_col][["bin_lo", "count"]].astype(float)
-    ).select(F.col("bin_lo").alias("bin"), F.col("count").alias("n"))
-    ks_row = _drift_from_bins(cur_dur, base_dur_bins).select(F.col("ks").alias("ks_dur"))
-    psi_row = _drift_from_bins(cur_sr, base_sr_bins).select(F.col("psi").alias("psi_sr"))
-    return ks_row.crossJoin(psi_row)
-
-
 def drift_check_distributed(
     df: DataFrame,
     baseline: pd.DataFrame,
@@ -480,44 +437,46 @@ def drift_check_distributed(
     ks_threshold: float = 0.1,
     psi_threshold: float = 0.2,
 ) -> dict:
-    """``drift_check`` semantics computed by the distributed
-    :func:`drift_plan` — the only driver-side work is collecting the
-    single (ks_dur, psi_sr) row."""
-    row = drift_plan(df, baseline, dur_col, sr_col, bin_width).collect()[0]
-    ks, psi = float(row["ks_dur"]), float(row["psi_sr"])
-    return {
-        "ks_dur": ks,
-        "psi_sr": psi,
-        "ks_pass": bool(ks <= ks_threshold),
-        "psi_pass": bool(psi <= psi_threshold),
-    }
-
-
-def drift_check(
-    df: DataFrame,
-    baseline: pd.DataFrame,
-    dur_col: str = "dur_ms",
-    sr_col: str = "sr_hz",
-    bin_width: float = 100.0,
-    ks_threshold: float = 0.1,
-    psi_threshold: float = 0.2,
-) -> dict:
-    """KS on the duration distribution + PSI on the sample-rate
-    categories vs a frozen baseline snapshot (FIXTURES.md §3). Each side
-    is reduced to bin counts in Spark; the statistics are driver-side
-    numpy over ≤ dozens of bins."""
+    """The pipeline's drift stage: KS on the duration distribution + PSI
+    on the sample-rate categories vs a frozen baseline snapshot
+    (FIXTURES.md §3, a tiny pre-binned pandas table). Both current-side
+    distributions are binned by ONE Spark aggregation,
+    :func:`categorical_histograms` over the duration bin and the sample
+    rate: one scan, map-side combine, one shuffle of at most #bins rows.
+    Duration bins are ``floor(dur / width)`` over non-null durations (the
+    width comes from the baseline's bins), clamped to the baseline's bin
+    range widened by one bin on each side. KS stays exact: below that
+    range the baseline ECDF is 0 and the gap peaks at its last bin; above
+    it the baseline ECDF is 1 and the gap only shrinks. So corrupt or
+    out-of-range durations add at most two bins to the collected rows.
+    The sample rate is cast to double and a null rate is its own
+    category. The O(bins) rows are collected and folded against the
+    baseline on the driver with :func:`ks_statistic` /
+    :func:`psi_statistic`; the baseline never becomes a Spark relation.
+    Both statistics are rounded to 6dp."""
     base_dur = baseline[baseline["column_name"] == dur_col]
-    width = float(base_dur["bin_hi"].iloc[0] - base_dur["bin_lo"].iloc[0]) if len(base_dur) else bin_width
-    cur_dur = numeric_histogram(df, dur_col, width).toPandas()
-    cur_sr = (
-        categorical_histogram(df, sr_col)
-        .toPandas()
-        .rename(columns={"value": "bin_lo"})
-        .astype({"bin_lo": float})
+    width = (
+        float(base_dur["bin_hi"].iloc[0] - base_dur["bin_lo"].iloc[0])
+        if len(base_dur)
+        else bin_width
     )
+    base_bins = np.floor(base_dur["bin_lo"].to_numpy(float) / width)
+    # no baseline durations: any one current bin gives the same KS
+    lo, hi = (int(base_bins.min()) - 1, int(base_bins.max()) + 1) if len(base_bins) else (0, 0)
+    dur = F.floor(F.col(dur_col) / F.lit(width))
+    keyed = df.select(
+        # least/greatest skip nulls: a null duration must stay null
+        F.when(dur.isNotNull(), F.least(F.greatest(dur, F.lit(lo)), F.lit(hi))).alias(dur_col),
+        F.col(sr_col).cast("double").alias(sr_col),
+    )
+    hist = categorical_histograms(keyed, [dur_col, sr_col]).toPandas()
+    hist = hist.assign(bin_lo=hist["value"].astype(float), count=hist["count"].astype("int64"))
+    cur_dur = hist[(hist["column"] == dur_col) & hist["bin_lo"].notna()]
+    cur_sr = hist[hist["column"] == sr_col]
+    base_dur_bins = pd.DataFrame({"bin_lo": base_bins, "count": base_dur["count"].to_numpy()})
     base_sr = baseline[baseline["column_name"] == sr_col][["bin_lo", "count"]]
-    ks = ks_statistic(cur_dur, base_dur[["bin_lo", "count"]])
-    psi = psi_statistic(cur_sr, base_sr)
+    ks = round(ks_statistic(cur_dur, base_dur_bins), 6)
+    psi = round(psi_statistic(cur_sr, base_sr), 6)
     return {
         "ks_dur": ks,
         "psi_sr": psi,

@@ -3,8 +3,11 @@
 One scan feeds the compiled per-row predicates (Catalyst, codegen'd) and
 the flag/basic outputs; a second, column-pruned projection feeds the
 Arrow audio stage; table-level checks (uniqueness, referential, drift)
-run as separate jobs over the same source. Per-partition results land in
-a checkpoint manifest for resume (SURVEY.md §3.3 pipeline shape).
+run as separate jobs over the same source. Drift is the one eager stage:
+a single grouping-sets aggregation bins both current-side distributions
+and the KS/PSI fold over those few bins runs on the driver. Per-partition
+results land in a checkpoint manifest for resume (SURVEY.md §3.3
+pipeline shape).
 """
 
 from __future__ import annotations
@@ -123,8 +126,8 @@ def run_validation(
         )
 
     if baseline is not None:
-        # fully distributed PSI/KS plan (table_checks.drift_plan); only
-        # the single (ks_dur, psi_sr) row is collected
+        # one grouping-sets job bins dur_ms and sr_hz; only the O(bins)
+        # count rows are collected, KS/PSI fold over them on the driver
         out["drift"] = tc.drift_check_distributed(meta, baseline)
 
     return out

@@ -5,9 +5,13 @@ the pipeline must recover exactly those counts — this is the
 "per-partition pass/fail parity" gate of BASELINE.md.
 """
 
+import math
+from collections import Counter
+
 import numpy as np
 import pandas as pd
 import pytest
+from pyspark.sql import DataFrame
 
 from jschon_spark import fixtures as fx
 from jschon_spark.pipeline import run_validation
@@ -101,10 +105,10 @@ def test_drift_same_distribution_passes(results):
 def test_drift_shifted_distribution_fails(spark, clips_df):
     from pyspark.sql import functions as F
 
-    from jschon_spark.operators.table_checks import drift_check
+    from jschon_spark.operators.table_checks import drift_check_distributed
 
     shifted = clips_df.withColumn("dur_ms", (F.col("dur_ms") * 1.5).cast("int"))
-    drift = drift_check(shifted, fx.baseline_snapshot())
+    drift = drift_check_distributed(shifted, fx.baseline_snapshot())
     assert not drift["ks_pass"], drift
 
 
@@ -220,35 +224,195 @@ def test_drift_statistics_matches_numpy_reference(spark):
     assert zero["psi"] == 0.0 and zero["ks"] == 0.0
 
 
-def test_drift_distributed_is_default_and_matches_driver_path(spark, clips_df):
-    """Round-4 wiring: the pipeline's drift stage runs the fully
-    distributed drift_plan (no driver-side binning — the only
-    collect is the single stats row), and agrees with the legacy
-    driver-side numpy drift_check on the same inputs."""
-    from jschon_spark.operators.table_checks import (
-        drift_check,
-        drift_check_distributed,
-        drift_plan,
-    )
+def _job_ids(spark, group, fn):
+    """Run ``fn()`` under a fresh Spark job group; return its job ids."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _drift_by_brute_force(dur, sr, baseline, width):
+    """KS/PSI from explicit per-row binning in plain Python — shares no
+    code with table_checks: a null duration never bins, a null sample
+    rate is its own category, shares are clamped at 1e-6 for PSI."""
+    def shares(counts):
+        total = sum(counts.values())
+        return {k: v / total for k, v in counts.items()}
+
+    cur_dur = Counter(math.floor(d / width) for d in dur if not pd.isna(d))
+    cur_sr = Counter(None if pd.isna(r) else float(r) for r in sr)
+    side = {c: baseline[baseline["column_name"] == c] for c in ("dur_ms", "sr_hz")}
+    base_dur = {math.floor(lo / width): n for lo, n in zip(side["dur_ms"]["bin_lo"], side["dur_ms"]["count"])}
+    base_sr = dict(zip(side["sr_hz"]["bin_lo"], side["sr_hz"]["count"]))
+
+    p, q = shares(cur_dur), shares(base_dur)
+    ks = cp = cq = 0.0
+    for k in sorted(set(p) | set(q)):
+        cp, cq = cp + p.get(k, 0.0), cq + q.get(k, 0.0)
+        ks = max(ks, abs(cp - cq))
+    p, q = shares(cur_sr), shares(base_sr)
+    psi = 0.0
+    for k in set(p) | set(q):
+        a, b = max(p.get(k, 0.0), 1e-6), max(q.get(k, 0.0), 1e-6)
+        psi += (a - b) * math.log(a / b)
+    return ks, psi
+
+
+def test_drift_distributed_is_default_and_matches_driver_path(spark, clips_df, monkeypatch):
+    """The pipeline's drift stage is one grouping-sets aggregation whose
+    O(bins) rows are folded on the driver. Its statistics agree with the
+    fully distributed drift_statistics plan and with a brute-force
+    binning of the same rows; the call runs one query with one shuffle,
+    and binning stays a Spark aggregate (no Python evaluation)."""
+    import uuid
+
+    from jschon_spark.operators.table_checks import drift_check_distributed, drift_statistics
 
     baseline = fx.baseline_snapshot()
     meta = clips_df.drop("bytes")
-    old = drift_check(meta, baseline)
-    new = drift_check_distributed(meta, baseline)
-    assert abs(old["ks_dur"] - new["ks_dur"]) < 1e-6, (old, new)
-    assert abs(old["psi_sr"] - new["psi_sr"]) < 1e-6, (old, new)
-    assert old["ks_pass"] == new["ks_pass"] and old["psi_pass"] == new["psi_pass"]
+    width = 100.0  # the snapshot's duration bin width
 
-    # plan shape: binning happens in Spark aggregates (two hash
-    # aggregations over the floor()/cast() bin keys), with no Python
-    # evaluation anywhere in the plan
-    qe = drift_plan(meta, baseline)._jdf.queryExecution()
-    plan = qe.optimizedPlan().toString()
-    assert plan.count("Aggregate") >= 4, plan  # 2 bin counts + 2 totals (+ folds)
-    assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
-    # the bin key is a floor() expression (visible pre-optimization; the
-    # optimizer may constant-fold it into a LocalRelation for tiny inputs)
+    queries = []
+    to_pandas = type(meta).toPandas  # the session's concrete DataFrame class
+    monkeypatch.setattr(type(meta), "toPandas", lambda self: queries.append(self) or to_pandas(self))
+    got = {}
+    jobs = _job_ids(spark, f"drift-{uuid.uuid4()}", lambda: got.update(drift_check_distributed(meta, baseline)))
+    monkeypatch.undo()
+
+    # reference 1: the distributed drift_statistics plan, the baseline
+    # side expanded back to one row per counted value
+    def base_rows(col):
+        side = baseline[baseline["column_name"] == col]
+        values = np.repeat(side["bin_lo"].to_numpy(float), side["count"].to_numpy())
+        return spark.createDataFrame(pd.DataFrame({col: values}))
+
+    ks_ref = drift_statistics(meta, base_rows("dur_ms"), "dur_ms", width).collect()[0]["ks"]
+    psi_ref = drift_statistics(meta, base_rows("sr_hz"), "sr_hz", 1.0).collect()[0]["psi"]
+    assert abs(got["ks_dur"] - ks_ref) < 1e-6, (got, ks_ref)
+    assert abs(got["psi_sr"] - psi_ref) < 1e-6, (got, psi_ref)
+
+    # reference 2: brute-force binning of the same rows
+    rows = meta.select("dur_ms", "sr_hz").toPandas()
+    ks_bf, psi_bf = _drift_by_brute_force(rows["dur_ms"], rows["sr_hz"], baseline, width)
+    assert abs(got["ks_dur"] - ks_bf) < 1e-6, (got, ks_bf)
+    assert abs(got["psi_sr"] - psi_bf) < 1e-6, (got, psi_bf)
+    assert got["ks_pass"] == (got["ks_dur"] <= 0.1) and got["psi_pass"] == (got["psi_sr"] <= 0.2)
+
+    # one query: one fetch of the bin counts, one Exchange. Adaptive
+    # execution submits a shuffle's map stage as a job of its own, so
+    # "one job" reads as the job count of a plain one-shuffle aggregate
+    assert len(queries) == 1
+    one_agg = _job_ids(spark, f"agg-{uuid.uuid4()}", lambda: meta.groupBy("sr_hz").count().collect())
+    assert 1 <= len(jobs) == len(one_agg) <= 2, (jobs, one_agg)
+    qe = queries[0]._jdf.queryExecution()
     assert "FLOOR" in qe.analyzed().toString().upper()
+    plan = qe.executedPlan().toString().split("== Initial Plan ==")[0]
+    assert plan.count("Exchange") == 1 and "Expand" in plan, plan
+    assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
+
+
+# (bin_lo, count) baseline bins for the edge-case test: duration bin
+# [500, 600) and sample rate 48000 occur only here
+_EDGE_BASELINE = pd.DataFrame(
+    [
+        ("dur_ms", 0.0, 100.0, 3),
+        ("dur_ms", 100.0, 200.0, 2),
+        ("dur_ms", 200.0, 300.0, 1),
+        ("dur_ms", 500.0, 600.0, 4),
+        ("sr_hz", 8000.0, 8000.0, 2),
+        ("sr_hz", 16000.0, 16000.0, 5),
+        ("sr_hz", 48000.0, 48000.0, 1),
+    ],
+    columns=["column_name", "bin_lo", "bin_hi", "count"],
+)
+_EDGE_ROWS = [(150, 16000), (250, 16000), (250, 8000), (30, 44100), (1050, 8000)]
+
+
+# Expected (ks_dur, psi_sr) are the outputs of the former distributed
+# plan (drift_plan: bin joins + window ECDFs, deleted since) on these
+# frames, hard-coded so the edge semantics cannot drift with the code.
+@pytest.mark.parametrize(
+    "extra, ks_dur, psi_sr",
+    [
+        pytest.param([], 0.2, 4.079114, id="plain"),
+        # a null duration is left out of the KS bins (ks unchanged) but
+        # still counts toward its sample rate's PSI share
+        pytest.param([(None, 16000)], 0.2, 3.52281, id="null-dur"),
+        # a null sample rate is a PSI category of its own
+        pytest.param([(450, None)], 0.233333, 5.682208, id="null-sr"),
+        pytest.param([(None, 16000), (450, None), (None, None)], 0.233333, 6.168992, id="both-null"),
+        # nothing to bin: every baseline bin is a baseline-only bin
+        pytest.param(None, 1.0, 12.915217, id="empty"),
+        # durations far outside the baseline's bins, on both sides and
+        # at the int32 limits
+        pytest.param(
+            [(900000, 16000), (-5000, 8000), (2147483647, 44100), (-2147483648, 16000)],
+            0.333333,
+            4.288388,
+            id="far",
+        ),
+        pytest.param([(-5000, 8000), (-70000, 8000), (-1, 16000)], 0.375, 3.234987, id="far-below"),
+        pytest.param([(900000, 16000), (600, 8000), (2147483647, 16000)], 0.5, 3.01257, id="far-above"),
+    ],
+)
+def test_drift_edge_semantics(spark, monkeypatch, extra, ks_dur, psi_sr):
+    from jschon_spark.operators.table_checks import drift_check_distributed
+
+    rows = [] if extra is None else _EDGE_ROWS + extra
+    df = spark.createDataFrame(rows, "dur_ms int, sr_hz int")
+    fetched = []
+    to_pandas = type(df).toPandas
+    monkeypatch.setattr(type(df), "toPandas", lambda self: fetched.append(to_pandas(self)) or fetched[-1])
+    got = drift_check_distributed(df, _EDGE_BASELINE)
+    monkeypatch.undo()
+    # the duration bins collected stay within the baseline's bins 0..5
+    # widened by one on each side, however far out the data lies
+    (hist,) = fetched
+    assert (hist["column"] == "dur_ms").sum() <= 8, hist
+    assert abs(got["ks_dur"] - ks_dur) < 1e-6, got
+    assert abs(got["psi_sr"] - psi_sr) < 1e-6, got
+    ks_bf, psi_bf = _drift_by_brute_force(
+        [r[0] for r in rows], [r[1] for r in rows], _EDGE_BASELINE, 100.0
+    )
+    assert abs(got["ks_dur"] - ks_bf) < 1e-6 and abs(got["psi_sr"] - psi_bf) < 1e-6, (got, ks_bf, psi_bf)
+
+
+def test_second_pipeline_pass_fits_codegen_cache(spark):
+    """A repeated run_validation pass reuses its generated classes: the
+    pass must fit in Spark's codegen cache (spark.sql.codegen.cache.maxEntries,
+    100 by default) — past it, every pass recompiles all its classes
+    (Janino, then the JIT) and the cost shows up as driver CPU.
+
+    The cache is a Guava cache: four LRU segments of 25 entries, and a
+    class's segment hashes the class loader's identity, so it changes
+    from JVM to JVM. This ~80-class pass overflows one segment in about
+    3 of 10 JVMs and recompiles that segment's ~25 classes each pass; two
+    segments overflow in under 1% of JVMs. A pass past 100 classes
+    recompiles nearly all of them (the former drift plan: ~130)."""
+    # frames of its own: no persisted plan shared with other tests, so
+    # both passes start from the same cache state
+    clips = spark.createDataFrame(fx.gen_clips_batch(np.arange(N), audio=False), schema=fx.CLIPS_DDL)
+    transcripts = spark.createDataFrame(fx.gen_transcripts_batch(np.arange(N)), schema=fx.TRANSCRIPTS_DDL)
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+
+    def run_pass():
+        out = run_validation(
+            spark, clips, transcripts=transcripts, baseline=fx.baseline_snapshot(), audio=False
+        )
+        for df in out.values():
+            if isinstance(df, DataFrame):
+                df.write.format("noop").mode("overwrite").save()
+        out["transcript_checks"].unpersist()
+
+    run_pass()
+    before = metrics.METRIC_COMPILATION_TIME().getCount()
+    run_pass()
+    assert metrics.METRIC_COMPILATION_TIME().getCount() - before < 50
 
 
 def test_transcript_checks_single_join(spark):
