@@ -1,14 +1,19 @@
 """Similarity search over embedding columns (array<float>).
 
-Baseline: brute-force cosine top-k — JVM-side ``zip_with``/``aggregate``
-dot products (oracle-checkable against DuckDB's list_cosine_similarity),
-plus a vectorized numpy variant (Arrow-batched, one matmul per batch)
-for throughput.
+Exact path: brute-force cosine top-k — JVM-side ``zip_with``/``aggregate``
+dot products (oracle-checkable against DuckDB's list_cosine_similarity).
+It is the recall oracle every approximate path is measured against.
 
-Scale path: random-hyperplane LSH bucketing — signature = sign-bit
-string over H hyperplanes; probe only same-bucket rows. At 100 TB the
-bucket join replaces the full scan; brute force stays as the recall
-oracle on samples.
+Scale path: the IVF index — k-means lists written as partition
+directories, so a probe reads only the ``nprobe`` nearest lists and
+scores them exactly (``write_ivf_index`` + ``ivf_topk``). The
+materialized-LSH index (``write_ann_index`` + ``ann_topk_indexed``)
+covers one corner IVF does not: on unclustered vectors it lists fewer
+bytes at equal recall, for several times the query time (BASELINE.md,
+round 6).
+
+Near-duplicate pairs: banded random-hyperplane LSH
+(``embedding_near_duplicates``), exact-verified.
 """
 
 from __future__ import annotations
@@ -64,31 +69,6 @@ def brute_force_topk(
     return scored.orderBy(F.desc("cosine_sim"), F.col(id_col)).limit(k)
 
 
-def brute_force_topk_pandas(
-    df: DataFrame,
-    query: Sequence[float],
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Same semantics, Arrow path: one numpy matmul per batch. Wins when
-    dim × rows is large enough that JVM HOF per-element math loses to
-    BLAS."""
-    qv = np.asarray(list(query), dtype=np.float64)
-    qn = float(np.linalg.norm(qv))
-
-    @pandas_udf(T.DoubleType())
-    def cos_udf(vecs: pd.Series) -> pd.Series:
-        m = np.stack(vecs.to_numpy())  # (batch, dim)
-        norms = np.linalg.norm(m, axis=1) * qn
-        with np.errstate(divide="ignore", invalid="ignore"):
-            out = (m @ qv) / norms
-        return pd.Series(np.round(out, 6))
-
-    scored = df.select(F.col(id_col), cos_udf(F.col(vec_col).cast("array<double>")).alias("cosine_sim"))
-    return scored.orderBy(F.desc("cosine_sim"), F.col(id_col)).limit(k)
-
-
 # -- random hyperplane LSH ---------------------------------------------------
 
 
@@ -101,10 +81,6 @@ def hyperplanes_np(dim: int, n_planes: int, seed: int = 7) -> np.ndarray:
     u2 = (_splitmix64(idx ^ np.uint64(0xDEADBEEF)) >> np.uint64(11)).astype(np.float64) / float(1 << 53)
     g = np.sqrt(-2.0 * np.log(np.clip(u, 1e-12, 1))) * np.cos(2 * np.pi * u2)
     return g.reshape(n_planes, dim)
-
-
-def hyperplanes(dim: int, n_planes: int = 16, seed: int = 7) -> list[list[float]]:
-    return hyperplanes_np(dim, n_planes, seed).tolist()
 
 
 def banded_signature_udf(bands: int, bits_per_band: int, seed: int = 7):
@@ -134,55 +110,6 @@ def banded_signature_udf(bands: int, bits_per_band: int, seed: int = 7):
         return pd.Series(out)
 
     return sigs
-
-
-def lsh_signature(vec: Column, planes: list[list[float]]) -> Column:
-    """Sign-bit signature as a long (n_planes ≤ 63): bit i set iff
-    dot(vec, plane_i) >= 0. Pure JVM expression."""
-    bits = []
-    for i, p in enumerate(planes):
-        pl = F.array(*[F.lit(float(x)) for x in p])
-        bits.append(
-            F.when(dot(vec, pl) >= 0, F.shiftleft(F.lit(1).cast("long"), i)).otherwise(F.lit(0).cast("long"))
-        )
-    out = bits[0]
-    for b in bits[1:]:
-        out = out + b
-    return out
-
-
-def ann_topk_lsh(
-    df: DataFrame,
-    query: Sequence[float],
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_planes: int = 12,
-    max_probe_hamming: int = 2,
-) -> DataFrame:
-    """Approximate top-k over an UNINDEXED DataFrame: score only rows
-    whose LSH bucket is within ``max_probe_hamming`` bits of the
-    query's bucket (multi-probe). The bucket filter is a cheap
-    long-valued predicate pushed ahead of the expensive cosine — but it
-    still scans every row to compute the signature. The scale path is
-    ``write_ann_index`` + ``ann_topk_indexed``, where the signature is
-    materialized as a partition column and the probe prunes files."""
-    dim = len(list(query))
-    planes = hyperplanes(dim, n_planes)
-    qv = list(query)
-    q_sig = 0
-    for i, p in enumerate(planes):
-        if sum(a * b for a, b in zip(qv, p)) >= 0:
-            q_sig |= 1 << i
-    vec = F.col(vec_col).cast("array<double>")
-    sig = lsh_signature(vec, planes)
-    probe = F.bit_count(sig.bitwiseXOR(F.lit(q_sig).cast("long"))) <= max_probe_hamming
-    q = F.array(*[F.lit(float(x)) for x in qv])
-    scored = (
-        df.where(probe)
-        .select(F.col(id_col), F.round(cosine(vec, q), 6).alias("cosine_sim"))
-    )
-    return scored.orderBy(F.desc("cosine_sim"), F.col(id_col)).limit(k)
 
 
 def embedding_near_duplicates(
@@ -519,91 +446,3 @@ def auto_lsh_params(
             break
         bands = max(1, min(64, math.ceil(math.log(1.0 - target_recall) / math.log(1.0 - pr))))
     return bands, bits
-
-
-# -- int8 scalar quantization ------------------------------------------------
-#
-# At the 10^12-row design point the embedding column dominates scan IO
-# (128 float32 dims = 512 B/row). Symmetric per-dimension int8
-# quantization cuts that 4x: candidate generation runs integer dot
-# products over the quantized column, and only the top rescore_factor*k
-# survivors touch fp32 math. Recall is gated in
-# tests/test_training_ops.py like the other ANN paths.
-
-
-def embedding_scales(df, vec_col: str = "embedding") -> "np.ndarray":
-    """Per-dimension symmetric scales max|x|/127 — ONE distributed pass
-    (posexplode → per-dim max-abs agg); the collected result is
-    dim-sized, never data-sized. Zero dims get scale 1 (they quantize
-    to 0 regardless)."""
-    rows = (
-        df.select(F.posexplode(F.col(vec_col)).alias("pos", "v"))
-        .groupBy("pos")
-        .agg(F.max(F.abs(F.col("v"))).alias("mx"))
-        .collect()
-    )
-    dim = max(r["pos"] for r in rows) + 1
-    scales = np.ones(dim, dtype=np.float64)
-    for r in rows:
-        if r["mx"] and r["mx"] > 0:
-            scales[r["pos"]] = r["mx"] / 127.0
-    return scales
-
-
-def with_quantized_embedding(
-    df, scales, vec_col: str = "embedding", out: str = "q_vec"
-):
-    """Append the int8-quantized vector (array<tinyint>): round(x/s)
-    per dimension, clamped to [-127, 127]. Pure zip_with against the
-    literal scale array — codegen'd, map-only."""
-    lit_scales = F.array(*[F.lit(float(s)) for s in scales])
-    q = F.zip_with(
-        F.col(vec_col),
-        lit_scales,
-        lambda x, s: F.greatest(
-            F.lit(-127), F.least(F.lit(127), F.round(x / s).cast("int"))
-        ).cast("tinyint"),
-    )
-    return df.withColumn(out, q)
-
-
-def quantized_topk(
-    df,
-    query,
-    scales,
-    k: int = 10,
-    rescore_factor: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    q_col: str = "q_vec",
-    round_digits: int = 6,
-):
-    """Cosine top-k with int8 candidate generation + fp32 rescoring:
-    integer dot products over the quantized column pick
-    ``rescore_factor * k`` candidates (4x less scan IO than fp32
-    brute force; TakeOrdered keeps the sort a per-partition heap), then
-    exact cosine re-ranks only the survivors. With rescore_factor*k
-    candidates the fp32 stage is O(k), not O(n)."""
-    qv = [float(x) for x in query]
-    qq = [
-        int(max(-127, min(127, round(x / s)))) for x, s in zip(qv, list(scales))
-    ]
-    q_lit = F.array(*[F.lit(int(v)).cast("int") for v in qq])
-    int_score = F.aggregate(
-        F.zip_with(F.col(q_col).cast("array<int>"), q_lit, lambda a, b: a * b),
-        F.lit(0).cast("long"),
-        lambda acc, v: acc + v,
-    )
-    cand = (
-        df.select(F.col(id_col), F.col(vec_col), int_score.alias("q_score"))
-        .orderBy(F.desc("q_score"), F.col(id_col))
-        .limit(int(rescore_factor) * k)
-    )
-    fq = F.array(*[F.lit(float(x)) for x in qv])
-    rescored = cand.select(
-        F.col(id_col),
-        F.round(cosine(F.col(vec_col).cast("array<double>"), fq), round_digits).alias(
-            "cosine_sim"
-        ),
-    )
-    return rescored.orderBy(F.desc("cosine_sim"), F.col(id_col)).limit(k)

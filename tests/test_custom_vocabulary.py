@@ -16,6 +16,7 @@ import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from conftest import REFERENCE_ABSENT
 from jschon_spark.compiler import (
     CompileError,
     CustomKeyword,
@@ -60,7 +61,7 @@ def _enum_ref_spec() -> CustomKeyword:
 
 def _catalog() -> SchemaCatalog:
     if not os.path.isdir(DATA_DIR):  # pragma: no cover
-        pytest.skip("reference example data not available")
+        pytest.skip(f"{REFERENCE_ABSENT}: {DATA_DIR} not found")
     cat = SchemaCatalog()
     # the example's add_uri_source(LocalSource(data_dir, suffix='.json'))
     cat.add_directory_source("https://example.com/enumRef/", DATA_DIR)
@@ -228,7 +229,7 @@ def ref_enum_catalog():
         from jschon.catalog import Catalog, LocalSource, _2020_12
         from jschon.vocabulary import Keyword
     except Exception as e:  # pragma: no cover
-        pytest.skip(f"reference not importable: {e}")
+        pytest.skip(f"{REFERENCE_ABSENT}: reference not importable: {e}")
 
     meta_dir = os.path.join(_HERE, "ref_oracle", "json-schema-2020-12")
     orig_source = _2020_12.LocalSource

@@ -22,13 +22,14 @@ import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from conftest import REFERENCE_ABSENT
 from jschon_spark.compiler import SchemaCatalog, compile_schema
 from jschon_spark.testing import evaluate_batch
 
 DATA_DIR = "/root/reference/examples/data"
 
 pytestmark = pytest.mark.skipif(
-    not os.path.isdir(DATA_DIR), reason="reference example data not available"
+    not os.path.isdir(DATA_DIR), reason=f"{REFERENCE_ABSENT}: {DATA_DIR} not found"
 )
 
 
@@ -282,7 +283,7 @@ def test_recursive_schema_extension_example(spark):
         from jschon import JSONSchema
         from jschon.catalog import Catalog, LocalSource, _2020_12
     except Exception as e:  # pragma: no cover
-        pytest.skip(f"reference not importable: {e}")
+        pytest.skip(f"{REFERENCE_ABSENT}: reference not importable: {e}")
     from jschon import JSON
 
     meta_dir = os.path.join(os.path.dirname(__file__), "ref_oracle",

@@ -56,6 +56,7 @@ import sys
 
 import pytest
 
+from conftest import REFERENCE_ABSENT
 from jschon_spark.testing import evaluate_batch
 
 _HERE = os.path.dirname(os.path.abspath(__file__))
@@ -73,7 +74,7 @@ def ref():
         from jschon import JSON, JSONSchema, URI
         from jschon.catalog import Catalog, LocalSource, _2020_12
     except Exception as e:  # pragma: no cover
-        pytest.skip(f"reference not importable: {e}")
+        pytest.skip(f"{REFERENCE_ABSENT}: reference not importable: {e}")
 
     meta_dir = os.path.join(_HERE, "ref_oracle", "json-schema-2020-12")
     orig_source = _2020_12.LocalSource

@@ -102,20 +102,6 @@ def test_brute_force_topk_matches_numpy(spark):
     want = list(np.argsort(np.round(-sims, 6), kind="stable")[:5])
     assert got[0] == 7
     assert got == [int(w) for w in want]
-    got_pd = [r.vec_id for r in similarity.brute_force_topk_pandas(df, query, k=5).collect()]
-    assert got_pd == got
-
-
-def test_ann_lsh_recall(spark):
-    rng = np.random.default_rng(1)
-    vecs = rng.normal(size=(200, 16)).astype(np.float32)
-    pdf = pd.DataFrame({"vec_id": range(200), "embedding": list(vecs)})
-    df = spark.createDataFrame(pdf)
-    query = (vecs[3] + rng.normal(size=16) * 0.01).tolist()
-    exact = [r.vec_id for r in similarity.brute_force_topk(df, query, k=1).collect()]
-    approx = [r.vec_id for r in similarity.ann_topk_lsh(df, query, k=5, max_probe_hamming=3).collect()]
-    assert exact[0] == 3
-    assert 3 in approx  # the true NN survives multi-probe bucketing
 
 
 def test_embedding_near_duplicates(spark):
@@ -437,46 +423,6 @@ def test_simhash128_generalized_pigeonhole(spark):
     # combined radius+require beyond 16 chunks raises
     with pytest.raises(ValueError):
         dedup.simhash128_near_duplicates(df, max_hamming=15, require_chunks=2)
-
-
-# ---------------------------------------------------- int8 quantization
-
-
-def test_quantization_roundtrip_bounds(spark):
-    rng = np.random.default_rng(21)
-    pts = (rng.normal(size=(100, 16)) * rng.uniform(0.1, 8.0, size=16)).astype(np.float32)
-    pdf = pd.DataFrame({"vec_id": range(len(pts)), "embedding": list(pts)})
-    df = spark.createDataFrame(pdf)
-    scales = similarity.embedding_scales(df)
-    q = similarity.with_quantized_embedding(df, scales)
-    rows = q.select("vec_id", "q_vec").collect()
-    qm = np.array([r["q_vec"] for r in sorted(rows, key=lambda r: r["vec_id"])])
-    assert qm.min() >= -127 and qm.max() <= 127
-    # max|x| per dim quantizes to exactly +/-127 somewhere
-    assert (np.abs(qm).max(axis=0) == 127).all()
-    # reconstruction error bounded by half a quantization step per dim
-    err = np.abs(qm * scales - pts)
-    assert (err <= scales / 2 + 1e-6).all()
-    # tinyint storage, JVM-only plan
-    assert dict(q.dtypes)["q_vec"] == "array<tinyint>"
-    plan = q._jdf.queryExecution().executedPlan().toString()
-    assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
-
-
-def test_quantized_topk_recall(spark):
-    rng = np.random.default_rng(22)
-    centers = rng.normal(size=(6, 16)) * 4
-    pts = np.vstack([c + rng.normal(size=(60, 16)) for c in centers]).astype(np.float32)
-    pdf = pd.DataFrame({"vec_id": range(len(pts)), "embedding": list(pts)})
-    df = spark.createDataFrame(pdf)
-    scales = similarity.embedding_scales(df)
-    qdf = similarity.with_quantized_embedding(df, scales)
-    query = (pts[200] + rng.normal(size=16) * 0.01).tolist()
-    got = [r["vec_id"] for r in similarity.quantized_topk(qdf, query, scales, k=10).collect()]
-    exact = [r["vec_id"] for r in similarity.brute_force_topk(df, query, k=10).collect()]
-    # int8 candidates + fp32 rescore: near-exact on clustered data
-    assert len(set(got) & set(exact)) >= 9
-    assert got[0] == exact[0] == 200
 
 
 def test_embedding_near_dup_no_count_job(spark, tmp_path, monkeypatch):
