@@ -1,17 +1,35 @@
-"""Per-row audio invariants as Arrow-batched pandas UDFs.
+"""Audio payload decoding, the one Arrow decode walk, and the per-row
+audio invariant.
 
-The north rule (BASELINE.json input_hint) demands: decode ``bytes`` to
-PCM and assert SNR ≥ 30 dB against the reference decoder plus a frame
-count consistent with ``dur_ms`` — with no per-row Python in the hot
-path. Decoding is numpy ``frombuffer`` views (pcm_s16le) and a stdlib
-``wave`` header parse (wav); the per-sample work (synthesis, energy
-sums) is fully vectorized — the only Python-level iteration is over
-rows *within* an Arrow batch, on O(1) header work per row.
+This module owns which payloads decode, and how. ``decode_pcm`` decodes
+one ``bytes`` blob; ``iter_decoded`` walks the binary column of an
+Arrow batch without copying payloads; ``map_decoded`` turns a per-clip
+function plus its output fields into a row-aligned ``mapInArrow``
+stage. Every audio stage (the invariant, features, loudness, log-mel,
+speech segments, fingerprints, landmarks, conditioning) decodes through
+the one walk, so each accepts the same codecs:
 
-The "reference decoder" signal is re-synthesized deterministically from
-(clip_id, sr_hz) via jschon_spark.fixtures.synth_pcm — the same contract
-the fixture generator used, so a pristine clip has SNR = +inf and an
-injected noise burst falls below the 30 dB gate.
+- ``pcm_s16le``: a zero-copy int16 view of the Arrow buffer;
+- ``pcm_mulaw`` / ``pcm_alaw`` (G.711): one 256-entry LUT gather over
+  a zero-copy uint8 view;
+- ``adpcm_ima``: 4-bit IMA ADPCM blocks (audio/adpcm.py);
+- ``wav``: 16-bit mono PCM through an allocation-free RIFF header walk,
+  any other layout through the stdlib ``wave`` parser, then the IMA
+  ADPCM (fmt 0x11) container walk. The header's sample rate wins over
+  ``sr_hz``.
+
+A null payload, odd-length PCM, a corrupt header or any other codec
+(flac/opus are reserved) does not decode; stages give such rows their
+fields' defaults.
+
+The invariant (``with_audio_invariant``, BASELINE.json input_hint):
+decode ``bytes`` to PCM and assert SNR ≥ 30 dB against the reference
+signal plus a frame count consistent with ``dur_ms``. The reference is
+re-synthesized deterministically from (clip_id, sr_hz) with the
+fixtures.synth_pcm math, so a pristine clip has SNR = +inf and an
+injected noise burst falls below the 30 dB gate. Per-row Python is
+O(1) header work; the per-sample work (synthesis, energy sums) is
+vectorized numpy.
 """
 
 from __future__ import annotations
@@ -21,26 +39,16 @@ import struct
 import wave
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
+from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_type
 
 from jschon_spark.compiler.context import VIOLATION_DDL
-from jschon_spark.fixtures import clip_seed, synth_pcm
+from jschon_spark.fixtures import clip_seed
 
 SNR_THRESHOLD_DB = 30.0
-
-from pyspark.sql import types as T
-
-_AUDIO_CHECK_TYPE = T.StructType(
-    [
-        T.StructField("decode_ok", T.BooleanType()),
-        T.StructField("n_frames", T.LongType()),
-        T.StructField("snr_db", T.DoubleType()),
-    ]
-)
 
 
 def _g711_mulaw_lut() -> np.ndarray:
@@ -77,14 +85,15 @@ def _g711_alaw_lut() -> np.ndarray:
 MULAW_LUT = _g711_mulaw_lut()
 ALAW_LUT = _g711_alaw_lut()
 
-# codec name → decode LUT for the 8-bit telephony formats; shared by
-# decode_pcm and the zero-copy Arrow walk (features.iter_decoded)
+# codec name → decode LUT for the 8-bit telephony formats
 G711_LUTS = {"pcm_mulaw": MULAW_LUT, "pcm_alaw": ALAW_LUT}
 
 
 def decode_pcm(blob: bytes, codec: str) -> tuple[np.ndarray | None, int | None]:
-    """Decode one clip to int16 samples. Returns (samples, sr_from_header).
-    pcm_s16le is a zero-copy frombuffer view; pcm_mulaw/pcm_alaw are one
+    """Decode one clip (``bytes`` or a borrowed memoryview) to int16
+    samples. Returns (samples, sr_from_header), or (None, None) when
+    the payload does not decode. pcm_s16le is a zero-copy frombuffer
+    view; pcm_mulaw/pcm_alaw are one
     vectorized 256-entry LUT gather (G.711 telephony); wav parses the
     RIFF header with the stdlib ``wave`` module (no scipy/soundfile in
     the sandbox)."""
@@ -122,20 +131,114 @@ def decode_pcm(blob: bytes, codec: str) -> tuple[np.ndarray | None, int | None]:
     return None, None  # unknown codec (flac/opus reserved, not decodable here)
 
 
-def _snr_db(decoded: np.ndarray, ref: np.ndarray) -> float:
-    n = min(len(decoded), len(ref))
-    if n == 0:
-        return float("-inf")
-    d = decoded[:n].astype(np.float64)
-    r = ref[:n].astype(np.float64)
-    noise = d - r
-    p_sig = float(np.dot(r, r))
-    p_noise = float(np.dot(noise, noise))
-    if p_noise == 0.0:
-        return float("inf")
-    if p_sig == 0.0:
-        return float("-inf")
-    return 10.0 * np.log10(p_sig / p_noise)
+def _parse_wav_header(raw: memoryview, start: int, end: int):
+    """Minimal RIFF/WAVE chunk walk over a borrowed buffer — no payload
+    copy. Returns (data_start, data_end, sample_rate) for 16-bit mono
+    PCM with a standard fmt-before-data layout, else None (caller falls
+    back to ``decode_pcm`` on a copied blob)."""
+    if end - start < 12:
+        return None
+    if bytes(raw[start : start + 4]) != b"RIFF" or bytes(raw[start + 8 : start + 12]) != b"WAVE":
+        return None
+    pos = start + 12
+    sr = None
+    while pos + 8 <= end:
+        cid = bytes(raw[pos : pos + 4])
+        (csz,) = struct.unpack_from("<I", raw, pos + 4)
+        body = pos + 8
+        if cid == b"fmt ":
+            if body + 16 > end:
+                return None
+            fmt_tag, nch, fr, _brate, _balign, bits = struct.unpack_from("<HHIIHH", raw, body)
+            if fmt_tag != 1 or nch != 1 or bits != 16:
+                return None
+            sr = fr
+        elif cid == b"data":
+            if sr is None:
+                return None  # nonstandard ordering → slow path
+            return body, min(body + csz, end), sr
+        pos = body + csz + (csz & 1)
+    return None
+
+
+def iter_decoded(batch):
+    """The zero-copy decode walk: yields ``(row_index, int16_samples,
+    sample_rate)`` for every decodable row of an Arrow batch with
+    ``bytes``, ``codec`` and ``sr_hz`` columns. Payloads are borrowed
+    slices of the binary column's value buffer, never per-row ``bytes``
+    objects; only a WAV that the header walk cannot place is copied for
+    the stdlib parse. ``sample_rate`` is the WAV header's rate when the
+    payload has one, else ``sr_hz``. Undecodable rows are not yielded —
+    callers treat absence as their not-ok state."""
+    names = batch.schema.names
+    blob = batch.column(names.index("bytes"))
+    n = len(blob)
+    bufs = blob.buffers()
+    if not n or bufs[1] is None:
+        return
+    width, odt = (8, np.int64) if pa.types.is_large_binary(blob.type) else (4, np.int32)
+    offs = np.frombuffer(bufs[1], dtype=odt, count=n + 1, offset=blob.offset * width)
+    raw = memoryview(bufs[2]) if bufs[2] is not None else memoryview(b"")
+    srs = batch.column(names.index("sr_hz")).to_numpy(zero_copy_only=False)
+    codecs = batch.column(names.index("codec")).to_pylist()
+    row_valid = blob.is_valid().to_numpy(zero_copy_only=False) if blob.null_count else None
+    for i in range(n):
+        if row_valid is not None and not row_valid[i]:
+            continue
+        s0, s1 = int(offs[i]), int(offs[i + 1])
+        c = codecs[i]
+        parsed = _parse_wav_header(raw, s0, s1) if c == "wav" else None
+        if parsed is not None:
+            d0, d1, hdr_sr = parsed
+            if (d1 - d0) % 2:
+                continue
+            dec = np.frombuffer(raw, dtype="<i2", count=(d1 - d0) // 2, offset=d0)
+        else:
+            dec, hdr_sr = decode_pcm(bytes(raw[s0:s1]) if c == "wav" else raw[s0:s1], c)
+        if dec is None:
+            continue
+        yield i, dec, int(srs[i]) if hdr_sr is None else hdr_sr
+
+
+def map_decoded(
+    df: DataFrame, clip_fn, fields, keep_bytes: bool = False, columns=()
+) -> DataFrame:
+    """A row-aligned ``mapInArrow`` stage over the decode walk.
+
+    ``fields`` lists the output columns as ``(name, spark_type,
+    default)``; ``default`` is the value of a row that does not decode.
+    For each decoded row, ``clip_fn(samples, sample_rate, scratch,
+    *values)`` returns one value per field, or None to leave the row at
+    its defaults; ``values`` are the row's values of the input
+    ``columns``, and ``scratch`` is a per-batch dict for memoized
+    tables. The output passes every input column through except
+    ``bytes`` (kept with ``keep_bytes``) and appends ``fields``."""
+    arrow_types = [to_arrow_type(dt) for _, dt, _ in fields]
+
+    def kernel(batches):
+        for batch in batches:
+            n = batch.num_rows
+            cols = [
+                [default] * n if pa.types.is_nested(at) else np.full(n, default, at.to_pandas_dtype())
+                for (_, _, default), at in zip(fields, arrow_types)
+            ]
+            row_values = [batch.column(c).to_pylist() for c in columns]
+            scratch: dict = {}
+            for i, dec, sr in iter_decoded(batch):
+                vals = clip_fn(dec, sr, scratch, *[v[i] for v in row_values])
+                if vals is not None:
+                    for col, v in zip(cols, vals):
+                        col[i] = v
+            kept = [j for j, nm in enumerate(batch.schema.names) if keep_bytes or nm != "bytes"]
+            yield pa.RecordBatch.from_arrays(
+                [batch.column(j) for j in kept]
+                + [pa.array(col, type=at) for col, at in zip(cols, arrow_types)],
+                [batch.schema.names[j] for j in kept] + [name for name, _, _ in fields],
+            )
+
+    out = [f for f in df.schema.fields if keep_bytes or f.name != "bytes"]
+    out += [T.StructField(name, dt) for name, dt, _ in fields]
+    return df.mapInArrow(kernel, T.StructType(out))
 
 
 def _row_snr(decoded: np.ndarray, seed: int, sr: int, scratch: dict) -> float:
@@ -188,32 +291,6 @@ def _row_snr(decoded: np.ndarray, seed: int, sr: int, scratch: dict) -> float:
     return 10.0 * float(np.log10(p_sig / p_noise))
 
 
-def _batch_audio_check(
-    blob: pd.Series, clip_id: pd.Series, sr_hz: pd.Series, codec: pd.Series
-) -> pd.DataFrame:
-    """Arrow-batched audio invariant: decode + SNR vs re-synthesized
-    reference. Per-row Python is O(1) header work (frombuffer view / wave
-    header parse) plus ~15 numpy calls on cache-resident arrays — all
-    per-sample math is vectorized (see _row_snr for why row-at-a-time
-    beats whole-batch concatenation here)."""
-    n = len(blob)
-    ok = np.zeros(n, dtype=bool)
-    frames = np.zeros(n, dtype=np.int64)
-    snr = np.full(n, -np.inf, dtype=np.float64)
-    scratch: dict = {}
-    for i in range(n):
-        decoded, hdr_sr = decode_pcm(blob.iloc[i], codec.iloc[i])
-        if decoded is None:
-            continue
-        frames[i] = len(decoded)
-        sr = int(sr_hz.iloc[i])
-        if hdr_sr is not None and hdr_sr != sr:
-            continue
-        ok[i] = True
-        snr[i] = _row_snr(decoded, clip_seed(str(clip_id.iloc[i])), sr, scratch)
-    return pd.DataFrame({"decode_ok": ok, "n_frames": frames, "snr_db": snr})
-
-
 def _splitmix64_arr(x: np.ndarray) -> np.ndarray:
     """Vectorized splitmix64 (public-domain constants) — must match
     fixtures._splitmix64 bit-for-bit so SNR vs the reference signal is
@@ -225,108 +302,20 @@ def _splitmix64_arr(x: np.ndarray) -> np.ndarray:
         return z ^ (z >> np.uint64(31))
 
 
-@pandas_udf(_AUDIO_CHECK_TYPE)
-def audio_check_udf(
-    blob: pd.Series, clip_id: pd.Series, sr_hz: pd.Series, codec: pd.Series
-) -> pd.DataFrame:
-    return _batch_audio_check(blob, clip_id, sr_hz, codec)
+_INVARIANT_FIELDS = [
+    ("decode_ok", T.BooleanType(), False),
+    ("n_frames", T.LongType(), 0),
+    ("snr_db", T.DoubleType(), -np.inf),
+]
 
 
-# -- zero-copy Arrow path ----------------------------------------------------
-
-
-def _parse_wav_header(raw: memoryview, start: int, end: int):
-    """Minimal RIFF/WAVE chunk walk over a borrowed buffer — no payload
-    copy. Returns (data_start, data_end, sample_rate) for 16-bit mono
-    PCM with a standard fmt-before-data layout, else None (caller falls
-    back to the stdlib ``wave`` parser on a copied blob)."""
-    if end - start < 12:
-        return None
-    if bytes(raw[start : start + 4]) != b"RIFF" or bytes(raw[start + 8 : start + 12]) != b"WAVE":
-        return None
-    pos = start + 12
-    sr = None
-    while pos + 8 <= end:
-        cid = bytes(raw[pos : pos + 4])
-        (csz,) = struct.unpack_from("<I", raw, pos + 4)
-        body = pos + 8
-        if cid == b"fmt ":
-            if body + 16 > end:
-                return None
-            fmt_tag, nch, fr, _brate, _balign, bits = struct.unpack_from("<HHIIHH", raw, body)
-            if fmt_tag != 1 or nch != 1 or bits != 16:
-                return None
-            sr = fr
-        elif cid == b"data":
-            if sr is None:
-                return None  # nonstandard ordering → slow path
-            return body, min(body + csz, end), sr
-        pos = body + csz + (csz & 1)
-    return None
-
-
-def _arrow_audio_batches(batches):
-    """mapInArrow kernel: decode + SNR without materializing Python
-    ``bytes`` objects. The binary column's Arrow value buffer is read
-    through numpy views (pcm_s16le payloads and standard WAV payloads
-    are zero-copy int16 slices); only nonstandard WAV layouts fall back
-    to a per-row copy + stdlib parse. Passes every non-bytes column
-    through and appends (decode_ok, n_frames, snr_db)."""
-    for batch in batches:
-        names = batch.schema.names
-        blob = batch.column(names.index("bytes"))
-        n = len(blob)
-        ok = np.zeros(n, dtype=bool)
-        frames = np.zeros(n, dtype=np.int64)
-        snr = np.full(n, -np.inf, dtype=np.float64)
-
-        bufs = blob.buffers()
-        if n and bufs[1] is not None:
-            width, odt = (8, np.int64) if pa.types.is_large_binary(blob.type) else (4, np.int32)
-            offs = np.frombuffer(bufs[1], dtype=odt, count=n + 1, offset=blob.offset * width)
-            raw = memoryview(bufs[2]) if bufs[2] is not None else memoryview(b"")
-            clip_ids = batch.column(names.index("clip_id")).to_pylist()
-            srs = batch.column(names.index("sr_hz")).to_numpy(zero_copy_only=False)
-            codecs = batch.column(names.index("codec")).to_pylist()
-            scratch: dict = {}
-            row_valid = (
-                blob.is_valid().to_numpy(zero_copy_only=False) if blob.null_count else None
-            )
-            for i in range(n):
-                if row_valid is not None and not row_valid[i]:
-                    continue
-                s0, s1 = int(offs[i]), int(offs[i + 1])
-                c = codecs[i]
-                hdr_sr = None
-                if c == "pcm_s16le":
-                    if (s1 - s0) % 2:
-                        continue
-                    dec = np.frombuffer(raw, dtype="<i2", count=(s1 - s0) // 2, offset=s0)
-                elif c == "wav":
-                    parsed = _parse_wav_header(raw, s0, s1)
-                    if parsed is None:
-                        dec, hdr_sr = decode_pcm(bytes(raw[s0:s1]), "wav")
-                        if dec is None:
-                            continue
-                    else:
-                        d0, d1, hdr_sr = parsed
-                        if (d1 - d0) % 2:
-                            continue
-                        dec = np.frombuffer(raw, dtype="<i2", count=(d1 - d0) // 2, offset=d0)
-                else:
-                    continue
-                frames[i] = len(dec)
-                sr = int(srs[i])
-                if hdr_sr is not None and hdr_sr != sr:
-                    continue
-                ok[i] = True
-                snr[i] = _row_snr(dec, clip_seed(clip_ids[i]), sr, scratch)
-
-        arrays = [batch.column(j) for j, nm in enumerate(names) if nm != "bytes"]
-        out_names = [nm for nm in names if nm != "bytes"]
-        arrays += [pa.array(ok), pa.array(frames), pa.array(snr)]
-        out_names += ["decode_ok", "n_frames", "snr_db"]
-        yield pa.RecordBatch.from_arrays(arrays, out_names)
+def _clip_invariant(dec, sr, scratch, clip_id, sr_hz):
+    """(decode_ok, n_frames, snr_db) of one decoded clip: a header rate
+    that differs from ``sr_hz`` fails the row but keeps its frame
+    count."""
+    if sr != sr_hz:
+        return False, len(dec), -np.inf
+    return True, len(dec), _row_snr(dec, clip_seed(clip_id), sr, scratch)
 
 
 def with_audio_invariant(
@@ -335,42 +324,20 @@ def with_audio_invariant(
     frame_tolerance: int = 1,
     valid_col: str = "audio_valid",
     violations_col: str = "audio_violations",
-    use_arrow: bool = True,
 ) -> DataFrame:
     """Append audio invariant columns (and drop ``bytes``).
 
-    Default path is mapInArrow — the audio payload crosses into Python
-    as borrowed Arrow buffers and is decoded via zero-copy numpy int16
-    views, never as per-row ``bytes`` objects (which cost more than the
-    whole SNR computation at this scale). The projection carries ONLY
-    the needed columns, so Parquet column pruning keeps every other
-    scan bytes-free; Arrow batch size is capped in session.py because
-    rows carry audio payloads.
+    The decode and SNR run in one ``map_decoded`` stage: payloads cross
+    into Python as borrowed Arrow buffers, never as per-row ``bytes``
+    objects (which cost more than the whole SNR computation at this
+    scale). The projection carries ONLY the needed columns, so Parquet
+    column pruning keeps every other scan bytes-free; Arrow batch size
+    is capped in session.py because rows carry audio payloads.
     """
-    if use_arrow:
-        from pyspark.sql import types as _T
-
-        out_fields = [f for f in df.schema.fields if f.name != "bytes"] + [
-            _T.StructField("decode_ok", _T.BooleanType()),
-            _T.StructField("n_frames", _T.LongType()),
-            _T.StructField("snr_db", _T.DoubleType()),
-        ]
-        df = df.mapInArrow(_arrow_audio_batches, _T.StructType(out_fields))
-        decode_ok = F.col("decode_ok")
-        n_frames = F.col("n_frames")
-        snr_db = F.col("snr_db")
-    else:
-        chk = audio_check_udf(F.col("bytes"), F.col("clip_id"), F.col("sr_hz"), F.col("codec"))
-        df = (
-            df.withColumn("_achk", chk)
-            .withColumn("decode_ok", F.col("_achk.decode_ok"))
-            .withColumn("n_frames", F.col("_achk.n_frames"))
-            .withColumn("snr_db", F.col("_achk.snr_db"))
-            .drop("_achk", "bytes")
-        )
-        decode_ok = F.col("decode_ok")
-        n_frames = F.col("n_frames")
-        snr_db = F.col("snr_db")
+    df = map_decoded(df, _clip_invariant, _INVARIANT_FIELDS, columns=("clip_id", "sr_hz"))
+    decode_ok = F.col("decode_ok")
+    n_frames = F.col("n_frames")
+    snr_db = F.col("snr_db")
     expected = (F.col("sr_hz").cast("long") * F.col("dur_ms").cast("long") / 1000).cast("long")
     frames_ok = (n_frames >= expected - frame_tolerance) & (n_frames <= expected + frame_tolerance)
     snr_ok = snr_db >= snr_threshold_db

@@ -36,7 +36,7 @@ import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
-from jschon_spark.audio.features import iter_decoded
+from jschon_spark.audio import iter_decoded
 
 TARGET_RMS_DBFS = -20.0
 PEAK_CEILING_DBFS = -1.0

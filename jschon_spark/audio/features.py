@@ -14,13 +14,13 @@ signal processing, not a hash-based fake:
 - spectrum: dominant frequency, spectral centroid, 85% rolloff and
             flatness from a Hann-windowed rFFT of a bounded window
 
-Execution model matches the audio invariant kernel
-(audio/__init__.py:_arrow_audio_batches): mapInArrow, payload bytes
-enter Python as borrowed Arrow buffers read through zero-copy int16
-views, per-sample math fully vectorized per row (a clip's working set
-is cache-resident — see _row_snr's note on why row-at-a-time beats
-whole-batch concatenation on a bandwidth-starved host). Per-row Python
-is O(1) header work plus ~20 numpy calls.
+Execution model is the one every row-aligned audio stage shares
+(``audio.map_decoded`` over the ``audio.iter_decoded`` walk):
+mapInArrow, payload bytes enter Python as borrowed Arrow buffers read
+through zero-copy views, per-sample math fully vectorized per row (a
+clip's working set is cache-resident — see _row_snr's note on why
+row-at-a-time beats whole-batch concatenation on a bandwidth-starved
+host). Per-row Python is O(1) header work plus ~20 numpy calls.
 
 At the 10^12-row design point this stage is embarrassingly parallel
 (map-only, no shuffle); the output drops ``bytes`` so everything
@@ -35,12 +35,11 @@ reference parity.
 from __future__ import annotations
 
 import numpy as np
-import pyarrow as pa
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from jschon_spark.audio import G711_LUTS, _parse_wav_header, decode_pcm
+from jschon_spark.audio import map_decoded
 
 # dB floor used wherever a log of zero power would otherwise occur
 #  (all-zero payloads, empty frames).
@@ -53,17 +52,20 @@ FFT_WINDOW = 16384
 # 20 ms frames below this RMS level count as silence.
 SILENCE_THRESHOLD_DBFS = -45.0
 
-FEATURE_FIELDS = [
-    ("rms_dbfs", T.DoubleType()),
-    ("peak_dbfs", T.DoubleType()),
-    ("clipping_ratio", T.DoubleType()),
-    ("zero_crossing_rate", T.DoubleType()),
-    ("silence_ratio", T.DoubleType()),
-    ("snr_est_db", T.DoubleType()),
-    ("dominant_freq_hz", T.DoubleType()),
-    ("spectral_centroid_hz", T.DoubleType()),
-    ("spectral_rolloff_hz", T.DoubleType()),
-    ("spectral_flatness", T.DoubleType()),
+FEATURE_FIELDS = [("features_ok", T.BooleanType(), False)] + [
+    (name, T.DoubleType(), np.nan)
+    for name in (
+        "rms_dbfs",
+        "peak_dbfs",
+        "clipping_ratio",
+        "zero_crossing_rate",
+        "silence_ratio",
+        "snr_est_db",
+        "dominant_freq_hz",
+        "spectral_centroid_hz",
+        "spectral_rolloff_hz",
+        "spectral_flatness",
+    )
 ]
 
 # blind SNR: frames quieter than the 10th percentile are "noise",
@@ -158,101 +160,8 @@ def clip_features(x: np.ndarray, sr: int, scratch: dict) -> tuple:
     )
 
 
-def iter_decoded(batch):
-    """Shared zero-copy decode walk for Arrow audio kernels: yields
-    ``(row_index, int16_samples, sample_rate)`` for every decodable row
-    of the batch (pcm_s16le as a direct frombuffer view on the Arrow
-    data buffer; WAV via the allocation-free header parse with a stdlib
-    fallback). Undecodable rows (null payload, odd length, unknown
-    codec, corrupt header) are silently not yielded — callers treat
-    absence as their not-ok state."""
-    names = batch.schema.names
-    blob = batch.column(names.index("bytes"))
-    n = len(blob)
-    bufs = blob.buffers()
-    if not n or bufs[1] is None:
-        return
-    width, odt = (8, np.int64) if pa.types.is_large_binary(blob.type) else (4, np.int32)
-    offs = np.frombuffer(bufs[1], dtype=odt, count=n + 1, offset=blob.offset * width)
-    raw = memoryview(bufs[2]) if bufs[2] is not None else memoryview(b"")
-    srs = batch.column(names.index("sr_hz")).to_numpy(zero_copy_only=False)
-    codecs = batch.column(names.index("codec")).to_pylist()
-    row_valid = blob.is_valid().to_numpy(zero_copy_only=False) if blob.null_count else None
-    for i in range(n):
-        if row_valid is not None and not row_valid[i]:
-            continue
-        s0, s1 = int(offs[i]), int(offs[i + 1])
-        c = codecs[i]
-        sr = int(srs[i])
-        if c == "pcm_s16le":
-            if (s1 - s0) % 2:
-                continue
-            dec = np.frombuffer(raw, dtype="<i2", count=(s1 - s0) // 2, offset=s0)
-        elif c in G711_LUTS:
-            # 8-bit telephony (G.711): one LUT gather on the zero-copy
-            # uint8 view of the Arrow buffer
-            dec = G711_LUTS[c][
-                np.frombuffer(raw, dtype=np.uint8, count=s1 - s0, offset=s0)
-            ]
-        elif c == "wav":
-            parsed = _parse_wav_header(raw, s0, s1)
-            if parsed is None:
-                # slow path: stdlib wave parse, then the IMA ADPCM
-                # (fmt 0x11) container walk — both inside decode_pcm
-                dec, hdr_sr = decode_pcm(bytes(raw[s0:s1]), "wav")
-                if dec is None:
-                    continue
-                if hdr_sr:
-                    sr = hdr_sr
-            else:
-                d0, d1, hdr_sr = parsed
-                if (d1 - d0) % 2:
-                    continue
-                dec = np.frombuffer(raw, dtype="<i2", count=(d1 - d0) // 2, offset=d0)
-                sr = hdr_sr
-        elif c == "adpcm_ima":
-            # 4-bit IMA ADPCM blocks (audio/adpcm.py): block-lane
-            # vectorized scan over a zero-copy uint8 view
-            from jschon_spark.audio.adpcm import decode_ima_adpcm
-
-            dec = decode_ima_adpcm(
-                np.frombuffer(raw, dtype=np.uint8, count=s1 - s0, offset=s0)
-            )
-            if dec is None:
-                continue
-        else:
-            continue
-        yield i, dec, sr
-
-
-def _arrow_feature_batches(batches, keep_bytes: bool = False):
-    """mapInArrow kernel: zero-copy decode (same buffer walk as the
-    invariant kernel) then clip_features per row. Emits every non-bytes
-    input column plus the feature columns (``keep_bytes`` passes the
-    payload through for stages whose survivors feed payload sinks)."""
-    for batch in batches:
-        names = batch.schema.names
-        n = batch.num_rows
-        cols = {name: np.full(n, np.nan, dtype=np.float64) for name, _ in FEATURE_FIELDS}
-        ok = np.zeros(n, dtype=bool)
-
-        scratch: dict = {}
-        for i, dec, sr in iter_decoded(batch):
-            vals = clip_features(dec, sr, scratch)
-            ok[i] = True
-            for (name, _), v in zip(FEATURE_FIELDS, vals):
-                cols[name][i] = v
-
-        arrays = [
-            batch.column(j) for j, nm in enumerate(names) if nm != "bytes" or keep_bytes
-        ]
-        out_names = [nm for nm in names if nm != "bytes" or keep_bytes]
-        arrays.append(pa.array(ok))
-        out_names.append("features_ok")
-        for name, _ in FEATURE_FIELDS:
-            arrays.append(pa.array(cols[name]))
-            out_names.append(name)
-        yield pa.RecordBatch.from_arrays(arrays, out_names)
+def _clip_features_ok(x: np.ndarray, sr: int, scratch: dict) -> tuple:
+    return (True, *clip_features(x, sr, scratch))
 
 
 def with_audio_features(df: DataFrame, keep_bytes: bool = False) -> DataFrame:
@@ -260,15 +169,9 @@ def with_audio_features(df: DataFrame, keep_bytes: bool = False) -> DataFrame:
     ``bytes`` unless ``keep_bytes``). Map-only: no shuffle, audio
     payload never materializes as Python objects, output is
     metadata-sized by default. Select only the columns you need BEFORE
-    calling if the frame is wide — the kernel passes every non-bytes
+    calling if the frame is wide — the stage passes every non-bytes
     column through."""
-    out_fields = [f for f in df.schema.fields if f.name != "bytes" or keep_bytes]
-    out_fields.append(T.StructField("features_ok", T.BooleanType()))
-    out_fields += [T.StructField(name, dt) for name, dt in FEATURE_FIELDS]
-    return df.mapInArrow(
-        lambda batches: _arrow_feature_batches(batches, keep_bytes=keep_bytes),
-        T.StructType(out_fields),
-    )
+    return map_decoded(df, _clip_features_ok, FEATURE_FIELDS, keep_bytes=keep_bytes)
 
 
 def audio_quality_flags(

@@ -11,10 +11,11 @@ perturbations a re-encoded duplicate clip carries.
 
 Scale design (the 100 TB story):
 
-- Sub-fingerprint extraction is the same zero-copy ``mapInArrow``
-  decode walk as audio/features.py: map-only, no shuffle, vectorized
-  numpy (one strided frame matrix + ONE batched rFFT per clip),
-  ``bytes`` dropped on output so downstream is metadata-sized.
+- Sub-fingerprint extraction is the same zero-copy
+  ``audio.map_decoded`` stage as audio/features.py: map-only, no
+  shuffle, vectorized numpy (one strided frame matrix + ONE batched
+  rFFT per clip), ``bytes`` dropped on output so downstream is
+  metadata-sized.
 - Each clip collapses to a 128-bit fingerprint: the frame-band energy
   matrix is split into 4 contiguous time segments and each of the 32
   bits per segment is the sign of the adjacent-band difference of the
@@ -44,12 +45,11 @@ beyond reference parity (SURVEY.md §2.11).
 from __future__ import annotations
 
 import numpy as np
-import pyarrow as pa
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from jschon_spark.audio.features import iter_decoded
+from jschon_spark.audio import map_decoded
 
 # Haitsma–Kalker band layout: 33 log-spaced bands over 300-3000 Hz
 # (paper uses 300-2000; 3000 keeps headroom for the 8 kHz fixtures'
@@ -63,10 +63,10 @@ N_SEGMENTS = 4  # time segments in the 128-bit clip fingerprint
 MIN_FRAMES = N_SEGMENTS + 1  # need >=1 delta row per segment
 
 FINGERPRINT_FIELDS = [
-    ("fingerprint_ok", T.BooleanType()),
-    ("n_subfp", T.IntegerType()),
-    ("audio_fp_a", T.LongType()),
-    ("audio_fp_b", T.LongType()),
+    ("fingerprint_ok", T.BooleanType(), False),
+    ("n_subfp", T.IntegerType(), 0),
+    ("audio_fp_a", T.LongType(), 0),
+    ("audio_fp_b", T.LongType(), 0),
 ]
 
 
@@ -167,64 +167,28 @@ def clip_fingerprint128(e: np.ndarray) -> tuple[int, int] | None:
     return int(a), int(b)
 
 
-def _arrow_fp_batches(keep_subfp: bool, keep_bytes: bool = False):
-    """mapInArrow kernel factory: zero-copy decode → sub-fingerprints →
-    128-bit clip fingerprint. Emits every non-bytes input column plus
-    FINGERPRINT_FIELDS (and the ``subfp`` sequence when asked — only
-    ask when a BER verify stage follows; it is the one per-frame-sized
-    output). ``keep_bytes`` passes the payload through unchanged — for
-    dedup stages whose SURVIVORS flow on to payload consumers."""
-
-    def gen(batches):
-        for batch in batches:
-            names = batch.schema.names
-            n = batch.num_rows
-            ok = np.zeros(n, dtype=bool)
-            n_subfp = np.zeros(n, dtype=np.int32)
-            fp_a = np.zeros(n, dtype=np.int64)
-            fp_b = np.zeros(n, dtype=np.int64)
-            subs: list = [None] * n if keep_subfp else []
-            scratch: dict = {}
-            for i, dec, sr in iter_decoded(batch):
-                e = frame_band_energies(dec, sr, scratch)
-                sub = subfingerprints_from_energies(e)
-                n_subfp[i] = len(sub)
-                if keep_subfp:
-                    subs[i] = sub.view(np.int32)
-                packed = clip_fingerprint128(e)
-                if packed is None:
-                    continue
-                ok[i] = True
-                fp_a[i], fp_b[i] = packed
-            arrays = [
-                batch.column(j)
-                for j, nm in enumerate(names)
-                if nm != "bytes" or keep_bytes
-            ]
-            out_names = [nm for nm in names if nm != "bytes" or keep_bytes]
-            arrays += [pa.array(ok), pa.array(n_subfp), pa.array(fp_a), pa.array(fp_b)]
-            out_names += [name for name, _ in FINGERPRINT_FIELDS]
-            if keep_subfp:
-                arrays.append(pa.array(subs, type=pa.list_(pa.int32())))
-                out_names.append("subfp")
-            yield pa.RecordBatch.from_arrays(arrays, out_names)
-
-    return gen
-
-
 def with_audio_fingerprint(
     df: DataFrame, keep_subfp: bool = False, keep_bytes: bool = False
 ) -> DataFrame:
     """Append the 128-bit spectral fingerprint columns to a clips
     DataFrame (and drop ``bytes`` unless ``keep_bytes``). Map-only, no
-    shuffle; undecodable or too-short rows get fingerprint_ok = false."""
-    out_fields = [f for f in df.schema.fields if f.name != "bytes" or keep_bytes]
-    out_fields += [T.StructField(name, dt) for name, dt in FINGERPRINT_FIELDS]
-    if keep_subfp:
-        out_fields.append(T.StructField("subfp", T.ArrayType(T.IntegerType())))
-    return df.mapInArrow(
-        _arrow_fp_batches(keep_subfp, keep_bytes), T.StructType(out_fields)
+    shuffle; undecodable or too-short rows get fingerprint_ok = false.
+    ``keep_subfp`` adds the ``subfp`` sequence — only ask when a BER
+    verify stage follows; it is the one per-frame-sized output.
+    ``keep_bytes`` passes the payload through unchanged — for dedup
+    stages whose SURVIVORS flow on to payload consumers."""
+    fields = FINGERPRINT_FIELDS + (
+        [("subfp", T.ArrayType(T.IntegerType()), None)] if keep_subfp else []
     )
+
+    def clip(x, sr, scratch):
+        e = frame_band_energies(x, sr, scratch)
+        sub = subfingerprints_from_energies(e)
+        packed = clip_fingerprint128(e)
+        vals = (False, len(sub), 0, 0) if packed is None else (True, len(sub), *packed)
+        return vals + (sub.view(np.int32),) if keep_subfp else vals
+
+    return map_decoded(df, clip, fields, keep_bytes=keep_bytes)
 
 
 def audio_near_duplicates(

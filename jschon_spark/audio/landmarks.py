@@ -53,7 +53,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from jschon_spark.audio.features import iter_decoded
+from jschon_spark.audio import iter_decoded
 
 FRAME = 1024  # samples per analysis frame
 HOP = 256  # 16 ms at 16 kHz — dense enough that trims land near a frame

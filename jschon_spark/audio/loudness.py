@@ -37,10 +37,10 @@ Gating block mean-squares come from one cumulative sum over the
 squared K-weighted signal (400 ms windows, 100 ms hop) — no Python
 per-block loop.
 
-Execution model matches audio/features.py: zero-copy mapInArrow over
-``iter_decoded``, per-row vectorized numpy, ``bytes`` dropped on
-output, map-only (no shuffle) — embarrassingly parallel at the
-10^12-row design point. Per-(sr, nfft) filter responses are memoized
+Execution model matches audio/features.py: one ``audio.map_decoded``
+stage over the zero-copy decode walk, per-row vectorized numpy,
+``bytes`` dropped on output, map-only (no shuffle) — embarrassingly
+parallel at the 10^12-row design point. Per-(sr, nfft) filter responses are memoized
 across the Arrow batch.
 
 Reference scope note: handrews/jschon has no audio surface (pure JSON
@@ -52,12 +52,12 @@ reference parity.
 from __future__ import annotations
 
 import numpy as np
-import pyarrow as pa
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from jschon_spark.audio.features import DB_FLOOR, iter_decoded
+from jschon_spark.audio import map_decoded
+from jschon_spark.audio.features import DB_FLOOR
 
 # BS.1770-4 pre-filter parametrization (public constants; the spec's
 # 48 kHz coefficient table is the bilinear transform of these).
@@ -94,12 +94,13 @@ LRA_REL_GATE_LU = -20.0  # LRA's relative gate (NOT the -10 of integrated)
 LRA_LO_PCT, LRA_HI_PCT = 10.0, 95.0
 
 LOUDNESS_FIELDS = [
-    ("integrated_lufs", T.DoubleType()),
-    ("momentary_max_lufs", T.DoubleType()),
-    ("shortterm_max_lufs", T.DoubleType()),
-    ("loudness_range_lu", T.DoubleType()),
-    ("true_peak_dbtp", T.DoubleType()),
-    ("n_gating_blocks", T.IntegerType()),
+    ("loudness_ok", T.BooleanType(), False),
+    ("integrated_lufs", T.DoubleType(), np.nan),
+    ("momentary_max_lufs", T.DoubleType(), np.nan),
+    ("shortterm_max_lufs", T.DoubleType(), np.nan),
+    ("loudness_range_lu", T.DoubleType(), np.nan),
+    ("true_peak_dbtp", T.DoubleType(), np.nan),
+    ("n_gating_blocks", T.IntegerType(), 0),
 ]
 
 
@@ -251,50 +252,15 @@ def clip_loudness(x: np.ndarray, sr: int, scratch: dict) -> tuple:
     return (integrated, momentary_max, st_max, lra, true_peak_dbtp, int(keep.sum()))
 
 
-def _arrow_loudness_batches(batches, keep_bytes: bool = False):
-    """mapInArrow kernel: zero-copy decode (iter_decoded) then
-    clip_loudness per row. Emits every non-bytes input column plus the
-    loudness columns."""
-    for batch in batches:
-        names = batch.schema.names
-        n = batch.num_rows
-        integ = np.full(n, np.nan)
-        mom = np.full(n, np.nan)
-        stm = np.full(n, np.nan)
-        lra = np.full(n, np.nan)
-        tpk = np.full(n, np.nan)
-        nblk = np.zeros(n, dtype=np.int32)
-        ok = np.zeros(n, dtype=bool)
-        scratch: dict = {}
-        for i, dec, sr in iter_decoded(batch):
-            li, mm, sm, lr, tp, nb = clip_loudness(dec, sr, scratch)
-            ok[i] = True
-            integ[i], mom[i], stm[i], lra[i], tpk[i], nblk[i] = li, mm, sm, lr, tp, nb
-        arrays = [
-            batch.column(j) for j, nm in enumerate(names) if nm != "bytes" or keep_bytes
-        ]
-        out_names = [nm for nm in names if nm != "bytes" or keep_bytes]
-        arrays.append(pa.array(ok))
-        out_names.append("loudness_ok")
-        for arr, (nm, _) in zip(
-            (integ, mom, stm, lra, tpk, nblk.astype(np.int32)), LOUDNESS_FIELDS
-        ):
-            arrays.append(pa.array(arr))
-            out_names.append(nm)
-        yield pa.RecordBatch.from_arrays(arrays, out_names)
+def _clip_loudness_ok(x: np.ndarray, sr: int, scratch: dict) -> tuple:
+    return (True, *clip_loudness(x, sr, scratch))
 
 
 def with_loudness(df: DataFrame, keep_bytes: bool = False) -> DataFrame:
     """Append BS.1770 loudness columns to a clips DataFrame (and drop
     ``bytes`` unless ``keep_bytes``). Map-only: no shuffle, payloads
     stay zero-copy Arrow buffers, output is metadata-sized by default."""
-    out_fields = [f for f in df.schema.fields if f.name != "bytes" or keep_bytes]
-    out_fields.append(T.StructField("loudness_ok", T.BooleanType()))
-    out_fields += [T.StructField(nm, dt) for nm, dt in LOUDNESS_FIELDS]
-    return df.mapInArrow(
-        lambda batches: _arrow_loudness_batches(batches, keep_bytes=keep_bytes),
-        T.StructType(out_fields),
-    )
+    return map_decoded(df, _clip_loudness_ok, LOUDNESS_FIELDS, keep_bytes=keep_bytes)
 
 
 def r128_gain_db(target_lufs: float = -23.0, col: str = "integrated_lufs") -> Column:

@@ -1,8 +1,8 @@
 """Log-mel spectrogram extraction — the standard acoustic front-end a
 speech training pipeline materializes ahead of model training.
 
-Same execution contract as audio/features.py: mapInArrow, zero-copy
-int16 decode (shared ``iter_decoded`` walk), per-clip math fully
+Same execution contract as audio/features.py: one ``audio.map_decoded``
+stage over the shared zero-copy decode walk, per-clip math fully
 vectorized (strided framing → batched rFFT → one matmul against the
 memoized mel filterbank), ``bytes`` dropped from the output so the
 stage is map-only and everything downstream is feature-sized. By
@@ -24,11 +24,10 @@ belongs to the training-data extension mandated beyond reference parity.
 from __future__ import annotations
 
 import numpy as np
-import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
-from jschon_spark.audio.features import iter_decoded
+from jschon_spark.audio import map_decoded
 
 LOG_FLOOR_DB = -100.0
 _FULL_SQ = np.float32(32768.0 * 32768.0)
@@ -119,61 +118,6 @@ def mfcc_from_log_mel(lm: np.ndarray, dct: np.ndarray) -> np.ndarray:
     return lm @ dct.T
 
 
-def _arrow_mel_batches(batches, n_mels, win_ms, hop_ms, emit_frames, n_mfcc):
-    dct = dct_matrix(n_mfcc, n_mels) if n_mfcc else None
-    for batch in batches:
-        names = batch.schema.names
-        n = batch.num_rows
-        ok = np.zeros(n, dtype=bool)
-        n_frames = np.zeros(n, dtype=np.int32)
-        means: list = [None] * n
-        stds: list = [None] * n
-        frames_out: list = [None] * n
-        mf_means: list = [None] * n
-        mf_stds: list = [None] * n
-
-        scratch: dict = {}
-        for i, dec, sr in iter_decoded(batch):
-            lm = log_mel(dec, sr, n_mels, win_ms, hop_ms, scratch)
-            if lm is None:
-                continue
-            ok[i] = True
-            n_frames[i] = lm.shape[0]
-            means[i] = lm.mean(axis=0)
-            stds[i] = lm.std(axis=0)
-            if emit_frames:
-                frames_out[i] = lm
-            if dct is not None:
-                mf = mfcc_from_log_mel(lm, dct)
-                mf_means[i] = mf.mean(axis=0)
-                mf_stds[i] = mf.std(axis=0)
-
-        arrays = [batch.column(j) for j, nm in enumerate(names) if nm != "bytes"]
-        out_names = [nm for nm in names if nm != "bytes"]
-        arrays += [
-            pa.array(ok),
-            pa.array(n_frames, type=pa.int32()),
-            pa.array(means, type=pa.list_(pa.float32())),
-            pa.array(stds, type=pa.list_(pa.float32())),
-        ]
-        out_names += ["mel_ok", "n_frames", "mel_mean", "mel_std"]
-        if dct is not None:
-            arrays += [
-                pa.array(mf_means, type=pa.list_(pa.float32())),
-                pa.array(mf_stds, type=pa.list_(pa.float32())),
-            ]
-            out_names += ["mfcc_mean", "mfcc_std"]
-        if emit_frames:
-            arrays.append(
-                pa.array(
-                    [None if f is None else [row for row in f] for f in frames_out],
-                    type=pa.list_(pa.list_(pa.float32())),
-                )
-            )
-            out_names.append("mel")
-        yield pa.RecordBatch.from_arrays(arrays, out_names)
-
-
 def with_log_mel(
     df: DataFrame,
     n_mels: int = 40,
@@ -188,24 +132,33 @@ def with_log_mel(
     (mfcc_mean/mfcc_std) from the same decoded pass — one extra matmul
     per clip, no second decode. See the module docstring for the
     ``emit_frames`` sizing caveat."""
-    out_fields = [f for f in df.schema.fields if f.name != "bytes"]
-    out_fields += [
-        T.StructField("mel_ok", T.BooleanType()),
-        T.StructField("n_frames", T.IntegerType()),
-        T.StructField("mel_mean", T.ArrayType(T.FloatType())),
-        T.StructField("mel_std", T.ArrayType(T.FloatType())),
+    floats = T.ArrayType(T.FloatType())
+    fields = [
+        ("mel_ok", T.BooleanType(), False),
+        ("n_frames", T.IntegerType(), 0),
+        ("mel_mean", floats, None),
+        ("mel_std", floats, None),
     ]
+    dct = None
     if n_mfcc:
-        out_fields += [
-            T.StructField("mfcc_mean", T.ArrayType(T.FloatType())),
-            T.StructField("mfcc_std", T.ArrayType(T.FloatType())),
-        ]
+        dct = dct_matrix(n_mfcc, n_mels)
+        fields += [("mfcc_mean", floats, None), ("mfcc_std", floats, None)]
     if emit_frames:
-        out_fields.append(T.StructField("mel", T.ArrayType(T.ArrayType(T.FloatType()))))
-    return df.mapInArrow(
-        lambda batches: _arrow_mel_batches(batches, n_mels, win_ms, hop_ms, emit_frames, n_mfcc),
-        T.StructType(out_fields),
-    )
+        fields.append(("mel", T.ArrayType(floats), None))
+
+    def clip(x, sr, scratch):
+        lm = log_mel(x, sr, n_mels, win_ms, hop_ms, scratch)
+        if lm is None:
+            return None
+        vals = [True, lm.shape[0], lm.mean(axis=0), lm.std(axis=0)]
+        if dct is not None:
+            mf = mfcc_from_log_mel(lm, dct)
+            vals += [mf.mean(axis=0), mf.std(axis=0)]
+        if emit_frames:
+            vals.append(list(lm))
+        return vals
+
+    return map_decoded(df, clip, fields)
 
 
 def with_mfcc(

@@ -9,8 +9,8 @@ by RMS level against the same silence gate the feature extractor uses
 segments, sub-``min_gap_ms`` pauses are bridged, and sub-
 ``min_segment_ms`` blips are dropped.
 
-Execution model matches audio/features.py: one map-only ``mapInArrow``
-stage (zero-copy int16 views via ``features.iter_decoded``), per-row
+Execution model matches audio/features.py: one map-only
+``audio.map_decoded`` stage over the zero-copy decode walk, per-row
 numpy, no shuffle — embarrassingly parallel at the 10^12-row design
 point.  The segment list rides along as an
 ``array<struct<start_ms,end_ms>>`` column; ``segment_chunk_plan``
@@ -25,12 +25,12 @@ beyond reference parity.
 from __future__ import annotations
 
 import numpy as np
-import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from jschon_spark.audio.features import SILENCE_THRESHOLD_DBFS, iter_decoded
+from jschon_spark.audio import map_decoded
+from jschon_spark.audio.features import SILENCE_THRESHOLD_DBFS
 
 FRAME_MS = 20
 
@@ -81,37 +81,19 @@ def speech_segments_np(
     return out
 
 
-_SEG_TYPE = pa.list_(
-    pa.struct([pa.field("start_ms", pa.int64()), pa.field("end_ms", pa.int64())])
-)
-
-
-def _make_seg_kernel(frame_ms, threshold_dbfs, min_gap_ms, min_segment_ms):
-    def kernel(batches):
-        for batch in batches:
-            names = batch.schema.names
-            n = batch.num_rows
-            ok = np.zeros(n, dtype=bool)
-            segs: list = [None] * n
-            speech_ms = np.zeros(n, dtype=np.int64)
-            for i, dec, sr in iter_decoded(batch):
-                ss = speech_segments_np(
-                    dec, sr, frame_ms, threshold_dbfs, min_gap_ms, min_segment_ms
-                )
-                ok[i] = True
-                segs[i] = [{"start_ms": a, "end_ms": b} for a, b in ss]
-                speech_ms[i] = sum(b - a for a, b in ss)
-            arrays = [batch.column(j) for j, nm in enumerate(names) if nm != "bytes"]
-            out_names = [nm for nm in names if nm != "bytes"]
-            arrays += [
-                pa.array(ok),
-                pa.array(segs, type=_SEG_TYPE),
-                pa.array(speech_ms),
-            ]
-            out_names += ["segments_ok", "segments", "speech_ms"]
-            yield pa.RecordBatch.from_arrays(arrays, out_names)
-
-    return kernel
+_SEGMENT_FIELDS = [
+    ("segments_ok", T.BooleanType(), False),
+    (
+        "segments",
+        T.ArrayType(
+            T.StructType(
+                [T.StructField("start_ms", T.LongType()), T.StructField("end_ms", T.LongType())]
+            )
+        ),
+        None,
+    ),
+    ("speech_ms", T.LongType(), 0),
+]
 
 
 def with_speech_segments(
@@ -125,26 +107,12 @@ def with_speech_segments(
     DataFrame and drop ``bytes``.  Map-only, zero-copy decode; output
     is metadata-sized.  ``segments`` is null (not empty) for rows whose
     payload doesn't decode."""
-    out_fields = [f for f in df.schema.fields if f.name != "bytes"]
-    out_fields += [
-        T.StructField("segments_ok", T.BooleanType()),
-        T.StructField(
-            "segments",
-            T.ArrayType(
-                T.StructType(
-                    [
-                        T.StructField("start_ms", T.LongType()),
-                        T.StructField("end_ms", T.LongType()),
-                    ]
-                )
-            ),
-        ),
-        T.StructField("speech_ms", T.LongType()),
-    ]
-    return df.mapInArrow(
-        _make_seg_kernel(frame_ms, threshold_dbfs, min_gap_ms, min_segment_ms),
-        T.StructType(out_fields),
-    )
+
+    def clip(x, sr, scratch):
+        ss = speech_segments_np(x, sr, frame_ms, threshold_dbfs, min_gap_ms, min_segment_ms)
+        return True, [{"start_ms": a, "end_ms": b} for a, b in ss], sum(b - a for a, b in ss)
+
+    return map_decoded(df, clip, _SEGMENT_FIELDS)
 
 
 def segment_chunk_plan(

@@ -8,7 +8,6 @@ Scale design (the 100 TB story):
   pass per document (byte-window shingle packing + splitmix mixing —
   no per-shingle string objects; measured ~40x over the JVM HOF form
   on this host, where UTF8String allocation costs ~10us/shingle);
-  pure-Column variants are kept for SQL-oracle parity;
 - LSH banding turns the O(n²) pair problem into an equi-join on
   (band, band_hash), which Spark shuffles hash-partitioned — only
   same-bucket candidates ever meet; the self-join is hinted
@@ -25,7 +24,6 @@ Scale design (the 100 TB story):
 
 from __future__ import annotations
 
-from typing import Sequence
 
 import numpy as np
 import pandas as pd
@@ -33,7 +31,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from jschon_spark.operators.text import char_ngrams, word_ngrams
+from jschon_spark.operators.text import word_ngrams
 
 # -- exact ------------------------------------------------------------------
 
@@ -64,17 +62,7 @@ def exact_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -
     return df.join(keep, on=id_col, how="semi")
 
 
-# -- MinHash + LSH ----------------------------------------------------------
-
-
-def shingle_hashes(shingles: Column) -> Column:
-    """One string-hash pass: shingle → xxhash64 long. Every downstream
-    permutation works on these longs — the strings are hashed exactly
-    once per document."""
-    return F.transform(shingles, lambda s: F.xxhash64(s))
-
-
-# -- vectorized shingle hashing (Arrow) -------------------------------------
+# -- MinHash + LSH: vectorized shingle hashing (Arrow) ----------------------
 #
 # Materializing shingle substrings JVM-side costs ~10us per shingle on
 # this host (UTF8String allocation churn): ~19s just to shingle 5k short
@@ -196,34 +184,6 @@ def shingle_hash_udf(shingle_size: int):
     return _SHINGLE_UDFS[shingle_size]
 
 
-def minhash_signature_from_hashes(hashes: Column, n_perm: int = 16) -> Column:
-    """n_perm minhash components over pre-hashed shingles: permutation i
-    re-hashes the 8-byte long with seed i (xxhash64 over a long is a
-    handful of ALU ops — no per-permutation scan of the shingle string,
-    which is what made the naive form ~10x slower). Long-multiply
-    bijections would be cheaper still but overflow-throw under ANSI
-    mode (Spark 4 default)."""
-    def perm(i: int):
-        # closure factory — a second lambda param (even defaulted) is
-        # bound to the HOF's element-index column by pyspark
-        return lambda h: F.xxhash64(h, F.lit(i))
-
-    return F.array(*[F.array_min(F.transform(hashes, perm(i))) for i in range(n_perm)])
-
-
-def minhash_signature(shingles: Column, n_perm: int = 16) -> Column:
-    return minhash_signature_from_hashes(shingle_hashes(shingles), n_perm)
-
-
-def _minhash_row(h: np.ndarray, consts: np.ndarray) -> np.ndarray:
-    if len(h) == 0:
-        return np.zeros(len(consts), dtype=np.int64)
-    hu = h.astype(np.uint64)
-    return (
-        _mix64(hu[:, None] ^ consts[None, :]).min(axis=0).astype(np.int64)
-    )
-
-
 _MINHASH_UDFS: dict = {}
 
 
@@ -251,12 +211,6 @@ def minhash_udf(n_perm: int = 16, shingle_size: int = 5):
 
         _MINHASH_UDFS[key] = f
     return _MINHASH_UDFS[key]
-
-
-def with_minhash(
-    df: DataFrame, text_col: str = "text", out: str = "minhash", n_perm: int = 16, shingle_size: int = 5
-) -> DataFrame:
-    return df.withColumn(out, minhash_udf(n_perm, shingle_size)(F.col(text_col)))
 
 
 def lsh_candidate_pairs(
@@ -523,53 +477,6 @@ def length_bucket_pairs(
 
 
 # -- SimHash ----------------------------------------------------------------
-
-
-def _bit_weights(n_bits: int) -> Column:
-    # literal [1, 2, 4, ..., 2^62, MIN_LONG]: weight of bit j as a signed
-    # long (bit 63 is the two's-complement sign bit)
-    ws = [(1 << j) if j < 63 else -(1 << 63) for j in range(n_bits)]
-    return F.array(*[F.lit(w).cast("long") for w in ws])
-
-
-def simhash64_from_hashes(hashes: Column, n_bits: int = 64) -> Column:
-    """64-bit SimHash over pre-hashed shingles, entirely JVM-side
-    integer ops: one ``aggregate`` pass accumulates per-bit set counts
-    (``h & 2^j != 0`` via ``zip_with`` against a literal powers array),
-    then a second ``zip_with`` packs the majority votes back into a
-    long. Deliberately a COMPACT expression tree — an unrolled
-    per-bit-filter variant is the same arithmetic but ~10x the
-    generated code, and Janino compile time dominates at that size."""
-    weights = _bit_weights(n_bits)
-    zero = F.array_repeat(F.lit(0).cast("long"), n_bits)
-    counts = F.aggregate(
-        hashes,
-        zero,
-        lambda acc, h: F.zip_with(
-            acc,
-            weights,
-            lambda a, w: a
-            + F.when(h.bitwiseAND(w) != 0, F.lit(1).cast("long")).otherwise(F.lit(0).cast("long")),
-        ),
-    )
-    n = F.size(hashes)
-    votes = F.zip_with(
-        counts, weights, lambda c, w: F.when(c * 2 > n, w).otherwise(F.lit(0).cast("long"))
-    )
-    return F.aggregate(votes, F.lit(0).cast("long"), lambda acc, v: acc + v)
-
-
-def simhash64(text: Column, shingle_size: int = 4, n_bits: int = 64) -> Column:
-    return simhash64_from_hashes(shingle_hashes(char_ngrams(text, shingle_size)), n_bits)
-
-
-def _simhash_row(h: np.ndarray, shifts: np.ndarray) -> int:
-    if len(h) == 0:
-        return 0
-    hu = h.astype(np.uint64)
-    bits = ((hu[:, None] >> shifts) & np.uint64(1)).sum(axis=0)
-    maj = (bits * 2 > len(hu)).astype(np.uint64)
-    return int(np.int64((maj << shifts).sum(dtype=np.uint64).astype(np.int64)))
 
 
 def _dedup_segments(

@@ -141,22 +141,6 @@ def duplicate_keys(df: DataFrame, key: str | Sequence[str]) -> DataFrame:
     )
 
 
-def uniqueness_violations(df: DataFrame, key: str = "clip_id", id_cols: Optional[Sequence[str]] = None) -> DataFrame:
-    """The offending rows themselves: semi-join against the (tiny)
-    duplicate-key set — broadcast so no full-table shuffle."""
-    dups = duplicate_keys(df, key)
-    sel = list(id_cols) if id_cols else [key]
-    return df.select(*sel).join(F.broadcast(dups.select(key)), on=key, how="semi")
-
-
-def uniqueness_summary(df: DataFrame, key: str = "clip_id") -> DataFrame:
-    dups = duplicate_keys(df, key)
-    return dups.agg(
-        F.count(F.lit(1)).alias("n_duplicate_keys"),
-        F.coalesce(F.sum(F.col("n_occurrences") - 1), F.lit(0)).alias("n_excess_rows"),
-    )
-
-
 # -- referential (≙ $ref-style cross-record constraint) ---------------------
 
 BROADCAST_ROW_THRESHOLD = 20_000_000
@@ -197,21 +181,6 @@ def referential_check(
     if est is not None and est <= broadcast_rows:
         dim_keys = F.broadcast(dim_keys)
     return fact.join(dim_keys, on=fact_key, how="left_anti")
-
-
-def referential_violations(
-    fact: DataFrame, dim: DataFrame, fact_key: str, dim_key: Optional[str] = None, **kw
-) -> DataFrame:
-    """Anti-join projected to `basic`-style violation rows (≙ failed
-    $ref, reference jschon/vocabulary/core.py:82-103)."""
-    orphans = referential_check(fact, dim, fact_key, dim_key, **kw)
-    return orphans.select(
-        F.col(fact_key),
-        F.lit("/" + fact_key).alias("instance_path"),
-        F.lit("/$ref").alias("keyword_path"),
-        F.lit("$ref").alias("keyword"),
-        F.lit(f"no matching row for {fact_key}").alias("error"),
-    )
 
 
 def transcript_checks(

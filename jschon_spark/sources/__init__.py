@@ -1,34 +1,6 @@
-"""Source readers.
-
-Parquet today; the clips table layout is Iceberg-format-ready (directory
-partitioning on part_id ≙ the Iceberg partition spec — no Iceberg jars
-in the sandbox, SURVEY.md §7.1), isolated behind these functions so a
-catalog-table swap is one-line.
+"""Sources beyond plain Parquet: WebDataset-style tar shards
+(``sources.webdataset``). Clip, transcript and TPC-H-shaped tables are
+read with ``spark.read.parquet``; the clips layout is
+Iceberg-format-ready (directory partitioning on part_id ≙ the Iceberg
+partition spec, SURVEY.md §7.1).
 """
-
-from __future__ import annotations
-
-import os
-
-from pyspark.sql import DataFrame, SparkSession
-
-TPCH_TABLES = [
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
-]
-
-
-def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
-
-
-def read_tables(spark: SparkSession, sf_dir: str, names=None) -> dict[str, DataFrame]:
-    return {n: read_table(spark, sf_dir, n) for n in (names or TPCH_TABLES)}
-
-
-def read_clips(spark: SparkSession, fixture_dir: str) -> DataFrame:
-    return spark.read.parquet(os.path.join(fixture_dir, "clips.parquet"))
-
-
-def read_transcripts(spark: SparkSession, fixture_dir: str) -> DataFrame:
-    return spark.read.parquet(os.path.join(fixture_dir, "transcripts.parquet"))

@@ -108,11 +108,6 @@ def group_samples(members: DataFrame) -> DataFrame:
     )
 
 
-def sample_part(parts_col, ext: str):
-    """Column accessor for one member of a grouped sample."""
-    return parts_col.getItem(ext)
-
-
 def write_tar_shards(
     members: DataFrame,
     out_dir: str,

@@ -1,8 +1,10 @@
 """IMA ADPCM codec (audio/adpcm.py): block-lane-vectorized decode
 pinned bit-identical against a textbook scalar decoder, round-trip SNR
 gates, the fmt-0x11 WAV container walk, malformed payloads, and the
-full Spark feature stage over adpcm_ima clips (the codec flows through
-iter_decoded, so every audio operator accepts it)."""
+full Spark feature stage over adpcm_ima clips. The codec flows through
+``decode_pcm`` and the one ``audio.iter_decoded`` walk, so every audio
+operator accepts it; tests/test_clips_pipeline.py pins the SNR
+invariant's decode of it."""
 
 import numpy as np
 import pytest

@@ -141,14 +141,18 @@ def test_manifest_resume(spark, clips_df, tmp_path):
 def test_audio_adversarial_payloads(spark):
     """Malformed payloads must produce decode violations, never crash
     the job (the reference raises at load; at table scale every bad row
-    is a violation row — SURVEY §1.4)."""
+    is a violation row — SURVEY §1.4). The invariant decodes exactly
+    the payloads every other audio stage decodes, G.711 and IMA ADPCM
+    included."""
     import io
     import struct
     import wave
 
     import numpy as np
 
-    from jschon_spark.audio import with_audio_invariant
+    from jschon_spark.audio import ALAW_LUT, MULAW_LUT, with_audio_invariant
+    from jschon_spark.audio.adpcm import encode_ima_adpcm, wav_ima_bytes
+    from jschon_spark.audio.features import with_audio_features
     from jschon_spark.fixtures import clip_seed, synth_pcm
 
     def wav_bytes(samples, sr, nch=1):
@@ -160,7 +164,19 @@ def test_audio_adversarial_payloads(spark):
             w.writeframes(samples.astype("<i2").tobytes())
         return buf.getvalue()
 
-    good = synth_pcm(clip_seed("clip-aa"), 16000, 1600)  # 100 ms @ 16 kHz
+    def signal(cid):
+        # the reference signal the SNR check re-synthesizes for the row
+        return synth_pcm(clip_seed(cid), 16000, 1600)  # 100 ms @ 16 kHz
+
+    def companded(x, lut):
+        # nearest-code G.711 encode over the decode table (tests/test_g711.py)
+        order = np.argsort(lut)
+        vals = lut[order].astype(np.int32)
+        idx = np.clip(np.searchsorted(vals, x), 1, 255)
+        lower = (x - vals[idx - 1]) < (vals[idx] - x)
+        return order[np.where(lower, idx - 1, idx)].astype(np.uint8).tobytes()
+
+    good = signal("clip-aa")
     stereo = np.repeat(good, 2)
     rows = [
         ("clip-aa", good.tobytes(), 16000, 100, "pcm_s16le"),  # pristine
@@ -171,20 +187,40 @@ def test_audio_adversarial_payloads(spark):
         ("clip-af", wav_bytes(stereo, 16000, nch=2), 16000, 100, "wav"),  # stereo
         ("clip-ag", wav_bytes(good, 8000), 16000, 100, "wav"),  # header sr mismatch
         ("clip-ah", b"", 16000, 100, "pcm_s16le"),  # empty → 0 frames
+        ("clip-ai", companded(signal("clip-ai"), MULAW_LUT), 16000, 100, "pcm_mulaw"),
+        ("clip-aj", companded(signal("clip-aj"), ALAW_LUT), 16000, 100, "pcm_alaw"),
+        ("clip-ak", encode_ima_adpcm(signal("clip-ak")), 16000, 100, "adpcm_ima"),
+        # IMA ADPCM WAV (the stdlib-fallback walk) whose header says 0 Hz
+        ("clip-al", wav_ima_bytes(signal("clip-al"), 0), 16000, 100, "wav"),
     ]
     df = spark.createDataFrame(
         [(r[0], r[1], r[2], r[3], r[4], 0) for r in rows],
         "clip_id string, bytes binary, sr_hz int, dur_ms int, codec string, part_id int",
     )
     out = {r.clip_id: r for r in with_audio_invariant(df).collect()}
-    assert out["clip-aa"].audio_valid is True
-    for cid in ("clip-ab", "clip-ac", "clip-ad", "clip-ae", "clip-af", "clip-ag", "clip-ah"):
+    for cid in ("clip-aa", "clip-ai", "clip-aj"):
+        assert out[cid].audio_valid is True, cid
+    for cid in ("clip-ai", "clip-aj"):
+        assert out[cid].snr_db >= 30.0, (cid, out[cid].snr_db)
+    for cid in ("clip-ab", "clip-ac", "clip-ad", "clip-ae", "clip-af", "clip-ag", "clip-ah", "clip-al"):
         assert out[cid].audio_valid is False, cid
         kws = {v.keyword for v in out[cid].audio_violations}
         assert kws, cid
     # decode failures vs frame-count failures are distinguished
     assert {v.keyword for v in out["clip-ae"].audio_violations} == {"decode"}
     assert {v.keyword for v in out["clip-ah"].audio_violations} == {"frames"}
+    assert out["clip-ak"].decode_ok is True
+    assert "decode" not in {v.keyword for v in out["clip-ak"].audio_violations}
+    # a header rate that differs from sr_hz fails the row but keeps its
+    # frame count — 0 Hz included
+    for cid in ("clip-ag", "clip-al"):
+        assert out[cid].decode_ok is False and out[cid].n_frames == 1600, cid
+    # one walk: the invariant decodes exactly the rows the feature stage
+    # decodes, except where a header rate disagrees with sr_hz
+    feats = {r.clip_id: r.features_ok for r in with_audio_features(df).collect()}
+    for cid, r in out.items():
+        if cid not in ("clip-ag", "clip-al"):
+            assert r.decode_ok == feats[cid], cid
 
 
 def test_drift_statistics_matches_numpy_reference(spark):

@@ -232,3 +232,23 @@ def test_sequence_assembly_groupby_reuses_bucket_partitioning(spark):
     plan = _plan(assemble_sequences(df, budget=8, n_buckets=4))
     assert plan.count("Exchange") == 1, plan
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan, plan
+
+
+def test_one_arrow_decode_walk():
+    """Every audio stage decodes through ``audio.iter_decoded``: Arrow
+    binary-buffer access (``.buffers()``) appears nowhere else in the
+    package, and the audio module keeps no pandas-UDF fork of the walk."""
+    import ast
+    import pathlib
+
+    import jschon_spark
+
+    root = pathlib.Path(jschon_spark.__file__).parent
+    sites = []
+    for path in sorted(root.rglob("*.py")):
+        for top in ast.parse(path.read_text()).body:
+            for node in ast.walk(top):
+                if isinstance(node, ast.Call) and getattr(node.func, "attr", None) == "buffers":
+                    sites.append((str(path.relative_to(root)), getattr(top, "name", None)))
+    assert sites == [("audio/__init__.py", "iter_decoded")], sites
+    assert "pandas_udf" not in (root / "audio" / "__init__.py").read_text()
