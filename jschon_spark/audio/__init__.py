@@ -168,8 +168,9 @@ def iter_decoded(batch):
     slices of the binary column's value buffer, never per-row ``bytes``
     objects; only a WAV that the header walk cannot place is copied for
     the stdlib parse. ``sample_rate`` is the WAV header's rate when the
-    payload has one, else ``sr_hz``. Undecodable rows are not yielded —
-    callers treat absence as their not-ok state."""
+    payload has one, else ``sr_hz``. Undecodable rows, and headerless
+    rows whose ``sr_hz`` is null, are not yielded — callers treat
+    absence as their not-ok state."""
     names = batch.schema.names
     blob = batch.column(names.index("bytes"))
     n = len(blob)
@@ -197,7 +198,11 @@ def iter_decoded(batch):
             dec, hdr_sr = decode_pcm(bytes(raw[s0:s1]) if c == "wav" else raw[s0:s1], c)
         if dec is None:
             continue
-        yield i, dec, int(srs[i]) if hdr_sr is None else hdr_sr
+        if hdr_sr is None:
+            if np.isnan(srs[i]):  # a null sr_hz arrives as NaN
+                continue
+            hdr_sr = int(srs[i])
+        yield i, dec, hdr_sr
 
 
 def map_decoded(
@@ -255,7 +260,8 @@ def _row_snr(decoded: np.ndarray, seed: int, sr: int, scratch: dict) -> float:
     quantization step of the generator's float64 path.
     """
     n = len(decoded)
-    if n == 0:
+    if n == 0 or sr <= 0:
+        # nothing to compare, or no reference signal at a rate of 0 Hz
         return float("-inf")
     seed_u = np.uint64(seed)
     freq = int(_splitmix64_arr(np.asarray(seed_u)) % np.uint64(2000)) + 100

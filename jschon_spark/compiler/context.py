@@ -202,6 +202,12 @@ def leaf(ctx: Ctx, keyword: str, pred: Column, error: Column | str, applies: Col
     """
     applies = ctx.col.isNotNull() if applies is None else applies
     valid = F.when(applies, F.coalesce(pred, F.lit(False))).otherwise(F.lit(True))
+    return assertion(ctx, keyword, valid, error)
+
+
+def assertion(ctx: Ctx, keyword: str, valid: Column, error: Column | str) -> Compiled:
+    """The result node of one assertion keyword: ``valid``, plus one
+    violation row for ``keyword`` at ``ctx`` where it is false."""
     viols = F.when(~valid, F.array(make_violation(ctx, keyword, error))).otherwise(
         empty_violations()
     )

@@ -47,6 +47,7 @@ from pyspark.sql import types as T
 from jschon_spark.compiler.context import (
     Compiled,
     Ctx,
+    assertion,
     combine,
     concat_viols,
     empty_violations,
@@ -1058,11 +1059,7 @@ class Compiler:
         valid = F.when(ctx.col.isNull(), F.lit("null" in types)).otherwise(
             F.coalesce(_true(nonnull_ok), F.lit(False))
         )
-        err = f"the instance must be of type {types}"
-        viols = F.when(~valid, F.array(make_violation(ctx, "type", err))).otherwise(
-            empty_violations()
-        )
-        return Compiled(valid, viols)
+        return assertion(ctx, "type", valid, f"the instance must be of type {types}")
 
     def _eq_literal(self, dtype: T.DataType, col: Column, v: Any) -> Column:
         """Deep equality of a column against a JSON literal (reference
@@ -1169,19 +1166,11 @@ class Compiler:
         valid = eqs[0] if eqs else F.lit(False)
         for e in eqs[1:]:
             valid = valid | e
-        err = "the value must be one of the enumerated values"
-        viols = F.when(~valid, F.array(make_violation(ctx, "enum", err))).otherwise(
-            empty_violations()
-        )
-        return Compiled(valid, viols)
+        return assertion(ctx, "enum", valid, "the value must be one of the enumerated values")
 
     def _k_const(self, value, schema, ctx: Ctx, results) -> Compiled:
         valid = F.coalesce(self._eq_literal(ctx.dtype, ctx.col, value), F.lit(False))
-        err = "the value must be equal to the constant"
-        viols = F.when(~valid, F.array(make_violation(ctx, "const", err))).otherwise(
-            empty_violations()
-        )
-        return Compiled(valid, viols)
+        return assertion(ctx, "const", valid, "the value must be equal to the constant")
 
     def _k_multipleOf(self, value, schema, ctx: Ctx, results) -> Optional[Compiled]:
         if not is_numeric(ctx.dtype):
@@ -1398,15 +1387,7 @@ class Compiler:
         resolve_per_entry: bool = False,
     ) -> Compiled:
         """Apply ``sub`` to every map value whose key matches the
-        include/exclude filters, via HOFs over map_entries.
-
-        ``resolve_per_entry``: True when the reference opens a subresult
-        node PER APPLICATION (patternProperties, applicator.py:285) —
-        pending noassert-if viols then resolve under each entry's own
-        outcome. False when applications evaluate directly into the
-        keyword's node (additionalProperties, applicator.py:320) — the
-        pending viols are exported via ``cond`` for the caller to
-        resolve under the whole keyword node's validity."""
+        include/exclude filters (see ``_fold`` for ``resolve_per_entry``)."""
 
         def key_selected(k: Column) -> Column:
             cond = F.lit(True)
@@ -1418,62 +1399,7 @@ class Compiler:
                 cond = cond & ~k.rlike(rx)
             return cond
 
-        vtype = ctx.dtype.valueType
-
-        def child(e: Column) -> Compiled:
-            cctx = ctx.child(
-                e.getField("value"),
-                vtype,
-                F.concat(ctx.path, F.lit("/"), escape_pointer_col(e.getField("key"))),
-                spath_suffix,
-            )
-            return self.apply(sub, _replace(cctx, no_trace=True))
-
-        # cv-field presence decided statically at expression build —
-        # if-free subschemas skip the extra field + flatten (see
-        # _per_element)
-        state: dict[str, bool] = {}
-
-        def entry(e: Column) -> Column:
-            # compile the subschema ONCE per entry — calling child(e)
-            # for .valid and .viols separately would duplicate the whole
-            # compiled expression tree inside the lambda (Catalyst CSE
-            # does not dedupe lambda subtrees)
-            c = child(e)
-            if resolve_per_entry:
-                c = resolve_node(c)
-            state["has_cond"] = has_cond = c.cond is not None
-            fields = [c.valid.alias("ok"), c.viols.alias("v")]
-            pass_fields = [F.lit(True).alias("ok"), empty_violations().alias("v")]
-            if has_cond:
-                fields.append(c.cond.alias("cv"))
-                pass_fields.append(empty_violations().alias("cv"))
-            return F.when(
-                key_selected(e.getField("key")), F.struct(*fields)
-            ).otherwise(F.struct(*pass_fields))
-
-        per_entry = F.transform(F.map_entries(ctx.col), entry)
-        valid = F.coalesce(
-            F.forall(per_entry, lambda s: s.getField("ok")), F.lit(True)
-        )
-        viols = F.coalesce(
-            F.flatten(F.transform(per_entry, lambda s: s.getField("v"))),
-            empty_violations(),
-        )
-        applies = ctx.col.isNotNull()
-        if state.get("has_cond"):
-            cond = F.coalesce(
-                F.flatten(F.transform(per_entry, lambda s: s.getField("cv"))),
-                empty_violations(),
-            )
-            cond = F.when(applies, cond).otherwise(empty_violations())
-        else:
-            cond = None
-        return Compiled(
-            F.when(applies, valid).otherwise(F.lit(True)),
-            F.when(applies, viols).otherwise(empty_violations()),
-            cond,
-        )
+        return self._fold(ctx, sub, spath_suffix, gate=key_selected, resolve=resolve_per_entry)
 
     def _k_additionalProperties(self, value, schema, ctx: Ctx, results) -> Optional[Compiled]:
         known = set((schema.get("properties") or {}).keys())
@@ -1492,13 +1418,9 @@ class Compiler:
                 parts.append(gate_compiled(c, present))
             return resolve_node(combine(parts)) if parts else None
         if isinstance(ctx.dtype, T.MapType):
-            return resolve_node(self._map_entries_check(
-                ctx,
-                value,
-                "/additionalProperties",
-                exclude_keys=known,
-                exclude_rlikes=patterns,
-            ))
+            return self._map_entries_check(
+                ctx, value, "/additionalProperties", exclude_keys=known, exclude_rlikes=patterns
+            )
         return None
 
     def _k_propertyNames(self, value, schema, ctx: Ctx, results) -> Optional[Compiled]:
@@ -1516,39 +1438,7 @@ class Compiler:
                 parts.append(gate_compiled(c, present))
             return resolve_node(combine(parts)) if parts else None
         if isinstance(ctx.dtype, T.MapType):
-            state: dict[str, bool] = {}
-
-            def child(k: Column) -> Column:
-                cctx = ctx.child(k, T.StringType(), F.concat(ctx.path, F.lit("/"), escape_pointer_col(k)), "/propertyNames")
-                c = self.apply(value, _replace(cctx, no_trace=True))
-                state["has_cond"] = c.cond is not None
-                fields = [c.valid.alias("ok"), c.viols.alias("v")]
-                if c.cond is not None:
-                    fields.append(c.cond.alias("cv"))
-                return F.struct(*fields)
-
-            per_key = F.transform(F.map_keys(ctx.col), child)
-            valid = F.coalesce(F.forall(per_key, lambda s: s.getField("ok")), F.lit(True))
-            viols = F.coalesce(
-                F.flatten(F.transform(per_key, lambda s: s.getField("v"))),
-                empty_violations(),
-            )
-            applies = ctx.col.isNotNull()
-            if state.get("has_cond"):
-                cond = F.coalesce(
-                    F.flatten(F.transform(per_key, lambda s: s.getField("cv"))),
-                    empty_violations(),
-                )
-                cond = F.when(applies, cond).otherwise(empty_violations())
-            else:
-                cond = None
-            return resolve_node(
-                Compiled(
-                    F.when(applies, valid).otherwise(F.lit(True)),
-                    F.when(applies, viols).otherwise(empty_violations()),
-                    cond,
-                )
-            )
+            return self._fold(ctx, value, "/propertyNames", keys=True)
         return None
 
     # -- array applicators -------------------------------------------------
@@ -1571,82 +1461,93 @@ class Compiler:
             parts.append(gate_compiled(resolve_node(c), applies))
         return combine(parts) if parts else None
 
-    def _per_element(
+    def _fold(
         self,
         ctx: Ctx,
         sub: Any,
         spath_suffix: str,
-        start: int = 0,
-        skip_fn: Optional[Callable[[Column, Column], Column]] = None,
-    ) -> tuple[Column, Column, Optional[Column]]:
-        """(valid, viols, cond) of ``sub`` applied to elements [start:] —
-        single HOF pass building struct(ok, v, cv) per element. ``cond``
-        carries the elements' pending noassert-if viols (Compiled.cond);
-        the CALLER is the result node and owns their invalid gate.
+        *,
+        keys: bool = False,
+        gate: Optional[Callable[..., Column]] = None,
+        resolve: bool = False,
+        applies: Optional[Column] = None,
+    ) -> Compiled:
+        """``sub`` applied to every item of the instance: an array's
+        elements, a map's entries or (``keys``) a map's keys — the
+        reference evaluates each into a child result node
+        (applicator.py: items :174-187, patternProperties :285,
+        additionalProperties :320, unevaluatedProperties :333-365).
 
-        ``skip_fn(x, i)`` — optional per-element gate: elements for which
-        it returns true pass vacuously (used by unevaluatedItems to skip
-        elements covered by sibling annotations)."""
+        One HOF pass builds struct(ok, v, cv) per item, compiling the
+        subschema ONCE per lambda (Catalyst CSE does not dedupe lambda
+        subtrees). The lambda is built once over a symbolic variable, so
+        whether the subschema exports pending if-viols is known
+        statically after that build: if-free subschemas (the common
+        case) skip the cv field and its flatten pass.
 
-        # HOF lambdas are built ONCE (symbolic variable), so whether the
-        # subschema produces pending if-viols is known statically after
-        # the first build — if-free subschemas (the common case) skip
-        # the cv field and its flatten pass entirely
+        ``gate`` receives ``(x, i)`` for an array and the key for a map;
+        items it rejects pass vacuously. ``resolve`` resolves each
+        item's pending if-viols under that item's own outcome (a
+        subresult node PER APPLICATION, patternProperties); otherwise
+        they resolve under the whole keyword node's validity. The node
+        applies where ``applies`` holds (default: instance not null)."""
         state: dict[str, bool] = {}
 
-        def mk(x: Column, i: Column) -> Column:
-            cctx = ctx.element(x, i)
-            cctx = _replace(cctx, spath=ctx.spath + spath_suffix, no_trace=True)
-            c = self.apply(sub, cctx)
+        def item(col: Column, dtype: T.DataType, token: Column, *gate_args: Column) -> Column:
+            at = ctx.child(col, dtype, F.concat(ctx.path, F.lit("/"), token), spath_suffix)
+            c = self.apply(sub, _replace(at, no_trace=True))
+            if resolve:
+                c = resolve_node(c)
             state["has_cond"] = has_cond = c.cond is not None
             fields = [c.valid.alias("ok"), c.viols.alias("v")]
             if has_cond:
                 fields.append(c.cond.alias("cv"))
-            body = F.struct(*fields)
-            gate: Optional[Column] = (i >= start) if start > 0 else None
-            if skip_fn is not None:
-                not_skipped = ~F.coalesce(skip_fn(x, i), F.lit(False))
-                gate = not_skipped if gate is None else gate & not_skipped
-            if gate is not None:
-                pass_fields = [F.lit(True).alias("ok"), empty_violations().alias("v")]
-                if has_cond:
-                    pass_fields.append(empty_violations().alias("cv"))
-                return F.when(gate, body).otherwise(F.struct(*pass_fields))
-            return body
+            if gate is None:
+                return F.struct(*fields)
+            passed = [F.lit(True).alias("ok"), empty_violations().alias("v")]
+            if has_cond:
+                passed.append(empty_violations().alias("cv"))
+            return F.when(gate(*gate_args), F.struct(*fields)).otherwise(F.struct(*passed))
 
-        per = F.transform(ctx.col, mk)
-        valid = F.coalesce(F.forall(per, lambda s: s.getField("ok")), F.lit(True))
-        viols = F.coalesce(
-            F.flatten(F.transform(per, lambda s: s.getField("v"))), empty_violations()
-        )
-        cond = (
-            F.coalesce(
-                F.flatten(F.transform(per, lambda s: s.getField("cv"))),
-                empty_violations(),
+        if isinstance(ctx.dtype, T.ArrayType):
+            et = ctx.dtype.elementType
+            per = F.transform(ctx.col, lambda x, i: item(x, et, i.cast("string"), x, i))
+        elif keys:
+            per = F.transform(
+                F.map_keys(ctx.col), lambda k: item(k, T.StringType(), escape_pointer_col(k), k)
             )
-            if state.get("has_cond")
-            else None
+        else:
+
+            def entry(e: Column) -> Column:
+                k = e.getField("key")
+                return item(e.getField("value"), ctx.dtype.valueType, escape_pointer_col(k), k)
+
+            per = F.transform(F.map_entries(ctx.col), entry)
+
+        def flat(field: str) -> Column:
+            return F.coalesce(
+                F.flatten(F.transform(per, lambda s: s.getField(field))), empty_violations()
+            )
+
+        node = Compiled(
+            F.coalesce(F.forall(per, lambda s: s.getField("ok")), F.lit(True)),
+            flat("v"),
+            flat("cv") if state.get("has_cond") else None,
         )
-        return valid, viols, cond
+        return resolve_node(gate_compiled(node, ctx.col.isNotNull() if applies is None else applies))
 
     def _k_items(self, value, schema, ctx: Ctx, results) -> Optional[Compiled]:
         if not isinstance(ctx.dtype, T.ArrayType):
             return None
         start = len(schema.get("prefixItems") or [])
-        valid, viols, cond = self._per_element(ctx, value, "/items", start=start)
         applies = ctx.col.isNotNull()
         if schema.get(_LEGACY_ADDITIONAL_ITEMS) and "prefixItems" in results:
             # rewritten 2019-09 additionalItems: discarded entirely when
             # the tuple items failed (the items annotation it depends on
             # is only set on success — reference legacy.py:76-85, 88-94)
             applies = applies & results["prefixItems"].valid
-        return resolve_node(
-            Compiled(
-                F.when(applies, valid).otherwise(F.lit(True)),
-                F.when(applies, viols).otherwise(empty_violations()),
-                None if cond is None else F.when(applies, cond).otherwise(empty_violations()),
-            )
-        )
+        gate = (lambda x, i: i >= start) if start > 0 else None
+        return self._fold(ctx, value, "/items", gate=gate, applies=applies)
 
     def _contains_count(self, ctx: Ctx, schema: dict, results: dict) -> Column:
         # compiled ONCE per schema node and shared by contains /
@@ -1764,32 +1665,23 @@ class Compiler:
         ictx = _replace(ctx, spath=ctx.spath + "/if", depth=ctx.depth + 1)
         return self.apply(value, ictx)  # never asserts (applicator.py:89-94)
 
+    def _conditional(self, kw: str, value, ctx: Ctx, cond: Column) -> Compiled:
+        """then/else applied where ``cond`` holds. Unapplied → discarded
+        result node (applicator.py:105): nothing reported; applied →
+        this node resolves its subtree's pending if-viols under its own
+        (= the subschema's) validity."""
+        cctx = _replace(ctx, spath=ctx.spath + "/" + kw, depth=ctx.depth + 1).with_applied(cond)
+        return gate_compiled(resolve_node(self.apply(value, cctx)), cond)
+
     def _k_then(self, value, schema, ctx: Ctx, results) -> Optional[Compiled]:
         if "if" not in results:
             return None
-        cond = results["if"].valid
-        tctx = _replace(ctx, spath=ctx.spath + "/then", depth=ctx.depth + 1).with_applied(cond)
-        c = self.apply(value, tctx)
-        # unapplied → discarded result node (applicator.py:105): nothing
-        # reported; applied → this node resolves its subtree's pending
-        # if-viols under its own (= the subschema's) validity
-        inner = resolve_node(c).viols
-        return Compiled(
-            F.when(cond, c.valid).otherwise(F.lit(True)),
-            F.when(cond, inner).otherwise(empty_violations()),
-        )
+        return self._conditional("then", value, ctx, results["if"].valid)
 
     def _k_else(self, value, schema, ctx: Ctx, results) -> Optional[Compiled]:
         if "if" not in results:
             return None
-        cond = results["if"].valid
-        ectx = _replace(ctx, spath=ctx.spath + "/else", depth=ctx.depth + 1).with_applied(~cond)
-        c = self.apply(value, ectx)
-        inner = resolve_node(c).viols
-        return Compiled(
-            F.when(~cond, c.valid).otherwise(F.lit(True)),
-            F.when(~cond, inner).otherwise(empty_violations()),
-        )
+        return self._conditional("else", value, ctx, ~results["if"].valid)
 
     def _k_dependentSchemas(self, value: dict, schema, ctx: Ctx, results) -> Optional[Compiled]:
         if not isinstance(ctx.dtype, (T.StructType, T.MapType)):
@@ -1819,6 +1711,13 @@ class Compiler:
         # Result node is still the $dynamicRef keyword's; r4 dyn-fuzz
         # seeds 16/30)
         target, spath = self.resolve_ref(value, self._site_base(ctx))
+        return self._apply_ref(ctx, target, spath, refkw)
+
+    def _apply_ref(self, ctx: Ctx, target: Any, spath: str, refkw: str) -> Compiled:
+        """Inline the ref target at ``spath`` under the ref site's
+        dynamic spath. The ref node is a result node (target keywords
+        attach to it, RefKeyword.evaluate core.py:82-103): resolve the
+        target's pending if-viols under the ref outcome's own gate."""
         rctx = _replace(
             ctx,
             spath=self._target_spath(ctx, target, spath, refkw),
@@ -1826,9 +1725,6 @@ class Compiler:
             via_ref=True,
         )
         self._record_ref_site(rctx.spath, target, spath)
-        # the $ref node is a result node (target keywords attach to it,
-        # RefKeyword.evaluate core.py:82-103): resolve the target's
-        # pending if-viols under the ref outcome's own gate
         return resolve_node(self.apply(target, rctx))
 
     def _record_ref_site(self, dyn_spath: str, target: Any, spath: str) -> None:
@@ -1894,14 +1790,7 @@ class Compiler:
                 if hit is not None:
                     target, spath = hit
                     break
-        rctx = _replace(
-            ctx,
-            spath=self._target_spath(ctx, target, spath, "$dynamicRef"),
-            depth=ctx.depth + 1,
-            via_ref=True,
-        )
-        self._record_ref_site(rctx.spath, target, spath)
-        return resolve_node(self.apply(target, rctx))
+        return self._apply_ref(ctx, target, spath, "$dynamicRef")
 
     # -- format (annotate-only unless enabled; format.py:14-32) ------------
 
@@ -2224,53 +2113,11 @@ class Compiler:
                 cov = cov | (cond & here)
             return cov
 
-        vtype = ctx.dtype.valueType
-
-        def child(e: Column) -> Compiled:
-            cctx = ctx.child(
-                e.getField("value"),
-                vtype,
-                F.concat(ctx.path, F.lit("/"), escape_pointer_col(e.getField("key"))),
-                "/unevaluatedProperties",
-            )
-            return self.apply(value, _replace(cctx, no_trace=True))
-
-        state: dict[str, bool] = {}
-
-        def entry_struct(e: Column) -> Column:
-            c = child(e)  # compile the subschema ONCE per entry
-            state["has_cond"] = has_cond = c.cond is not None
-            fields = [c.valid.alias("ok"), c.viols.alias("v")]
-            pass_fields = [F.lit(True).alias("ok"), empty_violations().alias("v")]
-            if has_cond:
-                fields.append(c.cond.alias("cv"))
-                pass_fields.append(empty_violations().alias("cv"))
-            return F.when(
-                ~F.coalesce(covered_key(e.getField("key")), F.lit(False)),
-                F.struct(*fields),
-            ).otherwise(F.struct(*pass_fields))
-
-        per_entry = F.transform(F.map_entries(ctx.col), entry_struct)
-        valid = F.coalesce(F.forall(per_entry, lambda s: s.getField("ok")), F.lit(True))
-        viols = F.coalesce(
-            F.flatten(F.transform(per_entry, lambda s: s.getField("v"))),
-            empty_violations(),
-        )
-        applies = ctx.col.isNotNull()
-        if state.get("has_cond"):
-            cond = F.coalesce(
-                F.flatten(F.transform(per_entry, lambda s: s.getField("cv"))),
-                empty_violations(),
-            )
-            cond = F.when(applies, cond).otherwise(empty_violations())
-        else:
-            cond = None
-        return resolve_node(
-            Compiled(
-                F.when(applies, valid).otherwise(F.lit(True)),
-                F.when(applies, viols).otherwise(empty_violations()),
-                cond,
-            )
+        return self._fold(
+            ctx,
+            value,
+            "/unevaluatedProperties",
+            gate=lambda k: ~F.coalesce(covered_key(k), F.lit(False)),
         )
 
     def _prop_covered(self, schema: dict, ctx: Ctx, name: str) -> Column:
@@ -2381,18 +2228,12 @@ class Compiler:
                 cov = cov | (cond & here)
             return cov
 
-        valid_elems, viols_elems, cond_elems = self._per_element(
-            ctx, value, "/unevaluatedItems", skip_fn=skip_fn if partial else None
-        )
-        applies = ctx.col.isNotNull() & ~all_covered
-        return resolve_node(
-            Compiled(
-                F.when(applies, valid_elems).otherwise(F.lit(True)),
-                F.when(applies, viols_elems).otherwise(empty_violations()),
-                None
-                if cond_elems is None
-                else F.when(applies, cond_elems).otherwise(empty_violations()),
-            )
+        return self._fold(
+            ctx,
+            value,
+            "/unevaluatedItems",
+            gate=(lambda x, i: ~F.coalesce(skip_fn(x, i), F.lit(False))) if partial else None,
+            applies=ctx.col.isNotNull() & ~all_covered,
         )
 
 

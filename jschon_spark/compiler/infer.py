@@ -41,26 +41,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from jschon_spark.compiler.context import is_integral, is_numeric
+
 DEFAULT_ENUM_LIMIT = 16
-
-
-def _is_numeric(dt: T.DataType) -> bool:
-    return isinstance(
-        dt,
-        (
-            T.ByteType,
-            T.ShortType,
-            T.IntegerType,
-            T.LongType,
-            T.FloatType,
-            T.DoubleType,
-            T.DecimalType,
-        ),
-    )
-
-
-def _is_integral(dt: T.DataType) -> bool:
-    return isinstance(dt, (T.ByteType, T.ShortType, T.IntegerType, T.LongType))
 
 
 def profile_table(
@@ -74,7 +57,7 @@ def profile_table(
     for f in df.schema.fields:
         c, dt = f.name, f.dataType
         aggs.append(F.sum(F.col(c).isNull().cast("long")).alias(f"{c}__nulls"))
-        if _is_numeric(dt):
+        if is_numeric(dt):
             aggs += [F.min(c).alias(f"{c}__min"), F.max(c).alias(f"{c}__max")]
             metas.append((c, "numeric"))
         elif isinstance(dt, T.StringType):
@@ -127,8 +110,8 @@ def profile_table(
 
 def _field_schema(dt: T.DataType, profile: dict[str, Any] | None) -> dict[str, Any]:
     p = profile or {}
-    if _is_numeric(dt):
-        out: dict[str, Any] = {"type": "integer" if _is_integral(dt) else "number"}
+    if is_numeric(dt):
+        out: dict[str, Any] = {"type": "integer" if is_integral(dt) else "number"}
         if p.get("min") is not None:
             out["minimum"] = p["min"]
         if p.get("max") is not None:

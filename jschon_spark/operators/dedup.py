@@ -87,22 +87,6 @@ def _norm_texts(texts: pd.Series) -> pd.Series:
     return texts.fillna("").str.lower().str.strip().str.replace(r"\s+", " ", regex=True)
 
 
-def _shingle_hash_row(t: str, n: int) -> np.ndarray:
-    b = np.frombuffer(t.encode("utf-8"), dtype=np.uint8)
-    if len(b) == 0:
-        return np.zeros(0, dtype=np.int64)
-    if len(b) < n:
-        acc = np.zeros(1, dtype=np.uint64)
-        for k in range(len(b)):
-            acc |= np.uint64(b[k]) << np.uint64(8 * k)
-    else:
-        m = len(b) - n + 1
-        acc = np.zeros(m, dtype=np.uint64)
-        for k in range(n):
-            acc |= b[k : m + k].astype(np.uint64) << np.uint64(8 * k)
-    return np.unique(_mix64(acc)).astype(np.int64)
-
-
 def _pack_batch(norm: pd.Series, n: int) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
     """Whole-batch shingle hashing with ZERO per-row Python in the hot
     loop: concatenate every normalized text of the Arrow batch into ONE
@@ -112,9 +96,9 @@ def _pack_batch(norm: pd.Series, n: int) -> tuple[np.ndarray, np.ndarray, np.nda
     Returns ``(hashes, starts, seg_lens)`` — document d's (mixed) shingle
     hashes are ``hashes[starts[d] : starts[d] + seg_lens[d]]``, segments
     tiling ``hashes`` contiguously in document order. A document shorter
-    than ``n`` (but non-empty) contributes exactly one hash of its packed
-    bytes, matching `_shingle_hash_row`; an empty document contributes
-    none."""
+    than ``n`` (but non-empty) contributes exactly one hash of its
+    bytes packed little-endian into one word; an empty document
+    contributes none."""
     enc = [t.encode("utf-8") for t in norm]
     lens = np.fromiter((len(b) for b in enc), dtype=np.int64, count=len(enc))
     total = int(lens.sum())

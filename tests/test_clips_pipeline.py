@@ -192,6 +192,10 @@ def test_audio_adversarial_payloads(spark):
         ("clip-ak", encode_ima_adpcm(signal("clip-ak")), 16000, 100, "adpcm_ima"),
         # IMA ADPCM WAV (the stdlib-fallback walk) whose header says 0 Hz
         ("clip-al", wav_ima_bytes(signal("clip-al"), 0), 16000, 100, "wav"),
+        # headerless payloads at sr_hz 0 (no reference signal to
+        # synthesize) and at a null sr_hz (no rate to decode at)
+        ("clip-am", good.tobytes(), 0, 100, "pcm_s16le"),
+        ("clip-an", good.tobytes(), None, 100, "pcm_s16le"),
     ]
     df = spark.createDataFrame(
         [(r[0], r[1], r[2], r[3], r[4], 0) for r in rows],
@@ -202,13 +206,17 @@ def test_audio_adversarial_payloads(spark):
         assert out[cid].audio_valid is True, cid
     for cid in ("clip-ai", "clip-aj"):
         assert out[cid].snr_db >= 30.0, (cid, out[cid].snr_db)
-    for cid in ("clip-ab", "clip-ac", "clip-ad", "clip-ae", "clip-af", "clip-ag", "clip-ah", "clip-al"):
+    for cid in ("clip-ab", "clip-ac", "clip-ad", "clip-ae", "clip-af", "clip-ag", "clip-ah", "clip-al", "clip-am", "clip-an"):
         assert out[cid].audio_valid is False, cid
         kws = {v.keyword for v in out[cid].audio_violations}
         assert kws, cid
     # decode failures vs frame-count failures are distinguished
     assert {v.keyword for v in out["clip-ae"].audio_violations} == {"decode"}
     assert {v.keyword for v in out["clip-ah"].audio_violations} == {"frames"}
+    # 0 Hz decodes (0 frames expected, SNR -inf); a null rate does not
+    assert out["clip-am"].decode_ok is True and out["clip-am"].snr_db == float("-inf")
+    assert {v.keyword for v in out["clip-am"].audio_violations} == {"frames"}
+    assert {v.keyword for v in out["clip-an"].audio_violations} == {"decode"}
     assert out["clip-ak"].decode_ok is True
     assert "decode" not in {v.keyword for v in out["clip-ak"].audio_violations}
     # a header rate that differs from sr_hz fails the row but keeps its

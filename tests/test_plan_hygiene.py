@@ -134,17 +134,36 @@ def test_contains_subschema_compiled_once(spark):
     assert calls["n"] == 1, calls["n"]
 
 
-def test_map_entries_subschema_compiled_once(spark):
+_FOLD_CALLERS = {
+    # keyword: (schema around the subschema, instance type)
+    "items": (lambda sub: {"prefixItems": [{}], "items": sub}, "array<bigint>"),
+    "unevaluatedItems": (
+        lambda sub: {"prefixItems": [{}], "unevaluatedItems": sub}, "array<bigint>"
+    ),
+    "patternProperties": (lambda sub: {"patternProperties": {"^x": sub}}, "map<string,bigint>"),
+    "additionalProperties": (
+        lambda sub: {"properties": {"a": {}}, "additionalProperties": sub}, "map<string,bigint>"
+    ),
+    "propertyNames": (lambda sub: {"propertyNames": sub}, "map<string,bigint>"),
+    "unevaluatedProperties": (
+        lambda sub: {"properties": {"a": {}}, "unevaluatedProperties": sub}, "map<string,bigint>"
+    ),
+}
+
+
+@pytest.mark.parametrize("keyword", sorted(_FOLD_CALLERS))
+def test_map_entries_subschema_compiled_once(spark, keyword):
     """Sibling finding in r2 #4: the MapType patternProperties path
     compiled each entry's subschema twice (once for .valid, once for
-    .viols inside the same lambda)."""
-    from pyspark.sql import types as T
+    .viols inside the same lambda). Every caller of the one HOF fold
+    compiles its subschema once per lambda."""
+    from pyspark.sql.types import _parse_datatype_string
 
     from jschon_spark.compiler import core as core_mod
     from jschon_spark.compiler import compile_schema
 
     sub = {"const": 123456789}
-    schema = {"patternProperties": {"^x": sub}}
+    wrap, ddl = _FOLD_CALLERS[keyword]
     calls = {"n": 0}
     orig = core_mod.Compiler.apply
 
@@ -155,7 +174,7 @@ def test_map_entries_subschema_compiled_once(spark):
 
     core_mod.Compiler.apply = counting
     try:
-        compile_schema(schema).columns(T.MapType(T.StringType(), T.LongType()), F.col("m"))
+        compile_schema(wrap(sub)).columns(_parse_datatype_string(ddl), F.col("m"))
     finally:
         core_mod.Compiler.apply = orig
     assert calls["n"] == 1, calls["n"]
@@ -252,3 +271,37 @@ def test_one_arrow_decode_walk():
                     sites.append((str(path.relative_to(root)), getattr(top, "name", None)))
     assert sites == [("audio/__init__.py", "iter_decoded")], sites
     assert "pandas_udf" not in (root / "audio" / "__init__.py").read_text()
+
+
+def test_one_applicator_fold():
+    """Every per-item subschema application (items, unevaluatedItems and
+    the MapType patternProperties / additionalProperties / propertyNames
+    / unevaluatedProperties) runs through ``Compiler._fold``: the HOFs
+    that build and reduce the per-item structs appear nowhere else.
+    ``map_entries`` also sorts a map literal's entries in ``_eq_literal``."""
+    import ast
+    import pathlib
+
+    from jschon_spark.compiler import core as core_mod
+
+    tree = ast.parse(pathlib.Path(core_mod.__file__).read_text())
+    defs = [n for n in tree.body if isinstance(n, ast.FunctionDef)]
+    for cls in (n for n in tree.body if isinstance(n, ast.ClassDef)):
+        defs += [n for n in cls.body if isinstance(n, ast.FunctionDef)]
+    sites: dict[str, list] = {"forall": [], "map_keys": [], "map_entries": []}
+    for fn in defs:
+        for node in ast.walk(fn):
+            func = getattr(node, "func", None)
+            if (
+                isinstance(node, ast.Call)
+                and isinstance(func, ast.Attribute)
+                and getattr(func.value, "id", None) == "F"
+                and func.attr in sites
+            ):
+                sites[func.attr].append(fn.name)
+    sites = {k: sorted(v) for k, v in sites.items()}
+    assert sites == {
+        "forall": ["_fold"],
+        "map_keys": ["_fold"],
+        "map_entries": ["_eq_literal", "_fold"],
+    }, sites
