@@ -205,12 +205,15 @@ def leaf(ctx: Ctx, keyword: str, pred: Column, error: Column | str, applies: Col
     return assertion(ctx, keyword, valid, error)
 
 
-def assertion(ctx: Ctx, keyword: str, valid: Column, error: Column | str) -> Compiled:
-    """The result node of one assertion keyword: ``valid``, plus one
-    violation row for ``keyword`` at ``ctx`` where it is false."""
-    viols = F.when(~valid, F.array(make_violation(ctx, keyword, error))).otherwise(
-        empty_violations()
-    )
+def assertion(
+    ctx: Ctx, keyword: str, valid: Column, error: Column | str, *children: Optional[Column]
+) -> Compiled:
+    """The result node of one keyword: ``valid``, plus one violation row
+    for ``keyword`` at ``ctx`` where it is false, followed by the viols
+    of ``children`` (a failing applicator's subresults; None ≡ empty)."""
+    viols = F.when(
+        ~valid, concat_viols(F.array(make_violation(ctx, keyword, error)), *children)
+    ).otherwise(empty_violations())
     return Compiled(valid, viols)
 
 

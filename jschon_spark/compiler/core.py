@@ -24,7 +24,7 @@ import re
 import threading
 from dataclasses import dataclass, replace as _replace
 from types import MappingProxyType
-from typing import Any, Callable, Mapping, Optional
+from typing import Any, Callable, Iterable, Mapping, Optional
 from urllib.parse import unquote, urldefrag, urljoin as _std_urljoin
 
 
@@ -829,16 +829,7 @@ class Compiler:
             # bare boolean (campaign neg seed 5075: an untraced `false`
             # prefixItems entry made the /prefixItems gate bail out and
             # a pruned annotation leaked)
-            if self._trace is not None and not ctx.no_trace:
-                walk = ~node.valid if negate_result else node.valid
-                traced = Compiled(walk, node.viols) if negate_result else node
-                if ctx.spath not in self._trace:
-                    self._trace[ctx.spath] = (schema, ctx.path, traced, ctx.applied, ctx.dtype, ctx.col)
-                    if ctx.via_ref:
-                        self._trace_via_ref.add(ctx.spath)
-                elif not ctx.via_ref and ctx.spath in self._trace_via_ref:
-                    self._trace[ctx.spath] = (schema, ctx.path, traced, ctx.applied, ctx.dtype, ctx.col)
-                    self._trace_via_ref.discard(ctx.spath)
+            self._trace_node(schema, ctx, node, negate_result)
             self._expr_stage = _outer_stage
             self._expr_weight = _outer_weight + 1
             return node
@@ -921,32 +912,30 @@ class Compiler:
         else:
             self._expr_stage = max(_outer_stage, my_stage)
             self._expr_weight = _outer_weight + my_weight
-        # the validity this node carries in the reference's RESULT TREE:
-        # normally the subschema outcome, but the direct child of `not`
-        # carries the flipped outcome (NotKeyword evaluates into its own
-        # result node, applicator.py:77-86). The output walks run on
-        # result-tree validity: errors descend through invalid nodes,
-        # annotations through valid ones.
-        walk_valid = ~node.valid if negate_result else node.valid
-        if self._trace is not None and not ctx.no_trace:
-            traced = Compiled(walk_valid, node.viols) if negate_result else node
-            # Since round 4, ref targets compile under SITE-BASED dynamic
-            # spaths (_target_spath: .../$ref/...), so every ref
-            # application owns a distinct trace slot — the old
-            # multi-ref single-slot attribution limit is gone, and
-            # collisions between a canonical and a ref-inlined
-            # application of one spath can no longer occur. The
-            # canonical-wins replacement below is kept as a safety net
-            # for any remaining aliasing (first writer wins otherwise).
-            entry = (schema, ctx.path, traced, ctx.applied, ctx.dtype, ctx.col)
-            if ctx.spath not in self._trace:
-                self._trace[ctx.spath] = entry
-                if ctx.via_ref:
-                    self._trace_via_ref.add(ctx.spath)
-            elif not ctx.via_ref and ctx.spath in self._trace_via_ref:
-                self._trace[ctx.spath] = entry
-                self._trace_via_ref.discard(ctx.spath)
+        self._trace_node(schema, ctx, node, negate_result)
         return node
+
+    def _trace_node(self, schema: Any, ctx: Ctx, node: Compiled, negate_result: bool) -> None:
+        """Record ``node`` in the trace slot of ``ctx.spath``. The first
+        writer wins, except that the canonical application replaces a
+        ref-inlined one (ref targets compile under site-based spaths,
+        _target_spath, so this is a safety net for remaining aliasing).
+        The slot holds the validity the node carries in the reference's
+        RESULT TREE: the direct child of `not` carries the flipped
+        outcome (NotKeyword evaluates into its own result node,
+        applicator.py:77-86), and the output walks run on it: errors
+        descend through invalid nodes, annotations through valid ones."""
+        if self._trace is None or ctx.no_trace:
+            return
+        if ctx.spath in self._trace and (ctx.via_ref or ctx.spath not in self._trace_via_ref):
+            return
+        if negate_result:
+            node = Compiled(~node.valid, node.viols)
+        self._trace[ctx.spath] = (schema, ctx.path, node, ctx.applied, ctx.dtype, ctx.col)
+        if ctx.via_ref:
+            self._trace_via_ref.add(ctx.spath)
+        else:
+            self._trace_via_ref.discard(ctx.spath)
 
     _SUBSCHEMA_MAPS = ("properties", "patternProperties", "dependentSchemas", "$defs", "definitions")
     _SUBSCHEMA_LISTS = ("allOf", "anyOf", "oneOf", "prefixItems")
@@ -1317,22 +1306,45 @@ class Compiler:
             )
         return combine(parts) if parts else None
 
+    def _apply_fields(
+        self,
+        ctx: Ctx,
+        apps: Iterable[tuple[str, Any, str]],
+        *,
+        gate: Optional[Callable[[str], Column]] = None,
+        resolve: bool = False,
+    ) -> Optional[Compiled]:
+        """Each ``(name, sub, spath_suffix)`` of ``apps`` applied to the
+        named field of a struct (or value of a map) — the fixed-field
+        counterpart of ``_fold``. A field the struct lacks is never
+        present, so its subschema never applies. An application holds
+        where the field is present and ``gate(name)`` holds; the child
+        ctx is marked applied by that same condition, so an unapplied
+        field neither reports nor annotates (the reference has no result
+        node for it, jsonschema.py:515-524). ``resolve`` is as in
+        ``_fold``; None when nothing applies."""
+        parts = []
+        for name, sub, suffix in apps:
+            if isinstance(ctx.dtype, T.StructType) and name not in ctx.dtype.fieldNames():
+                continue
+            cond = self._has_prop(ctx, name)
+            if gate is not None:
+                cond = cond & gate(name)
+            at = _replace(ctx.field(name), spath=ctx.spath + suffix).with_applied(cond)
+            c = self.apply(sub, at)
+            parts.append(gate_compiled(resolve_node(c) if resolve else c, cond))
+        return resolve_node(combine(parts)) if parts else None
+
     def _k_properties(self, value: dict, schema, ctx: Ctx, results) -> Optional[Compiled]:
         if not isinstance(ctx.dtype, (T.StructType, T.MapType)):
             return None
-        parts = []
-        is_struct = isinstance(ctx.dtype, T.StructType)
-        for name, sub in value.items():
-            if is_struct and name not in ctx.dtype.fieldNames():
-                continue  # never present → subschema never applies
-            present = self._has_prop(ctx, name)
-            child_ctx = ctx.field(name).with_applied(present)
-            child_ctx = _replace(child_ctx, spath=ctx.spath + f"/properties/{escape_pointer(name)}")
-            c = self.apply(sub, child_ctx)
-            # per-property subresult node (applicator.py:262): pending
-            # if-viols resolve under this one application's outcome
-            parts.append(gate_compiled(resolve_node(c), present))
-        return combine(parts) if parts else None
+        # per-property subresult node (applicator.py:262): pending
+        # if-viols resolve under this one application's outcome
+        return self._apply_fields(
+            ctx,
+            ((name, sub, f"/properties/{escape_pointer(name)}") for name, sub in value.items()),
+            resolve=True,
+        )
 
 
     def _name_search(self, pattern: str, name: str) -> bool:
@@ -1357,18 +1369,17 @@ class Compiler:
 
     def _k_patternProperties(self, value: dict, schema, ctx: Ctx, results) -> Optional[Compiled]:
         if isinstance(ctx.dtype, T.StructType):
-            parts = []
-            for regex, sub in value.items():
-                for f in ctx.dtype.fields:
-                    if not self._name_search(regex, f.name):
-                        continue
-                    present = self._has_prop(ctx, f.name)
-                    child_ctx = ctx.field(f.name).with_applied(present)
-                    child_ctx = _replace(child_ctx, spath=ctx.spath + f"/patternProperties/{escape_pointer(regex)}")
-                    c = self.apply(sub, child_ctx)
-                    # per-(item, regex) subresult node (applicator.py:285)
-                    parts.append(gate_compiled(resolve_node(c), present))
-            return combine(parts) if parts else None
+            # per-(item, regex) subresult node (applicator.py:285)
+            return self._apply_fields(
+                ctx,
+                (
+                    (f.name, sub, f"/patternProperties/{escape_pointer(regex)}")
+                    for regex, sub in value.items()
+                    for f in ctx.dtype.fields
+                    if self._name_search(regex, f.name)
+                ),
+                resolve=True,
+            )
         if isinstance(ctx.dtype, T.MapType):
             parts = []
             for regex, sub in value.items():
@@ -1405,18 +1416,14 @@ class Compiler:
         known = set((schema.get("properties") or {}).keys())
         patterns = list((schema.get("patternProperties") or {}).keys())
         if isinstance(ctx.dtype, T.StructType):
-            parts = []
-            for f in ctx.dtype.fields:
-                if f.name in known:
-                    continue
-                if any(self._name_search(p, f.name) for p in patterns):
-                    continue
-                present = self._has_prop(ctx, f.name)
-                child_ctx = ctx.field(f.name).with_applied(present)
-                child_ctx = _replace(child_ctx, spath=ctx.spath + "/additionalProperties")
-                c = self.apply(value, child_ctx)
-                parts.append(gate_compiled(c, present))
-            return resolve_node(combine(parts)) if parts else None
+            return self._apply_fields(
+                ctx,
+                (
+                    (f.name, value, "/additionalProperties")
+                    for f in ctx.dtype.fields
+                    if f.name not in known and not any(self._name_search(p, f.name) for p in patterns)
+                ),
+            )
         if isinstance(ctx.dtype, T.MapType):
             return self._map_entries_check(
                 ctx, value, "/additionalProperties", exclude_keys=known, exclude_rlikes=patterns
@@ -1427,14 +1434,14 @@ class Compiler:
         if isinstance(ctx.dtype, T.StructType):
             parts = []
             for f in ctx.dtype.fields:
+                present = self._has_prop(ctx, f.name)
                 name_ctx = ctx.child(
                     F.lit(f.name),
                     T.StringType(),
                     F.concat(ctx.path, F.lit("/" + escape_pointer(f.name))),
                     "/propertyNames",
-                )
+                ).with_applied(present)
                 c = self.apply(value, name_ctx)
-                present = self._has_prop(ctx, f.name)
                 parts.append(gate_compiled(c, present))
             return resolve_node(combine(parts)) if parts else None
         if isinstance(ctx.dtype, T.MapType):
@@ -1612,14 +1619,10 @@ class Compiler:
         for b in branches[1:]:
             valid = valid | b.valid
         # failing-branch details surface only when the whole anyOf fails
-        viols = F.when(
-            ~valid,
-            concat_viols(
-                F.array(make_violation(ctx, "anyOf", "the instance must validate against at least one subschema")),
-                *[b.viols for b in branches],
-            ),
-        ).otherwise(empty_violations())
-        return Compiled(valid, viols)
+        return assertion(
+            ctx, "anyOf", valid, "the instance must validate against at least one subschema",
+            *[b.viols for b in branches],
+        )
 
     def _k_oneOf(self, value, schema, ctx: Ctx, results) -> Compiled:
         # per-branch subresult nodes (applicator.py:65) — see _k_allOf
@@ -1627,15 +1630,10 @@ class Compiler:
         n = branches[0].valid.cast("int")
         for b in branches[1:]:
             n = n + b.valid.cast("int")
-        valid = n == 1
-        viols = F.when(
-            ~valid,
-            concat_viols(
-                F.array(make_violation(ctx, "oneOf", "the instance must validate against exactly one subschema")),
-                *[b.viols for b in branches],
-            ),
-        ).otherwise(empty_violations())
-        return Compiled(valid, viols)
+        return assertion(
+            ctx, "oneOf", n == 1, "the instance must validate against exactly one subschema",
+            *[b.viols for b in branches],
+        )
 
     def _k_not(self, value, schema, ctx: Ctx, results) -> Compiled:
         # negate_result: the subschema evaluates into the `not` result
@@ -1645,21 +1643,15 @@ class Compiler:
             ctx, spath=ctx.spath + "/not", depth=ctx.depth + 1, negate_result=True
         )
         c = self.apply(value, nctx)
-        valid = ~c.valid
         # on failure (subschema PASSED), the walk descends into the
         # subschema's keyword results — all valid except noassert `if`
         # subtrees, whose pending viols (c.cond) surface here: the not
         # node IS their nearest result node, invalid exactly when the
         # subschema passed
-        viols = F.when(
-            ~valid,
-            concat_viols(
-                F.array(make_violation(ctx, "not", "the instance must not validate against the subschema")),
-                c.viols,
-                c.cond,
-            ),
-        ).otherwise(empty_violations())
-        return Compiled(valid, viols)
+        return assertion(
+            ctx, "not", ~c.valid, "the instance must not validate against the subschema",
+            c.viols, c.cond,
+        )
 
     def _k_if(self, value, schema, ctx: Ctx, results) -> Compiled:
         ictx = _replace(ctx, spath=ctx.spath + "/if", depth=ctx.depth + 1)
@@ -1701,17 +1693,9 @@ class Compiler:
 
     # -- references --------------------------------------------------------
 
-    def _site_base(self, ctx: Ctx) -> Optional[str]:
-        return ctx.scope[-1] if ctx.scope else None
-
-    def _k_ref(self, value, schema, ctx: Ctx, results, refkw: str = "$ref") -> Compiled:
-        # ``refkw`` names the path segment: $dynamicRef keeps ITS keyword
-        # name in keywordLocation even when it degrades to plain-$ref
-        # behavior (non-bookended target / no carrier — the reference's
-        # Result node is still the $dynamicRef keyword's; r4 dyn-fuzz
-        # seeds 16/30)
-        target, spath = self.resolve_ref(value, self._site_base(ctx))
-        return self._apply_ref(ctx, target, spath, refkw)
+    def _k_ref(self, value, schema, ctx: Ctx, results) -> Compiled:
+        target, spath = self.resolve_ref(value, ctx.scope[-1] if ctx.scope else None)
+        return self._apply_ref(ctx, target, spath, "$ref")
 
     def _apply_ref(self, ctx: Ctx, target: Any, spath: str, refkw: str) -> Compiled:
         """Inline the ref target at ``spath`` under the ref site's
@@ -1747,50 +1731,48 @@ class Compiler:
         self._ref_sites[dyn_spath] = owner + "#" + spath[len(res_spath):]
 
     def _k_dynamicRef(self, value, schema, ctx: Ctx, results) -> Compiled:
-        """$dynamicRef: resolves like $ref, then rebinds to the
-        $dynamicAnchor of the same name in the OUTERMOST resource of the
-        dynamic scope (jschon/vocabulary/core.py:121-169). Because refs
-        are inlined, the compile path IS the evaluation path, so
-        ``ctx.scope`` (resources entered, outermost first) is the exact
-        static image of jschon's runtime scope stack — multi-carrier
-        cases (e.g. strict-tree extending tree) rebind correctly."""
+        # $dynamicRef keeps ITS keyword name in keywordLocation even when
+        # it degrades to plain-$ref behavior (non-bookended target / no
+        # carrier — the reference's Result node is still the $dynamicRef
+        # keyword's; r4 dyn-fuzz seeds 16/30)
+        target, spath = self._resolve_dynamic(value, ctx.scope)
+        return self._apply_ref(ctx, target, spath, "$dynamicRef")
+
+    def _resolve_dynamic(self, value: str, scope: tuple) -> tuple[Any, str]:
+        """$dynamicRef → (target, canonical spath): resolves like $ref,
+        then rebinds to the $dynamicAnchor of the same name in the
+        OUTERMOST resource of the dynamic scope (jschon/vocabulary/
+        core.py:121-169). Because refs are inlined, the compile path IS
+        the evaluation path, so ``scope`` (resources entered, outermost
+        first) is the exact static image of jschon's runtime scope stack.
+
+        BOOKENDING (2020-12 §8.2.3.2): rebind only when the initial
+        target is itself the carrier of the anchor, and keep the initial
+        target when no scope resource carries it. With no carrier of the
+        name anywhere it is a plain $ref. An unresolvable initial target
+        is a schema error (DynamicRefKeyword.resolve raises), except for
+        the rewritten 2019-09 ``$recursiveRef: "#"``: without a
+        $recursiveAnchor carrier it is a plain ref to the current
+        resource root (legacy.py:15-151 in the reference)."""
         from jschon_spark.compiler.legacy import _RECURSIVE_NAME
 
-        _, frag = urldefrag(urljoin(self._site_base(ctx) or self.base_uri, value))
-        cands = self.dynamic_anchors.get(frag, []) if frag else []
-        if not cands:
-            if frag == _RECURSIVE_NAME:
-                # rewritten $recursiveRef:"#" with no $recursiveAnchor
-                # carrier anywhere → plain self-reference (legacy.py:15-52)
-                return self._k_ref("#", schema, ctx, results, refkw="$dynamicRef")
-            # no dynamic anchor of that name → plain $ref behavior
-            return self._k_ref(value, schema, ctx, results, refkw="$dynamicRef")
-        # BOOKENDING (2020-12 §8.2.3.2): resolve the initial target like
-        # $ref; only rebind through the dynamic scope if that target is
-        # itself the $dynamicAnchor carrier, and when no scope resource
-        # carries the anchor, use the INITIAL target — never an
-        # arbitrary document-order carrier.
-        # an unresolvable INITIAL target is a schema error — the
-        # reference raises at resolve time (vocabulary/core.py
-        # DynamicRefKeyword.resolve); do not mask it by binding an
-        # arbitrary document-order carrier. Exception: the rewritten
-        # 2019-09 $recursiveRef, whose semantics when the CURRENT
-        # resource root lacks $recursiveAnchor are a plain ref to the
-        # resource root (legacy.py:15-151 in the reference).
+        base = scope[-1] if scope else None
+        _, frag = urldefrag(urljoin(base or self.base_uri, value))
+        carried = bool(frag) and bool(self.dynamic_anchors.get(frag))
+        if frag == _RECURSIVE_NAME and not carried:
+            value = "#"
         try:
-            init_target, init_spath = self.resolve_ref(value, self._site_base(ctx))
+            target, spath = self.resolve_ref(value, base)
         except CompileError:
-            if frag == _RECURSIVE_NAME:
-                return self._k_ref("#", schema, ctx, results, refkw="$dynamicRef")
-            raise
-        target, spath = init_target, init_spath
-        if isinstance(init_target, dict) and init_target.get("$dynamicAnchor") == frag:
-            for uri in ctx.scope:  # outermost resource wins
+            if frag != _RECURSIVE_NAME:
+                raise
+            return self.resolve_ref("#", base)
+        if carried and isinstance(target, dict) and target.get("$dynamicAnchor") == frag:
+            for uri in scope:  # outermost resource wins
                 hit = self.dynamic_in_resource.get((uri, frag))
                 if hit is not None:
-                    target, spath = hit
-                    break
-        return self._apply_ref(ctx, target, spath, "$dynamicRef")
+                    return hit
+        return target, spath
 
     # -- format (annotate-only unless enabled; format.py:14-32) ------------
 
@@ -1928,7 +1910,12 @@ class Compiler:
                 )
             for refkw in ("$ref", "$dynamicRef"):
                 if refkw in schema:
-                    target = self._resolve_source_ref(refkw, schema[refkw], scope)
+                    # the targets _k_ref/_k_dynamicRef inline
+                    target, _ = (
+                        self.resolve_ref(schema[refkw], scope[-1] if scope else None)
+                        if refkw == "$ref"
+                        else self._resolve_dynamic(schema[refkw], scope)
+                    )
                     # the reference evaluates the target into the /$ref
                     # result node, so the target's annotations are
                     # pruned when the TARGET fails (collect_annotations
@@ -1946,36 +1933,6 @@ class Compiler:
             self._coverage_cache[top_key] = (schema, out)
         return out
 
-    def _resolve_source_ref(self, refkw: str, value: str, scope: tuple = ()) -> Any:
-        """Resolve a $ref/$dynamicRef for annotation-coverage purposes
-        (same targets _k_ref/_k_dynamicRef would inline)."""
-        site_base = scope[-1] if scope else None
-        if refkw == "$dynamicRef":
-            _, frag = urldefrag(urljoin(site_base or self.base_uri, value))
-            cands = self.dynamic_anchors.get(frag, []) if frag else []
-            if cands:
-                # unresolvable initial target raises, mirroring
-                # _k_dynamicRef (with the same 2019-09 $recursiveRef
-                # resource-root fallback)
-                from jschon_spark.compiler.legacy import _RECURSIVE_NAME
-
-                try:
-                    init_target, _ = self.resolve_ref(value, site_base)
-                except CompileError:
-                    if frag == _RECURSIVE_NAME:
-                        target, _ = self.resolve_ref("#", site_base)
-                        return target
-                    raise
-                # bookending, mirroring _k_dynamicRef
-                if isinstance(init_target, dict) and init_target.get("$dynamicAnchor") == frag:
-                    for uri in scope:  # outermost resource wins
-                        hit = self.dynamic_in_resource.get((uri, frag))
-                        if hit is not None:
-                            return hit[0]
-                return init_target
-        target, _ = self.resolve_ref(value, site_base)
-        return target
-
     @staticmethod
     def _source_needs_kw_gate(guards: list[tuple[Any, bool]], src: Any, schema: Any) -> bool:
         """True when the source's own overall success is NOT implied by
@@ -1991,59 +1948,41 @@ class Compiler:
         return bool(guards) and guards[-1][1] and guards[-1][0] is src
 
     def _guard_cond(self, ctx: Ctx, guards: list[tuple[Any, bool]]) -> Column:
-        """Runtime conjunction of a coverage source's guards. Guard
-        re-applications keep the parent's spath, so they must not claim
-        its verbose-trace slot (no_trace)."""
+        """Runtime conjunction of a coverage source's guards."""
         cond = F.lit(True)
         for guard, negate in guards:
-            key = (id(guard), id(ctx.col), ctx.scope)
-            hit = self._reapply_cache.get(key)
-            if hit is None:
-                gctx = _replace(ctx, depth=ctx.depth + 1, no_trace=True)
-                g = self.apply(guard, gctx).valid
-                if self._staged and not ctx.no_trace:
-                    # the re-application tree embeds once PER FIELD via
-                    # the cache — spill it so each embedding is a column
-                    # ref. no_trace blocks materialization inside the
-                    # guard subtree, so its expression references only
-                    # base columns → stage 0 is always valid.
-                    g = self._spill(g, 0, "g")
-                    self._expr_stage = max(self._expr_stage, 1)
-                # hold guard AND col so neither keyed id can be recycled
-                # while the entry lives (Columns are transient per-apply)
-                self._reapply_cache[key] = (guard, ctx.col, g)
-            else:
-                g = hit[2]
-                if self._staged and not ctx.no_trace and self._stages:
-                    self._expr_stage = max(self._expr_stage, 1)
+            g = self._reapplied(ctx, guard)
             cond = cond & (~g if negate else g)
         return cond
 
-    def _kw_valid(self, kw: str, src: dict, ctx: Ctx) -> Column:
-        """Validity of source-keyword ``kw`` as applied at ``ctx`` —
-        the result-tree node whose annotation unevaluated* coverage
-        consumes. collect_annotations prunes INVALID nodes
-        (jsonschema.py:515-524), so a failed prefixItems/items/
-        properties application contributes NO coverage even though its
-        subschemas ran. Only needed for the SELF source: for branch /
-        ref sources the (subschema, False) guard already implies every
-        asserting keyword in it passed."""
-        key = (id(src), id(ctx.col), ctx.scope, kw)
-        cached = self._reapply_cache.get(key)
-        if cached is not None:
+    def _reapplied(self, ctx: Ctx, node: Any, kw: Optional[str] = None) -> Column:
+        """Validity of ``node`` re-applied at ``ctx`` (a coverage guard)
+        or, with ``kw``, of that one keyword's result node: a failed
+        items/properties application contributes NO coverage even though
+        its subschemas ran (collect_annotations prunes invalid nodes,
+        jsonschema.py:515-524). Re-applications keep the parent's spath,
+        so they run no_trace and never claim its trace slot, and are
+        memoized (``_reapply_cache``, see plan()). Staged, the tree is
+        spilled so each per-field embedding is a column ref; no_trace
+        blocks materialization inside it, so stage 0 is always valid."""
+        key = (id(node), id(ctx.col), ctx.scope, kw)
+        hit = self._reapply_cache.get(key)
+        if hit is not None:
             if self._staged and not ctx.no_trace and self._stages:
                 self._expr_stage = max(self._expr_stage, 1)
-            return cached[2]
-        handler = getattr(self, "_k_" + kw)
+            return hit[2]
         gctx = _replace(ctx, depth=ctx.depth + 1, no_trace=True)
-        out = handler(src[kw], src, gctx, {})
-        v = F.lit(True) if out is None else F.coalesce(out.valid, F.lit(True))
+        if kw is None:
+            v = self.apply(node, gctx).valid
+        else:
+            out = getattr(self, "_k_" + kw)(node[kw], node, gctx, {})
+            v = F.lit(True) if out is None else F.coalesce(out.valid, F.lit(True))
         if self._staged and not ctx.no_trace:
-            # embedded per covered field like _guard_cond's trees; the
-            # no_trace re-application references only base columns
-            v = self._spill(v, 0, "k")
+            v = self._spill(v, 0, "g" if kw is None else "k")
             self._expr_stage = max(self._expr_stage, 1)
-        self._reapply_cache[key] = (src, ctx.col, v)
+        # hold node AND col so neither keyed id can be recycled while the
+        # entry lives (Columns are transient per-apply)
+        self._reapply_cache[key] = (node, ctx.col, v)
         return v
 
     def _k_unevaluatedProperties(self, value, schema, ctx: Ctx, results) -> Optional[Compiled]:
@@ -2051,65 +1990,57 @@ class Compiler:
             if isinstance(ctx.dtype, T.MapType):
                 return self._unevaluated_props_map(value, schema, ctx)
             return None
-        parts = []
-        for f in ctx.dtype.fields:
-            covered = self._prop_covered(schema, ctx, f.name)
-            child_ctx = ctx.field(f.name)
-            child_ctx = _replace(child_ctx, spath=ctx.spath + "/unevaluatedProperties")
-            c = self.apply(value, child_ctx)
-            applies = self._has_prop(ctx, f.name) & ~covered
-            parts.append(gate_compiled(c, applies))
-        return resolve_node(combine(parts)) if parts else None
+        return self._apply_fields(
+            ctx,
+            ((f.name, value, "/unevaluatedProperties") for f in ctx.dtype.fields),
+            gate=lambda name: ~self._prop_covered(schema, ctx, name),
+        )
+
+    def _prop_sources(self, schema: dict, scope: tuple) -> list[tuple[list, dict, bool, list]]:
+        """unevaluatedProperties' coverage sources as (guards, src,
+        kw_gate, kws). ``kws`` lists the source's covering keywords as
+        (kw, names, pats, complement): the keyword covers a key that is
+        one of ``names`` or matches one of ``pats`` or, with
+        ``complement``, a key that is neither — additionalProperties
+        covers the rest of the SOURCE's own names and patterns, a nested
+        unevaluatedProperties every key. With ``kw_gate`` each keyword's
+        own node validity gates its coverage (_source_needs_kw_gate)."""
+        out = []
+        for guards, src in self._coverage_sources(schema, scope):
+            if not isinstance(src, dict):
+                continue
+            names = list((src.get("properties") or {}).keys())
+            pats = list((src.get("patternProperties") or {}).keys())
+            kws = []
+            if names:
+                kws.append(("properties", names, [], False))
+            if pats:
+                kws.append(("patternProperties", [], pats, False))
+            if "additionalProperties" in src:
+                kws.append(("additionalProperties", names, pats, True))
+            if "unevaluatedProperties" in src and src is not schema:
+                kws.append(("unevaluatedProperties", [], [], True))
+            out.append((guards, src, self._source_needs_kw_gate(guards, src, schema), kws))
+        return out
 
     def _unevaluated_props_map(self, value, schema: dict, ctx: Ctx) -> Compiled:
         """unevaluatedProperties over an open MapType column: the key
-        set is dynamic, but each coverage source's key predicate is
-        static (property-name membership / pattern match /
-        additionalProperties covering the rest), so coverage is a
-        per-entry Column gated on the source's runtime guard — the map
-        analogue of applicator.py:333-365."""
-        # (cond, mode, names, pats): one entry per contributing KEYWORD,
-        # each gated on that keyword's own application validity for the
-        # self source (collect_annotations prunes invalid nodes) —
-        # 'additional' covers the complement of the SOURCE's names+pats
-        sources: list[tuple[Column, str, list[str], list[str]]] = []
-        for guards, src in self._coverage_sources(schema, ctx.scope):
-            if not isinstance(src, dict):
-                continue
-            kw_gate = self._source_needs_kw_gate(guards, src, schema)
+        set is dynamic, but each covering keyword's key predicate is
+        static, so coverage is a per-entry Column gated on the source's
+        runtime guard — the map analogue of applicator.py:333-365."""
+        sources: list[tuple[Column, list[str], list[str], bool]] = []
+        for guards, src, kw_gate, kws in self._prop_sources(schema, ctx.scope):
             cond = self._guard_cond(ctx, guards)
-
-            def _kwv(kw: str, base=cond, s=src, own=kw_gate) -> Column:
-                return base & self._kw_valid(kw, s, ctx) if own else base
-
-            names = list((src.get("properties") or {}).keys())
-            pats = list((src.get("patternProperties") or {}).keys())
-            if names:
-                sources.append((_kwv("properties"), "names", names, []))
-            if pats:
-                sources.append((_kwv("patternProperties"), "pats", [], pats))
-            if "additionalProperties" in src:
-                sources.append((_kwv("additionalProperties"), "additional", names, pats))
-            if "unevaluatedProperties" in src and src is not schema:
-                sources.append((_kwv("unevaluatedProperties"), "all", [], []))
+            for kw, names, pats, complement in kws:
+                own = cond & self._reapplied(ctx, src, kw) if kw_gate else cond
+                sources.append((own, names, pats, complement))
 
         def covered_key(k: Column) -> Column:
             cov = F.lit(False)
-            for cond, mode, names, pats in sources:
-                if mode == "all":
-                    here: Column = F.lit(True)
-                elif mode == "additional":
-                    here = F.lit(True)
-                    if names:
-                        here = here & ~k.isin(*names)
-                    for p in pats:
-                        here = here & ~k.rlike(p)
-                else:
-                    here = F.lit(False)
-                    if names:
-                        here = here | k.isin(*names)
-                    for p in pats:
-                        here = here | k.rlike(p)
+            for cond, names, pats, complement in sources:
+                here = F.lit(complement)
+                for hit in ([k.isin(*names)] if names else []) + [k.rlike(p) for p in pats]:
+                    here = here & ~hit if complement else here | hit
                 cov = cov | (cond & here)
             return cov
 
@@ -2126,30 +2057,12 @@ class Compiler:
         success is runtime (Column); coverage within a branch is static.
         Mirrors collect_annotations (jschon/jsonschema.py:515-524)."""
         covered = F.lit(False)
-        for guards, src in self._coverage_sources(schema, ctx.scope):
-            if not isinstance(src, dict):
-                continue
-            kw_gate = self._source_needs_kw_gate(guards, src, schema)
-
-            def _kwv(kw: str) -> Column:
-                # keyword-node validity gates coverage for the self
-                # source and for `not`-inner sources; branch/ref guards
-                # subsume it elsewhere
-                return self._kw_valid(kw, src, ctx) if kw_gate else F.lit(True)
-
-            terms: list[Column] = []
-            in_props = name in (src.get("properties") or {})
-            if in_props:
-                terms.append(_kwv("properties"))
-            pat_hit = any(
-                self._name_search(p, name) for p in (src.get("patternProperties") or {})
-            )
-            if pat_hit:
-                terms.append(_kwv("patternProperties"))
-            if "additionalProperties" in src and not in_props and not pat_hit:
-                terms.append(_kwv("additionalProperties"))
-            if "unevaluatedProperties" in src and src is not schema:
-                terms.append(_kwv("unevaluatedProperties"))
+        for guards, src, kw_gate, kws in self._prop_sources(schema, ctx.scope):
+            terms = [
+                self._reapplied(ctx, src, kw) if kw_gate else F.lit(True)
+                for kw, names, pats, complement in kws
+                if (name in names or any(self._name_search(p, name) for p in pats)) != complement
+            ]
             if not terms:
                 continue
             term = terms[0]
@@ -2190,11 +2103,11 @@ class Compiler:
             # that keyword's own application failed (self and not-inner
             # sources — branch guards already imply keyword success)
             if has_items:
-                c = cond & self._kw_valid("items", src, ctx) if kw_gate else cond
+                c = cond & self._reapplied(ctx, src, "items") if kw_gate else cond
                 if kw_gate and src.get(_LEGACY_ADDITIONAL_ITEMS) and n_prefix > 0:
                     # rewritten 2019-09 additionalItems: discarded (no
                     # annotation → no coverage) when the tuple failed
-                    c = c & self._kw_valid("prefixItems", src, ctx)
+                    c = c & self._reapplied(ctx, src, "prefixItems")
                 # items annotates True only when it actually evaluated
                 # an element beyond the source's prefix — a VACUOUSLY
                 # valid items (array no longer than the prefix) leaves
@@ -2203,16 +2116,16 @@ class Compiler:
                 c = c & (F.size(ctx.col) > F.lit(n_prefix))
                 all_covered = all_covered | c
             if nested_unev:
-                c = cond & self._kw_valid("unevaluatedItems", src, ctx) if kw_gate else cond
+                c = cond & self._reapplied(ctx, src, "unevaluatedItems") if kw_gate else cond
                 # same vacuity rule: annotates True only having
                 # evaluated ≥1 element (applicator.py:218-232)
                 c = c & (F.size(ctx.col) > 0)
                 all_covered = all_covered | c
             if n_prefix > 0:
-                c = cond & self._kw_valid("prefixItems", src, ctx) if kw_gate else cond
+                c = cond & self._reapplied(ctx, src, "prefixItems") if kw_gate else cond
                 partial.append((c, n_prefix, None))
             if contains_sub is not None:
-                c = cond & self._kw_valid("contains", src, ctx) if kw_gate else cond
+                c = cond & self._reapplied(ctx, src, "contains") if kw_gate else cond
                 partial.append((c, 0, contains_sub))
 
         def skip_fn(x: Column, i: Column) -> Column:

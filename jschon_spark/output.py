@@ -86,14 +86,8 @@ def detailed_output(
     and driver-side by design — at table scale the flat violations
     DataFrame is the product; this is the human-debugging view, so it
     is capped at ``max_rows`` documents."""
-    rows = (
-        df.where(F.size(violations_col) > 0)
-        .select(*id_cols, F.col(violations_col).alias("_viols"))
-        .limit(max_rows)
-        .collect()
-    )
     out = []
-    for r in rows:
+    for ident, viols in _failing_sample(df, id_cols, violations_col, max_rows):
         root: dict = {
             "valid": False,
             "instanceLocation": "",
@@ -101,7 +95,7 @@ def detailed_output(
             "errors": [],
         }
         index: dict[str, dict] = {"": root}
-        for v in sorted(r["_viols"], key=lambda v: v["keyword_path"]):
+        for v in sorted(viols, key=lambda v: v["keyword_path"]):
             segs = [s for s in v["keyword_path"].split("/") if s]
             parent = root
             prefix = ""
@@ -118,7 +112,6 @@ def detailed_output(
             }
             index[v["keyword_path"]] = node
             parent.setdefault("errors", []).append(node)
-        ident = {c: r[c] for c in id_cols}
         out.append({**ident, "result": root})
     return out
 
@@ -134,14 +127,8 @@ def hierarchical_output(
     jschon/output.py:129-165 — `detailed` nests by keyword location,
     `hierarchical` by instance location). Driver-side and sampled by
     design, like detailed_output."""
-    rows = (
-        df.where(F.size(violations_col) > 0)
-        .select(*id_cols, F.col(violations_col).alias("_viols"))
-        .limit(max_rows)
-        .collect()
-    )
     out = []
-    for r in rows:
+    for ident, viols in _failing_sample(df, id_cols, violations_col, max_rows):
         root: dict = {"valid": False, "instanceLocation": "", "errors": [], "children": []}
         index: dict[str, dict] = {"": root}
 
@@ -155,14 +142,25 @@ def hierarchical_output(
             index[ipath] = node
             return node
 
-        for v in sorted(r["_viols"], key=lambda v: (v["instance_path"], v["keyword_path"])):
+        for v in sorted(viols, key=lambda v: (v["instance_path"], v["keyword_path"])):
             node = node_at(v["instance_path"] or "")
             node["errors"].append(
                 {"keywordLocation": v["keyword_path"], "keyword": v["keyword"], "error": v["error"]}
             )
-        ident = {c: r[c] for c in id_cols}
         out.append({**ident, "result": root})
     return out
+
+
+def _failing_sample(df: DataFrame, id_cols: list[str], violations_col: str, max_rows: int) -> list:
+    """(id columns as a dict, violations) of up to ``max_rows`` failing
+    rows, collected in one job."""
+    rows = (
+        df.where(F.size(violations_col) > 0)
+        .select(*id_cols, F.col(violations_col).alias("_viols"))
+        .limit(max_rows)
+        .collect()
+    )
+    return [({c: r[c] for c in id_cols}, r["_viols"]) for r in rows]
 
 
 _ANNOTATION_KEYS = (
@@ -175,6 +173,17 @@ _ANNOTATION_KEYS = (
     "examples",
     "format",
 )
+
+
+def _static_annotations(node_schema) -> dict:
+    """A schema node's static annotation keywords → values. A
+    null-valued annotation (``"default": null``) is stored by the
+    reference but invisible in every output format (reference
+    output.py:52 yields a unit only when ``msgval is not None``)."""
+    if not isinstance(node_schema, dict):
+        return {}
+    return {k: node_schema[k] for k in _ANNOTATION_KEYS if node_schema.get(k) is not None}
+
 
 # content-vocabulary annotations are TYPE-SCOPED: the reference's
 # Content*Keyword classes declare instance_types=("string",)
@@ -225,7 +234,12 @@ def audit_output(
     sampled driver-side walk expands them for human debugging.
 
     ``include_passing=False`` keeps only failing nodes — a distributed
-    ``detailed``-style audit."""
+    ``detailed``-style audit.
+
+    Known limit: a struct per-field keyword (additionalProperties,
+    patternProperties, propertyNames, unevaluatedProperties) has one
+    trace slot per keyword location, so only its first field's node is
+    reported."""
     import json as _json
 
     _, plan, _, _ = _traced_plan(schema, df, instance_columns, id_cols, compile_kw)
@@ -235,15 +249,8 @@ def audit_output(
         node_schema, path_col, compiled = ent[0], ent[1], ent[2]
         applied = ent[3] if len(ent) > 3 else None
         valid = F.coalesce(compiled.valid, F.lit(True))
-        ann = None
-        if isinstance(node_schema, dict):
-            d = {
-                k: node_schema[k]
-                for k in _ANNOTATION_KEYS
-                if k in node_schema and node_schema[k] is not None
-            }
-            if d:
-                ann = _json.dumps(d, sort_keys=True)
+        d = _static_annotations(node_schema)
+        ann = _json.dumps(d, sort_keys=True) if d else None
         structs.append(
             F.struct(
                 F.lit(spath).alias("keyword_path"),
@@ -363,19 +370,11 @@ def _result_nodes(entries, row, expand=None) -> list[dict]:
             "keywordLocation": spath,
             "instanceLocation": row[f"__p{i}"] or "",
         }
-        if isinstance(node_schema, dict) and node["valid"]:
-            # verbose units carry annotations only on VALID nodes
-            # (invalid ones carry errors — ref output.py verbose)
-            # a null-valued annotation (e.g. ``"default": null``) is
-            # stored but invisible in output: reference output.py:52
-            # filters on ``msgval is not None``
-            ann = {
-                k: node_schema[k]
-                for k in _ANNOTATION_KEYS
-                if k in node_schema and node_schema[k] is not None
-            }
-            if ann:
-                node["annotations"] = ann
+        # verbose units carry annotations only on VALID nodes (invalid
+        # ones carry errors — ref output.py verbose)
+        ann = _static_annotations(node_schema) if node["valid"] else {}
+        if ann:
+            node["annotations"] = ann
         index[spath] = node
         parent = index.get("") if spath else None
         prefix = ""
@@ -666,14 +665,8 @@ def annotation_array(plan) -> "F.Column":
                 and (k != "contentSchema" or "contentMediaType" in node_schema)
             )
         custom = plan.custom_annotations.get(spath, ())
-        if (
-            not content_keys
-            and not custom
-            and not any(
-                k in node_schema and node_schema[k] is not None
-                for k in _ANNOTATION_KEYS
-            )
-        ):
+        anns = _static_annotations(node_schema)
+        if not content_keys and not custom and not anns:
             continue
         gate = compiled.valid
         if applied is not None:
@@ -681,14 +674,7 @@ def annotation_array(plan) -> "F.Column":
         extra = at.get(spath)
         if extra is not None:
             gate = gate & extra
-        emit = [
-            (k, gate)
-            for k in _ANNOTATION_KEYS
-            # null-valued annotations (``"default": null``) are stored by
-            # the reference but filtered out of every output format
-            # (output.py:52 ``msgval is not None``) — skip them here too
-            if k in node_schema and node_schema[k] is not None
-        ] + [(k, gate & val_col.isNotNull()) for k in content_keys]
+        emit = [(k, gate) for k in anns] + [(k, gate & val_col.isNotNull()) for k in content_keys]
         for k, kgate in emit:
             units.append(
                 F.when(
@@ -751,7 +737,14 @@ def annotation_output(
     per-row validity and instance location — plain codegen'd Columns
     from the compiler trace, scaling like any other projection. Rows
     where the DOCUMENT as a whole failed are excluded (jschon drops
-    annotations of failed evaluations; output.py:46-70)."""
+    annotations of failed evaluations; output.py:46-70).
+
+    Known limit: a struct per-field keyword (additionalProperties,
+    patternProperties, propertyNames, unevaluatedProperties) has one
+    trace slot per keyword location, filled by its first field, so only
+    that field annotates: ``{"additionalProperties": {"title": "T"}}``
+    over ``(a=4, b=5)`` gives a unit at ``/a`` only, where jschon gives
+    ``/a`` and ``/b``."""
     _, plan, _, _ = _traced_plan(schema, df, instance_columns, id_cols, compile_kw)
     ident = [F.col(c) for c in (id_cols or [])]
     out = (

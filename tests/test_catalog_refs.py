@@ -191,6 +191,39 @@ def test_recursive_ref_multi_carrier(spark):
     assert _eval_with_catalog(spark, compiled, bad_child) is False
 
 
+@pytest.mark.parametrize(
+    "kw, ddl, rows",
+    [
+        ("unevaluatedProperties", "child struct<x: bigint>", [({"x": 3},), (None,)]),
+        ("unevaluatedItems", "child array<bigint>", [([1, 2],), ([],), (None,)]),
+    ],
+)
+def test_recursive_ref_without_carrier_under_unevaluated(spark, kw, ddl, rows):
+    """With no $recursiveAnchor anywhere, a 2019-09 ``$recursiveRef: "#"``
+    is a plain ``$ref: "#"``. An unevaluated* keyword's coverage walk
+    resolves the ref the way its evaluation does, so both spellings
+    compile and give every row the same verdict and violations."""
+    from collections import Counter
+
+    from jschon_spark.compiler import compile_schema
+
+    df = spark.createDataFrame(rows, ddl)
+
+    def outcomes(ref):
+        child = {kw: False, "allOf": [ref]}
+        schema = {"$schema": "https://json-schema.org/draft/2019-09/schema",
+                  "properties": {"child": child}}
+        out = compile_schema(schema).validate(df, instance_columns=["child"]).collect()
+        return [
+            (r.valid, Counter((v.instance_path, v.keyword) for v in r.violations))
+            for r in out
+        ]
+
+    got = outcomes({"$recursiveRef": "#"})
+    assert got == outcomes({"$ref": "#"})
+    assert not got[0][0]  # the root schema evaluates nothing at /child
+
+
 # -- JSON Pointer -----------------------------------------------------------
 
 

@@ -1007,7 +1007,7 @@ def gen_external_pair(rng: random.Random, seed: int) -> tuple[dict, dict, list]:
     absolute, absolute+anchor, absolute+pointer, nested-resource URI,
     and RELATIVE references resolved against the main document's base —
     the resolution+coverage chain where round-2's external-scope bug
-    lived (ADVICE r2 #1; fix in core.py _resolve_source_ref)."""
+    lived (ADVICE r2 #1; fix in core.py _resolve_dynamic)."""
     ext = gen_ref_heavy_schema(rng, seed)
     ext_base = ext["$id"]  # https://fuzz.example/<seed>/root
     pool = [ext_base, f"{ext_base}#", "root"]  # whole-doc forms

@@ -499,3 +499,32 @@ def test_audit_output_agrees_with_verbose(spark, validated):
         key = (r.keyword_path, r.instance_path)
         if key in by_rid[r.rid] and r.applied:
             assert by_rid[r.rid][key] == r.valid, (r.rid, key)
+
+
+@pytest.mark.parametrize(
+    "kw", ["additionalProperties", "unevaluatedProperties", "propertyNames"]
+)
+def test_absent_struct_field_never_annotates(spark, kw):
+    """A struct field that is null is absent, so the reference builds no
+    result node for the per-field subschema and it never annotates
+    (jsonschema.py:515-524). Every per-field struct keyword marks its
+    child applied by its presence gate. Only the first field's
+    application is traced (one trace slot per keyword location), so the
+    rows null out ``a``, then ``b``."""
+    from jschon_spark.output import annotation_output, audit_output
+
+    schema = {kw: {"title": "T"}}
+    df = spark.createDataFrame([(1, None, 5), (2, 3, None)], "rid long, a long, b long")
+    cols = ["a", "b"]
+    units = {
+        r.rid
+        for r in annotation_output(schema, df, instance_columns=cols, id_cols=["rid"]).collect()
+        if r.instance_path == "/a" and r.keyword_path == "/" + kw
+    }
+    assert units == {2}
+    audit = {
+        r.rid: r.applied
+        for r in audit_output(schema, df, instance_columns=cols, id_cols=["rid"]).collect()
+        if r.keyword_path == "/" + kw
+    }
+    assert audit == {1: False, 2: True}

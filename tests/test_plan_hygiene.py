@@ -273,12 +273,8 @@ def test_one_arrow_decode_walk():
     assert "pandas_udf" not in (root / "audio" / "__init__.py").read_text()
 
 
-def test_one_applicator_fold():
-    """Every per-item subschema application (items, unevaluatedItems and
-    the MapType patternProperties / additionalProperties / propertyNames
-    / unevaluatedProperties) runs through ``Compiler._fold``: the HOFs
-    that build and reduce the per-item structs appear nowhere else.
-    ``map_entries`` also sorts a map literal's entries in ``_eq_literal``."""
+def _core_functions() -> list:
+    """The top-level functions and methods of ``compiler/core.py``."""
     import ast
     import pathlib
 
@@ -288,8 +284,19 @@ def test_one_applicator_fold():
     defs = [n for n in tree.body if isinstance(n, ast.FunctionDef)]
     for cls in (n for n in tree.body if isinstance(n, ast.ClassDef)):
         defs += [n for n in cls.body if isinstance(n, ast.FunctionDef)]
+    return defs
+
+
+def test_one_applicator_fold():
+    """Every per-item subschema application (items, unevaluatedItems and
+    the MapType patternProperties / additionalProperties / propertyNames
+    / unevaluatedProperties) runs through ``Compiler._fold``: the HOFs
+    that build and reduce the per-item structs appear nowhere else.
+    ``map_entries`` also sorts a map literal's entries in ``_eq_literal``."""
+    import ast
+
     sites: dict[str, list] = {"forall": [], "map_keys": [], "map_entries": []}
-    for fn in defs:
+    for fn in _core_functions():
         for node in ast.walk(fn):
             func = getattr(node, "func", None)
             if (
@@ -305,3 +312,38 @@ def test_one_applicator_fold():
         "map_keys": ["_fold"],
         "map_entries": ["_eq_literal", "_fold"],
     }, sites
+
+
+def test_one_dynamic_ref_resolver():
+    """$dynamicRef evaluation and the unevaluated* coverage walk resolve
+    through ``Compiler._resolve_dynamic``: apart from ``_index``, which
+    builds them, no other method reads the dynamic-anchor tables."""
+    import ast
+
+    readers = set()
+    for fn in _core_functions():
+        for node in ast.walk(fn):
+            if (
+                isinstance(node, ast.Attribute)
+                and isinstance(node.ctx, ast.Load)
+                and node.attr in ("dynamic_anchors", "dynamic_in_resource")
+            ):
+                readers.add(fn.name)
+    assert readers == {"_index", "_resolve_dynamic"}, readers
+
+
+def test_one_struct_field_application():
+    """Every per-field subschema application to a struct (properties,
+    patternProperties, additionalProperties, unevaluatedProperties)
+    descends through ``Compiler._apply_fields``, which marks the child
+    applied by the condition that gates its result: ``ctx.field`` is
+    called nowhere else."""
+    import ast
+
+    sites = [
+        fn.name
+        for fn in _core_functions()
+        for node in ast.walk(fn)
+        if isinstance(node, ast.Call) and getattr(node.func, "attr", None) == "field"
+    ]
+    assert sites == ["_apply_fields"], sites
