@@ -5,8 +5,8 @@ Generates a deterministic 50k-document corpus JVM-side (hash-indexed
 words from a 5k-word vocabulary, so cross-document similarity is
 negligible) with 1,000 PLANTED near-duplicate pairs (doc 50k+1 copies
 its predecessor with the last word changed), then times the full
-MinHash-LSH and SimHash pipelines and reports recall of the planted
-pairs. Usage: python bench_dedup_scale.py [n_docs] — prints one JSON
+MinHash-LSH and 128-bit SimHash pipelines and reports recall of the
+planted pairs. Usage: python bench_dedup_scale.py [n_docs] — prints one JSON
 line.
 """
 
@@ -52,18 +52,14 @@ def main() -> None:
     from jschon_spark.session import get_session
 
     # LSH knobs MUST scale with the corpus (the r5 1M rung lesson: the
-    # 50k-tuned defaults — 4 minhash rows/band, 64-bit simhash chunks,
-    # radius-12 128-bit pair keys — go quadratic in candidates at 1M
-    # and spilled 44 GB before failing). Env overrides let the ladder
-    # state each rung's correctly-sized parameters explicitly:
+    # 50k-tuned defaults — 4 minhash rows/band, radius-12 128-bit pair
+    # keys — go quadratic in candidates at 1M and spilled 44 GB before
+    # failing). Env overrides let the ladder state each rung's
+    # correctly-sized parameters explicitly:
     #   BENCH_NPERM/BENCH_BANDS  minhash signature width / band count
-    #   BENCH_SIM64=0            skip 64-bit simhash (k<=4 tier only;
-    #                            its n^2/2^(64/(k+1)) candidate bound
-    #                            cannot reach 1M docs at any k)
     #   BENCH_R128/BENCH_RC      simhash128 radius / require_chunks
     n_perm = int(os.environ.get("BENCH_NPERM", "16"))
     bands = int(os.environ.get("BENCH_BANDS", "4"))
-    run_sim64 = os.environ.get("BENCH_SIM64", "1") != "0"
     r128 = int(os.environ.get("BENCH_R128", "12"))
     rc128 = int(os.environ.get("BENCH_RC", "2"))
 
@@ -86,13 +82,6 @@ def main() -> None:
     mh_pairs = mh.collect()
     mh_sec = time.perf_counter() - t0
     mh_planted = sum(1 for r in mh_pairs if r.id_b == r.id_a + 1 and r.id_b % 50 == 1)
-
-    if run_sim64:
-        t0 = time.perf_counter()
-        sh = dedup.simhash_near_duplicates(dedup.with_simhash(docs), max_hamming=6)
-        sh_pairs = sh.collect()
-        sh_sec = time.perf_counter() - t0
-        sh_planted = sum(1 for r in sh_pairs if r.id_b == r.id_a + 1 and r.id_b % 50 == 1)
 
     # 128-bit fingerprint at the driver query's calibration (VERDICT r2
     # #2): radius 12 ≈ the old 64-bit radius 8 in similarity;
@@ -144,16 +133,6 @@ def main() -> None:
                     "planted_recall": round(mh_planted / planted, 3),
                 },
                 "minhash_params": {"n_perm": n_perm, "bands": bands},
-                "simhash": (
-                    {
-                        "sec": round(sh_sec, 2),
-                        "docs_per_sec": round(n_docs / sh_sec, 1),
-                        "pairs_found": len(sh_pairs),
-                        "planted_recall": round(sh_planted / planted, 3),
-                    }
-                    if run_sim64
-                    else "skipped: 64-bit single-chunk banding is the <=100k tier"
-                ),
                 "simhash128": {
                     "radius": r128,
                     "require_chunks": rc128,

@@ -10,20 +10,25 @@ Scale design (the 100 TB story):
   on this host, where UTF8String allocation costs ~10us/shingle);
 - LSH banding turns the O(n²) pair problem into an equi-join on
   (band, band_hash), which Spark shuffles hash-partitioned — only
-  same-bucket candidates ever meet; the self-join is hinted
-  shuffle_hash so both sides share one Exchange (ReusedExchange ⇒ the
-  signature pipeline runs once, and broadcast is impossible at the
-  10^12-row design point anyway);
+  same-bucket candidates ever meet. Every blocker here (and the
+  embedding one in similarity.py) ends in the one `band_pairs`
+  self-join, hinted shuffle_hash so both sides share one Exchange
+  (ReusedExchange ⇒ the signature pipeline runs once, and broadcast is
+  impossible at the 10^12-row design point anyway);
+- a document with no shingles gets a null signature and never joins a
+  band (an all-zero one made every empty document one hot bucket);
 - candidate verification computes exact Jaccard only on candidate
   pairs, after semi-join pruning the corpus to documents that appear
   in some candidate pair;
-- SimHash packs a document into one 64-bit integer; near-dup lookup is
-  a band-join on 16-bit chunks (Hamming ≤ 3 ⇒ some chunk matches by
-  pigeonhole).
+- SimHash packs a document into a 128-bit fingerprint (two independent
+  64-bit votes); near-dup lookup is a band-join on disjoint chunks
+  (Hamming ≤ k over k+1 chunks ⇒ some chunk matches by pigeonhole).
 """
 
 from __future__ import annotations
 
+import functools
+import operator
 
 import numpy as np
 import pandas as pd
@@ -175,7 +180,9 @@ def minhash_udf(n_perm: int = 16, shingle_size: int = 5):
     """pandas_udf: text → n_perm-component MinHash signature, fully
     batched: ONE byte-buffer window pass for the whole Arrow batch, then
     per-permutation ``_mix64(h ^ c)`` + segmented min via
-    ``np.minimum.reduceat`` — no per-row Python calls at all."""
+    ``np.minimum.reduceat`` — no per-row Python calls at all. A document
+    with no shingles (empty after normalization) gets a null signature:
+    an all-zero one would put every such document in one LSH bucket."""
     key = (n_perm, shingle_size)
     if key not in _MINHASH_UDFS:
         consts = _mix64(np.arange(1, n_perm + 1, dtype=np.uint64) * np.uint64(0x9E3779B97F4A7C15))
@@ -191,10 +198,33 @@ def minhash_udf(n_perm: int = 16, shingle_size: int = 5):
                 for i in range(n_perm):
                     mixed = _mix64(hashes ^ consts[i])
                     sigs[nz, i] = np.minimum.reduceat(mixed, red_starts).astype(np.int64)
-            return pd.Series(list(sigs))
+            return pd.Series([sig if ok else None for sig, ok in zip(sigs, nz)])
 
         _MINHASH_UDFS[key] = f
     return _MINHASH_UDFS[key]
+
+
+def band_pairs(buckets: DataFrame, id_col: str, keys: list[str], *extra: Column) -> DataFrame:
+    """The band self-join every near-duplicate blocker ends in: distinct
+    ``(id_a, id_b, *extra)`` over pairs of ``buckets`` rows that agree on
+    every column of ``keys``, with ``id_a < id_b``. ``extra`` Columns
+    read the two sides through the ``l.``/``r.`` aliases. A row with a
+    null key meets nobody (equi-join semantics), so a blocker keeps a
+    document out of the join by giving it a null key or no bucket row.
+
+    The join is hinted shuffle_hash on both sides (not broadcast): the
+    two sides then share one identical Exchange, so ReusedExchange
+    computes the whole signature→bucket pipeline ONCE. It is also the
+    only viable shape at 10^12 rows, where no side is broadcastable."""
+    l = buckets.hint("shuffle_hash").alias("l")
+    r = buckets.hint("shuffle_hash").alias("r")
+    cond = [F.col(f"l.{k}") == F.col(f"r.{k}") for k in keys]
+    cond.append(F.col(f"l.{id_col}") < F.col(f"r.{id_col}"))
+    return (
+        l.join(r, functools.reduce(operator.and_, cond))
+        .select(F.col(f"l.{id_col}").alias("id_a"), F.col(f"r.{id_col}").alias("id_b"), *extra)
+        .distinct()
+    )
 
 
 def lsh_candidate_pairs(
@@ -207,7 +237,8 @@ def lsh_candidate_pairs(
     explode to (band_id, band_hash, id), self-join per bucket. The join
     is a plain shuffle-hash equi-join on small keys; a pathological
     bucket (all-identical corpus) is bounded by distinct-per-bucket
-    pairing and AQE skew splitting."""
+    pairing and AQE skew splitting. A null signature explodes to no
+    bucket rows: its band hashes would all be ``xxhash64("")``."""
     sig = F.col(minhash_col)
     n_perm_col = F.size(sig)
     rows_per_band = (n_perm_col / bands).cast("int")
@@ -218,26 +249,10 @@ def lsh_candidate_pairs(
             F.xxhash64(F.concat_ws(",", F.transform(F.slice(sig, b * rows_per_band + 1, rows_per_band), lambda x: x.cast("string")))).alias("band_hash"),
         ),
     )
-    buckets = df.select(F.col(id_col), F.explode(band_structs).alias("b")).select(
-        id_col, "b.band_id", "b.band_hash"
-    )
-    # shuffle-hash self-join (not broadcast): both sides then share one
-    # identical Exchange, so ReusedExchange computes the whole
-    # shingle→signature→band pipeline ONCE. Also the only viable shape
-    # at 10^12 rows, where no side is broadcastable.
-    left = buckets.hint("shuffle_hash").alias("l")
-    right = buckets.hint("shuffle_hash").alias("r")
-    pairs = (
-        left.join(
-            right,
-            (F.col("l.band_id") == F.col("r.band_id"))
-            & (F.col("l.band_hash") == F.col("r.band_hash"))
-            & (F.col(f"l.{id_col}") < F.col(f"r.{id_col}")),
-        )
-        .select(F.col(f"l.{id_col}").alias("id_a"), F.col(f"r.{id_col}").alias("id_b"))
-        .distinct()
-    )
-    return pairs
+    buckets = df.select(
+        F.col(id_col), F.explode(F.when(sig.isNotNull(), band_structs)).alias("b")
+    ).select(id_col, "b.band_id", "b.band_hash")
+    return band_pairs(buckets, id_col, ["band_id", "band_hash"])
 
 
 def jaccard(a: Column, b: Column) -> Column:
@@ -262,7 +277,9 @@ def minhash_near_duplicates(
     are negligible) and only for documents that appear in a candidate
     pair — a semi-join prunes the corpus before the shingle arrays are
     recomputed, so the expensive array shuffle is proportional to the
-    candidate set, not the corpus."""
+    candidate set, not the corpus. ``bands`` must divide ``n_perm``."""
+    if bands < 1 or n_perm % bands:
+        raise ValueError(f"bands={bands} must be >= 1 and divide n_perm={n_perm}")
     hs = df.select(
         F.col(id_col),
         shingle_hash_udf(shingle_size)(F.col(text_col)).alias("shingle_hs"),
@@ -314,7 +331,7 @@ def ngram_jaccard_pairs(
 # unlike set-based Jaccard it is order-sensitive and catches small in-place
 # edits. It is also O(|a|·|b|) per pair, so at the 10^12-row design point it
 # NEVER runs corpus-wide — it verifies candidate pairs produced by a cheap
-# blocker (MinHash/SimHash banding above, or length-bucket blocking for the
+# blocker (MinHash/SimHash banding, or `minhash_band_pairs_sql` for the
 # SQL-oracle path). Two scale guards keep the quadratic kernel bounded:
 # a length-gap prefilter (|la-lb| > (1-t)·max ⇒ sim < t, pair is dropped
 # before the DP ever runs) and Spark's banded-DP bounded levenshtein
@@ -400,10 +417,10 @@ def minhash_band_pairs_sql(
     word ``n``-grams; two docs collide in a band with probability equal
     to their gram Jaccard, so a near-dup at J misses all bands with
     probability (1-J)^n_bands (~1e-3 at J=0.9, bands=3). One equi-join
-    per the exploded (band, key) rows — same shuffle shape as production
-    LSH banding. Content blocking beats length blocking by orders of
-    magnitude here: measured 1.3k candidates vs 1.2M from 16-char
-    length buckets on the 5k-doc sf0.1 corpus. Production cascades
+    per the exploded (band, key) rows — the same `band_pairs` join as
+    production LSH banding. Content blocking beats length blocking by
+    orders of magnitude here: measured 1.3k candidates vs 1.2M from
+    16-char length buckets on the 5k-doc sf0.1 corpus. Production cascades
     still prefer `minhash_near_duplicates` (whole-batch xxhash kernels,
     more permutations); this blocker exists so the full
     block->verify cascade can be value-checked against ANSI SQL."""
@@ -422,42 +439,7 @@ def minhash_band_pairs_sql(
     long = grams.select(F.col(id_col), F.explode(F.array(*bands)).alias("b")).select(
         F.col(id_col), F.col("b.salt").alias("_salt"), F.col("b.k").alias("_k")
     )
-    a = long.select(F.col(id_col).alias("id_a"), "_salt", "_k")
-    b = long.select(F.col(id_col).alias("id_b"), "_salt", "_k")
-    return (
-        a.join(b, ["_salt", "_k"])
-        .where(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .distinct()
-    )
-
-
-def length_bucket_pairs(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    bucket_width: int = 16,
-) -> DataFrame:
-    """Candidate ``(id_a, id_b)`` pairs by length-bucket blocking: pairs
-    whose char lengths land in the same or adjacent ``bucket_width``-char
-    bucket. One equi-join shuffle on the bucket id instead of a cross
-    join, but candidate volume is O(n²/buckets) — on corpora whose
-    lengths concentrate, prefer the content-based blockers
-    (`minhash_band_pairs_sql`, `lsh_candidate_pairs`): measured 1.2M
-    length-bucket candidates vs 1.3k content candidates on the 5k-doc
-    sf0.1 corpus. Guaranteed recall only for pairs whose length gap is
-    <= bucket_width."""
-    lens = df.select(F.col(id_col), (F.length(text_col) / bucket_width).cast("int").alias("_bk"))
-    # probe b-1/b/b+1 from the LEFT side only: with the id_a < id_b order
-    # filter, each qualifying pair meets on exactly one probe row (probes
-    # are distinct buckets), regardless of which member holds the higher
-    # bucket — no post-join dedup needed.
-    a = lens.select(
-        F.col(id_col).alias("id_a"),
-        F.explode(F.array(F.col("_bk") - 1, F.col("_bk"), F.col("_bk") + 1)).alias("_bk"),
-    )
-    b = lens.select(F.col(id_col).alias("id_b"), "_bk")
-    return a.join(b, "_bk").where(F.col("id_a") < F.col("id_b")).select("id_a", "id_b")
+    return band_pairs(long, id_col, ["_salt", "_k"])
 
 
 # -- SimHash ----------------------------------------------------------------
@@ -506,20 +488,6 @@ def _simhash_batch(hashes: np.ndarray, starts: np.ndarray, seg_lens: np.ndarray)
     return out
 
 
-@F.pandas_udf(T.LongType())
-def _simhash_text_udf(text: pd.Series) -> pd.Series:
-    """text → 64-bit SimHash, whole-batch numpy end-to-end.
-
-    Rationale (measured on this host): materializing shingle substrings
-    JVM-side costs ~10us/shingle; the unrolled Column vote is fast to
-    run but takes >10s to Janino-compile; the compact HOF vote compiles
-    fast but evaluates interpreted. One batch-wide window pass +
-    segmented reduceat votes beats all three by an order of magnitude.
-    """
-    hashes, starts, seg_lens = _dedup_segments(*_pack_batch(_norm_texts(text), 4))
-    return pd.Series(_simhash_batch(hashes, starts, seg_lens))
-
-
 # second independent hash family for the 128-bit fingerprint: re-mix the
 # (already mixed) window hash with a fixed odd salt — same construction
 # as the minhash permutations
@@ -532,15 +500,14 @@ def _simhash128_text_udf(text: pd.Series) -> pd.Series:
     fingerprint). Needed for wide Hamming radii: pigeonhole banding with
     k+1 chunks keeps chunks >= floor(128/(k+1)) bits, so radius 8 still
     gets 14-bit chunks (vs 7-bit on a 64-bit fingerprint — a candidate
-    explosion at corpus scale)."""
+    explosion at corpus scale). A document with no shingles gets a null
+    pair, so it never joins a band."""
     hashes, starts, seg_lens = _dedup_segments(*_pack_batch(_norm_texts(text), 4))
     a = _simhash_batch(hashes, starts, seg_lens)
     b = _simhash_batch(_mix64(hashes ^ _SIMHASH_SALT_B), starts, seg_lens)
-    return pd.Series([np.array([x, y], dtype=np.int64) for x, y in zip(a, b)])
-
-
-def with_simhash(df: DataFrame, text_col: str = "text", out: str = "simhash") -> DataFrame:
-    return df.withColumn(out, _simhash_text_udf(F.col(text_col)))
+    return pd.Series(
+        [np.array([x, y], dtype=np.int64) if n else None for x, y, n in zip(a, b, seg_lens)]
+    )
 
 
 def with_simhash128(
@@ -552,69 +519,6 @@ def with_simhash128(
         df.withColumn(out[0], F.col("_sh128").getItem(0))
         .withColumn(out[1], F.col("_sh128").getItem(1))
         .drop("_sh128")
-    )
-
-
-def simhash_near_duplicates(
-    df: DataFrame, id_col: str = "doc_id", simhash_col: str = "simhash", max_hamming: int = 3
-) -> DataFrame:
-    """Near-dup pairs by Hamming distance ≤ k on SimHash: band the 64
-    bits into ``max_hamming + 1`` chunks — the pigeonhole guarantee
-    (d ≤ k over k+1 disjoint chunks ⇒ at least one chunk untouched)
-    REQUIRES the chunk count to track k; a fixed 4-way split silently
-    loses recall for k > 3. Join per chunk, verify with bit_count(xor).
-
-    SCALE BOUND (candidate growth): expected candidates per chunk are
-    ~n²/2^w for chunk width w = 64/(k+1). k ≤ 4 keeps w ≥ 12 (4096+
-    buckets/chunk); k ≥ 5 drops w to ≤ 10 bits and candidates grow
-    near-quadratically at corpus scale — use the 128-bit fingerprint
-    (`with_simhash128` + `simhash128_near_duplicates`), which keeps
-    w ≥ 14 out to k = 8. k ≥ 16 has no sound 64-bit banding at all
-    (chunks < 4 bits), so it raises instead of silently losing the
-    pigeonhole guarantee."""
-    if max_hamming + 1 > 16:
-        raise ValueError(
-            f"max_hamming={max_hamming} needs {max_hamming + 1} disjoint chunks; "
-            "a 64-bit fingerprint cannot band that finely without losing the "
-            "pigeonhole guarantee — use with_simhash128 + simhash128_near_duplicates"
-        )
-    n_chunks = max(1, max_hamming + 1)
-    # as-equal-as-possible chunk widths covering all 64 bits
-    base_w, extra = divmod(64, n_chunks)
-    fp = F.col(simhash_col)
-    parts, off = [], 0
-    for c in range(n_chunks):
-        w = base_w + (1 if c < extra else 0)
-        mask = (1 << w) - 1
-        parts.append(
-            F.struct(
-                F.lit(c).alias("chunk_id"),
-                F.shiftrightunsigned(fp, off).bitwiseAND(F.lit(mask).cast("long")).alias("chunk"),
-            )
-        )
-        off += w
-    chunks = F.array(*parts)
-    buckets = df.select(F.col(id_col), fp.alias("fp"), F.explode(chunks).alias("c")).select(
-        id_col, "fp", "c.chunk_id", "c.chunk"
-    )
-    # shuffle-hash self-join → identical Exchanges → the SimHash
-    # fingerprint pipeline is computed once and reused (see
-    # lsh_candidate_pairs); broadcast would recompute it per side
-    l, r = buckets.hint("shuffle_hash").alias("l"), buckets.hint("shuffle_hash").alias("r")
-    return (
-        l.join(
-            r,
-            (F.col("l.chunk_id") == F.col("r.chunk_id"))
-            & (F.col("l.chunk") == F.col("r.chunk"))
-            & (F.col(f"l.{id_col}") < F.col(f"r.{id_col}")),
-        )
-        .select(
-            F.col(f"l.{id_col}").alias("id_a"),
-            F.col(f"r.{id_col}").alias("id_b"),
-            F.bit_count(F.col("l.fp").bitwiseXOR(F.col("r.fp"))).alias("hamming"),
-        )
-        .distinct()
-        .where(F.col("hamming") <= max_hamming)
     )
 
 
@@ -702,7 +606,11 @@ def simhash128_buckets(
         a.alias("fp_a"),
         b.alias("fp_b"),
         F.array(*chunk_cols).alias("_chunks"),
-        F.posexplode(F.lit(combos)).alias("chunk_id", "_combo"),
+        # a null fingerprint gets no combination rows: xxhash64 of its
+        # all-null chunks would be one constant key
+        F.posexplode(F.when(a.isNotNull() & b.isNotNull(), F.lit(combos))).alias(
+            "chunk_id", "_combo"
+        ),
     )
     key = F.xxhash64(
         *[
@@ -742,22 +650,9 @@ def simhash128_near_duplicates(
     buckets = simhash128_buckets(
         df, id_col=id_col, cols=cols, max_hamming=max_hamming, require_chunks=require_chunks
     )
-    l, r = buckets.hint("shuffle_hash").alias("l"), buckets.hint("shuffle_hash").alias("r")
-    return (
-        l.join(
-            r,
-            (F.col("l.chunk_id") == F.col("r.chunk_id"))
-            & (F.col("l.chunk") == F.col("r.chunk"))
-            & (F.col(f"l.{id_col}") < F.col(f"r.{id_col}")),
-        )
-        .select(
-            F.col(f"l.{id_col}").alias("id_a"),
-            F.col(f"r.{id_col}").alias("id_b"),
-            (
-                F.bit_count(F.col("l.fp_a").bitwiseXOR(F.col("r.fp_a")))
-                + F.bit_count(F.col("l.fp_b").bitwiseXOR(F.col("r.fp_b")))
-            ).alias("hamming"),
-        )
-        .distinct()
-        .where(F.col("hamming") <= max_hamming)
+    hamming = F.bit_count(F.col("l.fp_a").bitwiseXOR(F.col("r.fp_a"))) + F.bit_count(
+        F.col("l.fp_b").bitwiseXOR(F.col("r.fp_b"))
+    )
+    return band_pairs(buckets, id_col, ["chunk_id", "chunk"], hamming.alias("hamming")).where(
+        F.col("hamming") <= max_hamming
     )

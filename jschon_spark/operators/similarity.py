@@ -29,6 +29,7 @@ from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
 
 from jschon_spark.fixtures import _splitmix64
+from jschon_spark.operators.dedup import band_pairs
 
 
 def dot(a: Column, b: Column) -> Column:
@@ -123,7 +124,8 @@ def embedding_near_duplicates(
     n_rows: int | None = None,
 ) -> DataFrame:
     """Embedding-cosine near-dup pairs via BANDED hyperplane LSH
-    (OR-amplification, same pigeonhole pattern as dedup.simhash):
+    (OR-amplification through the same `dedup.band_pairs` join as the
+    text blockers):
     a pair is a candidate if ANY of the ``bands`` per-band signatures
     collide. At the defaults (8 bands x 8 bits), P(candidate) at
     cos >= 0.9 is 1-(1-0.856^8)^8 ~ 0.93 vs ~0.28 for the old single
@@ -163,20 +165,7 @@ def embedding_near_duplicates(
     buckets = sigs.select(
         F.col(id_col), F.posexplode_outer("bsig").alias("band_id", "bucket")
     )
-    # shuffle_hash self-join → identical Exchanges → signature pipeline
-    # computed once (ReusedExchange); broadcast would recompute per side
-    l = buckets.hint("shuffle_hash").alias("l")
-    r = buckets.hint("shuffle_hash").alias("r")
-    cand = (
-        l.join(
-            r,
-            (F.col("l.band_id") == F.col("r.band_id"))
-            & (F.col("l.bucket") == F.col("r.bucket"))
-            & (F.col(f"l.{id_col}") < F.col(f"r.{id_col}")),
-        )
-        .select(F.col(f"l.{id_col}").alias("id_a"), F.col(f"r.{id_col}").alias("id_b"))
-        .distinct()
-    )
+    cand = band_pairs(buckets, id_col, ["band_id", "bucket"])
     # verification joins the candidate PAIRS back to the raw vectors:
     # the inner join is itself the pruning (vectors shuffle only for
     # candidate ids), and cand appears once in the plan — a semi-join

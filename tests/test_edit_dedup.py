@@ -8,11 +8,7 @@ case/punct duplicate groups; plan tests assert the scale design
 import pytest
 from pyspark.sql import functions as F
 
-from jschon_spark.operators.dedup import (
-    edit_similarity,
-    edit_verified_pairs,
-    length_bucket_pairs,
-)
+from jschon_spark.operators.dedup import edit_similarity, edit_verified_pairs
 from jschon_spark.operators.text import (
     normalize_text,
     normalized_dedup,
@@ -27,8 +23,8 @@ def docs(spark):
         (1, "the quick brown fox jumped over the lazy dog"),  # jumps->jumped: 2 edits
         (2, "the quick brown fox jumps over the lazy cat"),   # 1 subst from 0
         (3, "a completely different document about spark"),   # len 44, unrelated
-        (4, "tiny"),                                          # far length bucket
-        (5, "x" * 200),                                       # far length bucket
+        (4, "tiny"),                                          # far shorter
+        (5, "x" * 200),                                       # far longer
     ]
     return spark.createDataFrame(rows, "doc_id long, text string")
 
@@ -76,30 +72,6 @@ def test_edit_verified_pairs_jvm_only(docs, spark):
     pairs = spark.createDataFrame([(0, 1)], "id_a long, id_b long")
     plan = edit_verified_pairs(docs, pairs)._jdf.queryExecution().executedPlan().toString()
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
-
-
-def test_length_bucket_pairs_symmetric_adjacency(spark):
-    # lower-id doc in the HIGHER bucket must still meet its neighbor:
-    # id 0 len 20 (bucket 1), id 1 len 10 (bucket 0) with width 16.
-    df = spark.createDataFrame(
-        [(0, "x" * 20), (1, "y" * 10), (2, "z" * 100)], "doc_id long, text string"
-    )
-    got = {(r["id_a"], r["id_b"]) for r in length_bucket_pairs(df, bucket_width=16).collect()}
-    assert (0, 1) in got
-    assert all(p[0] < p[1] for p in got)
-    assert (0, 2) not in got and (1, 2) not in got
-    # exactly-once: no duplicate pair rows from the 3-probe explode
-    all_rows = length_bucket_pairs(df, bucket_width=16).collect()
-    assert len(all_rows) == len(got)
-
-
-def test_edit_cascade_finds_planted_dups(spark, docs):
-    cand = length_bucket_pairs(docs, bucket_width=16)
-    out = {
-        (r["id_a"], r["id_b"]) for r in edit_verified_pairs(docs, cand, threshold=0.8).collect()
-    }
-    assert (0, 1) in out and (0, 2) in out and (1, 2) in out
-    assert not any(3 in p or 4 in p or 5 in p for p in out)
 
 
 @pytest.fixture(scope="module")

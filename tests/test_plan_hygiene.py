@@ -273,6 +273,30 @@ def test_one_arrow_decode_walk():
     assert "pandas_udf" not in (root / "audio" / "__init__.py").read_text()
 
 
+def test_one_band_self_join():
+    """Every near-duplicate blocker (MinHash LSH, MinHash SQL bands,
+    SimHash-128, embedding hyperplane LSH) ends in ``dedup.band_pairs``:
+    the shuffle_hash band self-join is hinted nowhere else."""
+    import ast
+    import pathlib
+
+    import jschon_spark
+
+    root = pathlib.Path(jschon_spark.__file__).parent
+    sites = set()
+    for path in sorted(root.rglob("*.py")):
+        for top in ast.parse(path.read_text()).body:
+            for node in ast.walk(top):
+                if (
+                    isinstance(node, ast.Call)
+                    and getattr(node.func, "attr", None) == "hint"
+                    and node.args
+                    and getattr(node.args[0], "value", None) == "shuffle_hash"
+                ):
+                    sites.add((str(path.relative_to(root)), getattr(top, "name", None)))
+    assert sites == {("operators/dedup.py", "band_pairs")}, sites
+
+
 def _core_functions() -> list:
     """The top-level functions and methods of ``compiler/core.py``."""
     import ast

@@ -82,15 +82,6 @@ def test_jaccard_oracle(spark, docs):
     assert out[(0, 3)] == 0.0
 
 
-def test_simhash_near_duplicates(spark, docs):
-    sigs = dedup.with_simhash(docs.where("text <> ''"))
-    rows = {r.doc_id: r.simhash for r in sigs.collect()}
-    assert rows[0] == rows[1]
-    assert bin(rows[0] ^ rows[2]).count("1") < bin(rows[0] ^ rows[3]).count("1")
-    pairs = {(r.id_a, r.id_b) for r in dedup.simhash_near_duplicates(sigs, max_hamming=10).collect()}
-    assert (0, 1) in pairs
-
-
 def test_brute_force_topk_matches_numpy(spark):
     rng = np.random.default_rng(0)
     vecs = rng.normal(size=(50, 8)).astype(np.float32)
@@ -297,31 +288,11 @@ def test_ann_index_null_vectors(spark, tmp_path):
     assert 0 in got2 and 1 not in got2
 
 
-def test_simhash_pigeonhole_guarantee(spark):
-    """max_hamming > 3 must still be recall-guaranteed: plant a pair at
-    hamming 6 that differs in ALL of the old fixed 4x16 chunks (one bit
-    flipped in chunks 0,1,2 and three bits in chunk 3) — the adaptive
-    7-chunk banding must still find it."""
-    base = 0x0123456789ABCDEF
-    flipped = base ^ (1 << 0) ^ (1 << 16) ^ (1 << 32) ^ (1 << 48) ^ (1 << 49) ^ (1 << 50)
-    assert bin(base ^ flipped).count("1") == 6
-    df = spark.createDataFrame(
-        [(0, base), (1, flipped), (2, ~base & 0x7FFFFFFFFFFFFFFF)],
-        "doc_id long, simhash long",
-    )
-    pairs = {(r.id_a, r.id_b) for r in dedup.simhash_near_duplicates(df, max_hamming=6).collect()}
-    assert (0, 1) in pairs
-    assert not any(2 in p for p in pairs)
-
-
 def test_simhash_wide_radius_raises():
-    """ADVICE r2: max_hamming + 1 > 16 silently lost the pigeonhole
-    guarantee on a 64-bit fingerprint; it must raise and point to the
-    128-bit variant instead."""
+    """Banding a radius that needs more than 16 chunks would drop below
+    8-bit chunks and lose candidate-count control: it must raise."""
     import pyspark.sql  # noqa: F401  (no session needed — validation is eager)
 
-    with pytest.raises(ValueError, match="128"):
-        dedup.simhash_near_duplicates(None, max_hamming=16)
     with pytest.raises(ValueError):
         dedup.simhash128_near_duplicates(None, max_hamming=16)
 
@@ -353,11 +324,17 @@ def test_simhash128_near_duplicates_planted(spark):
 
 def test_with_simhash128_end_to_end(spark, docs):
     """Text → 128-bit fingerprint → near-dups: identical docs pair at
-    hamming 0; the unrelated doc never pairs at radius 8."""
+    hamming 0, the near dup is closer than the unrelated doc, and the
+    unrelated doc never pairs at radius 8."""
     sigs = dedup.with_simhash128(docs.where("text <> ''"))
     rows = {r.doc_id: (r.simhash_a, r.simhash_b) for r in sigs.collect()}
     assert rows[0] == rows[1]
     assert rows[0][0] != rows[0][1]  # the two hash families differ
+
+    def hamming(i, j):
+        return sum(bin(x ^ y).count("1") for x, y in zip(rows[i], rows[j]))
+
+    assert hamming(0, 2) < hamming(0, 3)
     pairs = {(r.id_a, r.id_b): r.hamming for r in dedup.simhash128_near_duplicates(sigs, max_hamming=8).collect()}
     assert pairs.get((0, 1)) == 0
     assert not any(3 in p for p in pairs)
@@ -447,3 +424,44 @@ def test_embedding_near_dup_no_count_job(spark, tmp_path, monkeypatch):
     assert set(out.columns) == {"id_a", "id_b", "cosine_sim"}
     monkeypatch.undo()
     assert out.count() >= 0
+
+
+@pytest.mark.parametrize(
+    "blocker",
+    [
+        lambda df: dedup.minhash_near_duplicates(df, threshold=0.5),
+        lambda df: dedup.simhash128_near_duplicates(dedup.with_simhash128(df), max_hamming=8),
+    ],
+    ids=["minhash", "simhash128"],
+)
+def test_empty_documents_never_pair(spark, blocker):
+    """A document with no shingles has no signature, so it never joins a
+    band: 100 empty/blank documents must not become C(100, 2) pairs in
+    one hot bucket, while real duplicates still pair."""
+    real = "the quick brown fox jumps over the lazy dog"
+    rows = [(i, "" if i % 2 else "   ") for i in range(100)] + [(100, real), (101, real)]
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+    pairs = {(r.id_a, r.id_b) for r in blocker(df).collect()}
+    assert pairs == {(100, 101)}
+
+
+def test_null_fingerprint_has_no_band_key(spark):
+    """A null 128-bit fingerprint must not get a band key: with
+    require_chunks >= 2 the xxhash64 of its all-null chunks was one
+    constant, so every such document met every other in one bucket."""
+    df = spark.createDataFrame(
+        [(0, None, None), (1, None, None), (2, 5, 7)],
+        "doc_id long, simhash_a long, simhash_b long",
+    )
+    for rc in (1, 2):
+        buckets = dedup.simhash128_buckets(df, max_hamming=8, require_chunks=rc)
+        assert buckets.where("doc_id < 2 AND chunk IS NOT NULL").count() == 0, rc
+
+
+@pytest.mark.parametrize("bands", [32, 3, 0])
+def test_minhash_bands_must_divide_signature(spark, docs, bands):
+    """bands > n_perm made every band an empty slice with one constant
+    hash, so every pair became a candidate; any band count that does not
+    divide the signature is rejected."""
+    with pytest.raises(ValueError, match="divide"):
+        dedup.minhash_near_duplicates(docs, n_perm=16, bands=bands)
