@@ -25,16 +25,13 @@ Pipeline (each stage is one of the tested operators):
    components (``graph.dedup_by_components``: transitive closure, not
    just pairwise drops). Only (id, fp) metadata enters the banded join;
    payloads shuffle exactly once, in the final anti-join by id.
-4. Curated clips land under --out tagged with this run's run_id;
-   per-partition manifest rows append ONLY afterwards (the commit
-   point), so `manifest.read_committed` readers get exactly-once
-   visibility — the same at-least-once-write/commit-on-append contract
-   as validate_clips.py.
+4. Curated clips land under --out tagged with this run's run_id, then
+   the per-partition manifest rows commit — the same protocol as
+   validate_clips.py. A row counts the partition's processed input
+   clips (n_rows) and the survivors this run wrote (n_valid).
 
-Dedup note for resume: near-dup detection runs over the PENDING rows of
-each run (the banded join is corpus-global within a run, cross-run
-duplicates are committed independently) — re-running after a crash
-reprocesses only uncommitted partitions, at the cost of missing dup
+Dedup note for resume: near-dup detection runs over each run's PENDING
+rows (corpus-global within a run), so a rerun after a crash misses dup
 pairs that straddle a commit boundary. Full-corpus dedup is a batch
 pass over the curated table with the same operators.
 """
@@ -141,20 +138,17 @@ def main(argv=None) -> int:
     from pyspark.sql import functions as F
 
     from jschon_spark import manifest as mf
+    from jschon_spark import pipeline as pl
 
     spark = SparkSession.builder.appName("jschon_spark_curate_clips").getOrCreate()
     clips = spark.read.parquet(args.clips)
 
     if args.manifest:
-        from jschon_spark.pipeline import select_pending
-
-        all_parts = clips.select(args.partition_col).distinct()
-        pending = mf.pending_partitions(spark, args.manifest, all_parts)
-        clips, parts, n_pending = select_pending(clips, pending, args.partition_col)
-        if n_pending == 0:
+        clips, frontier, n = pl.resume_pending(spark, clips, args.manifest, args.partition_col)
+        if n == 0:
             print("curate_clips: manifest complete, nothing to do")
             return 0
-        print(f"curate_clips: processing {n_pending} pending partitions")
+        print(f"curate_clips: processing {n} pending partitions")
 
     run_id = args.run_id or mf.new_run_id()
     if args.provenance:
@@ -167,48 +161,25 @@ def main(argv=None) -> int:
         prov = with_audio_metadata(
             clips.select("clip_id", args.partition_col, "bytes")
         ).drop("bytes")
-        prov.withColumn("run_id", F.lit(run_id)).write.mode("append").parquet(
-            f"{args.out}/provenance"
-        )
+        pl.append_tagged(prov, args.out, "provenance", run_id)
+    refs = spark.read.parquet(args.ref_transcripts) if args.ref_transcripts else None
     curated, _ = curate(
-        spark,
-        clips,
-        target_sr=args.target_sr,
-        target_dbfs=args.target_dbfs,
-        max_hamming=args.max_hamming,
-        dedup=not args.no_dedup,
-        loudness=args.loudness_gate,
-        min_lufs=args.min_lufs,
-        max_lufs=args.max_lufs,
-        ref_transcripts=(
-            spark.read.parquet(args.ref_transcripts) if args.ref_transcripts else None
-        ),
-        max_wer=args.max_wer,
+        spark, clips, target_sr=args.target_sr, target_dbfs=args.target_dbfs,
+        max_hamming=args.max_hamming, dedup=not args.no_dedup,
+        loudness=args.loudness_gate, min_lufs=args.min_lufs, max_lufs=args.max_lufs,
+        ref_transcripts=refs, max_wer=args.max_wer,
     )
-    curated.withColumn("run_id", F.lit(run_id)).write.mode("append").parquet(
-        f"{args.out}/curated"
-    )
+    pl.append_tagged(curated, args.out, "curated", run_id)
 
     if args.manifest:
-        # COMMIT: per-partition rows only after the curated append.
-        # Partitions are keyed off the PROCESSED input, not the
-        # survivors — a partition whose clips all gate out must still
-        # commit or it would reprocess forever.
-        processed = clips.groupBy(F.col(args.partition_col).alias("part_id")).agg(
-            F.count(F.lit(1)).alias("n_rows")
-        )
-        surv = curated.groupBy(F.col(args.partition_col).alias("part_id")).agg(
-            F.count(F.lit(1)).alias("n_valid")
-        )
-        per_part = (
-            processed.join(surv, "part_id", "left")
-            .withColumn("n_valid", F.coalesce(F.col("n_valid"), F.lit(0)))
-            .withColumn("n_invalid", F.col("n_rows") - F.col("n_valid"))
-            .withColumn("partition_valid", F.col("n_invalid") == 0)
-        )
-        mf.append_results(
-            spark, args.manifest, per_part, run_id=run_id, source_path=args.clips
-        )
+        # COMMIT: n_rows counts the PROCESSED input (a fully-gated-out
+        # partition still commits), n_valid the survivors this run wrote
+        key = F.col(args.partition_col).alias("part_id")
+        processed = clips.groupBy(key).agg(F.count(F.lit(1)).alias("n_rows"))
+        written = pl.read_written(spark, args.out, "curated", run_id)
+        surv = written.groupBy(key).agg(F.count(F.lit(1)).alias("n_valid"))
+        counts = processed.join(surv, "part_id", "left")
+        pl.commit_partitions(spark, args.manifest, frontier, counts, run_id, args.clips)
     print(f"curate_clips: run {run_id} complete")
     return 0
 

@@ -29,10 +29,10 @@ Pipeline (each stage is one of the tested operators):
    transitive clusters collapsed to canonical docs. Only (id, key)
    metadata enters the banded join; document text shuffles once, in
    the final anti-join by id.
-5. Curated docs land under --out tagged with this run's run_id;
-   per-partition manifest rows append ONLY afterwards (the commit
-   point) — `manifest.read_committed` readers get exactly-once
-   visibility over at-least-once writes.
+5. Curated docs land under --out tagged with this run's run_id, then
+   the per-partition manifest rows commit — the same protocol as
+   validate_clips.py. A row counts the partition's processed input
+   docs (n_rows) and the survivors this run wrote (n_valid).
 
 Same resume caveat as curate_clips.py: near-dup detection is
 corpus-global within a run; cross-run duplicates straddle commit
@@ -108,64 +108,41 @@ def main(argv=None) -> int:
     from pyspark.sql import functions as F
 
     from jschon_spark import manifest as mf
+    from jschon_spark import pipeline as pl
 
     spark = SparkSession.builder.appName("jschon_spark_curate_docs").getOrCreate()
     docs = spark.read.parquet(args.docs)
 
-    # The manifest keys partitions by an int part_id (validate_clips
-    # contract). A documents table partitions by a STRING column
-    # (source), so derive a stable int key from the partition value —
-    # the same trick an Iceberg-bucket transform uses. Collisions just
-    # coarsen resume granularity (two sources sharing a key commit
-    # together), never correctness.
+    # The manifest keys partitions by an int part_id, and a documents
+    # table partitions by a STRING column (source): derive a stable int
+    # key from it, as an Iceberg-bucket transform does. Collisions only
+    # coarsen resume granularity (the sources commit together).
     part_key = F.pmod(F.xxhash64(args.partition_col), F.lit(1 << 31)).cast("int")
     docs = docs.withColumn("_part_id", part_key)
 
     if args.manifest:
-        from jschon_spark.pipeline import select_pending
-
-        all_parts = docs.select(F.col("_part_id").alias("part_id")).distinct()
-        pending = mf.pending_partitions(spark, args.manifest, all_parts)
-        docs, parts, n_pending = select_pending(
-            docs, pending.withColumnRenamed("part_id", "_part_id"), "_part_id"
-        )
-        if n_pending == 0:
+        docs, frontier, n = pl.resume_pending(spark, docs, args.manifest, "_part_id")
+        if n == 0:
             print("curate_docs: manifest complete, nothing to do")
             return 0
-        print(f"curate_docs: processing {n_pending} pending partitions")
+        print(f"curate_docs: processing {n} pending partitions")
 
     run_id = args.run_id or mf.new_run_id()
     curated, _ = curate(
-        spark,
-        docs,
-        min_quality=args.min_quality,
-        langs=tuple(args.langs.split(",")),
-        edit_threshold=args.edit_threshold,
-        dedup=not args.no_dedup,
+        spark, docs, min_quality=args.min_quality, langs=tuple(args.langs.split(",")),
+        edit_threshold=args.edit_threshold, dedup=not args.no_dedup,
     )
-    curated.withColumn("run_id", F.lit(run_id)).write.mode("append").parquet(
-        f"{args.out}/curated"
-    )
+    pl.append_tagged(curated, args.out, "curated", run_id)
 
     if args.manifest:
-        # COMMIT: per-partition rows only after the curated append;
-        # keyed off the PROCESSED input so fully-gated-out partitions
-        # still commit (no infinite reprocess).
-        processed = docs.groupBy(F.col("_part_id").alias("part_id")).agg(
-            F.count(F.lit(1)).alias("n_rows")
-        )
-        surv = curated.groupBy(F.col("_part_id").alias("part_id")).agg(
-            F.count(F.lit(1)).alias("n_valid")
-        )
-        per_part = (
-            processed.join(surv, "part_id", "left")
-            .withColumn("n_valid", F.coalesce(F.col("n_valid"), F.lit(0)))
-            .withColumn("n_invalid", F.col("n_rows") - F.col("n_valid"))
-            .withColumn("partition_valid", F.col("n_invalid") == 0)
-        )
-        mf.append_results(
-            spark, args.manifest, per_part, run_id=run_id, source_path=args.docs
-        )
+        # COMMIT: n_rows counts the PROCESSED input (a fully-gated-out
+        # partition still commits), n_valid the survivors this run wrote
+        key = F.col("_part_id").alias("part_id")
+        processed = docs.groupBy(key).agg(F.count(F.lit(1)).alias("n_rows"))
+        written = pl.read_written(spark, args.out, "curated", run_id)
+        surv = written.groupBy(key).agg(F.count(F.lit(1)).alias("n_valid"))
+        counts = processed.join(surv, "part_id", "left")
+        pl.commit_partitions(spark, args.manifest, frontier, counts, run_id, args.docs)
     print(f"curate_docs: run {run_id} complete")
     return 0
 

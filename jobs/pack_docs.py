@@ -23,13 +23,14 @@ Pipeline:
    each hash bucket's token stream into ``--budget``-length
    ``input_ids`` rows — ONE exchange for the whole job.
 3. Commit. Sequences land under --out tagged with this run's run_id;
-   one manifest row per BUCKET appends afterwards (the commit point).
+   one manifest row per BUCKET appends afterwards (the commit point,
+   the same protocol as validate_clips.py), counting the sequences
+   this run wrote.
 
 Resume is BUCKET-grained and exact: a bucket's stream is a pure
-function of the documents that hash into it, so filtering the input
-to pending buckets (the bucket is computable at the scan from doc_id
-alone — no shuffle spent on committed work) reproduces exactly the
-sequences a full run would have produced for those buckets.
+function of the documents that hash into it, and the bucket is
+computable at the scan from doc_id alone, so filtering the input to
+pending buckets reproduces exactly a full run's sequences for them.
 `manifest.read_committed(..., partition_col="bucket")` gives readers
 exactly-once visibility over at-least-once writes.
 
@@ -104,6 +105,7 @@ def main(argv=None) -> int:
     from pyspark.sql import functions as F
 
     from jschon_spark import manifest as mf
+    from jschon_spark import pipeline as pl
     from jschon_spark.operators import sequences
     from jschon_spark.operators.packing import _bucket
 
@@ -114,58 +116,31 @@ def main(argv=None) -> int:
     # the scan — resume never shuffles committed work
     docs = docs.withColumn("_bucket", _bucket(F.col("doc_id"), args.buckets, args.salt))
 
-    pending = None
     if args.manifest:
-        all_parts = spark.range(args.buckets).select(F.col("id").cast("int").alias("part_id"))
-        pending = mf.pending_partitions(spark, args.manifest, all_parts)
-        n_pending = pending.count()
-        if n_pending == 0:
+        frontier = spark.range(args.buckets).select(F.col("id").cast("int").alias("part_id"))
+        docs, frontier, n = pl.resume_pending(spark, docs, args.manifest, "_bucket", frontier)
+        if n == 0:
             print("pack_docs: manifest complete, nothing to do")
             return 0
-        docs = docs.join(
-            F.broadcast(pending.withColumnRenamed("part_id", "_bucket")), "_bucket", "semi"
-        )
-        print(f"pack_docs: processing {n_pending} pending buckets")
+        print(f"pack_docs: processing {n} pending buckets")
 
     run_id = args.run_id or mf.new_run_id()
     toks = tokenize(spark, docs, args)
     seqs = sequences.assemble_sequences(
-        toks,
-        budget=args.budget,
-        n_buckets=args.buckets,
-        salt=args.salt,
-        pad_id=args.pad_id,
+        toks, budget=args.budget, n_buckets=args.buckets, salt=args.salt, pad_id=args.pad_id
     )
-    seqs.withColumn("run_id", F.lit(run_id)).write.mode("append").parquet(
-        f"{args.out}/sequences"
-    )
+    pl.append_tagged(seqs, args.out, "sequences", run_id)
 
     if args.manifest:
-        # COMMIT: keyed off the PROCESSED buckets (a bucket whose docs
-        # all tokenized to zero tokens still commits — no reprocess loop)
-        written = spark.read.parquet(f"{args.out}/sequences").where(
-            F.col("run_id") == run_id
-        )
-        stats = written.groupBy(F.col("bucket").alias("part_id")).agg(
+        # COMMIT every pending bucket: one no document hashes into (or
+        # whose docs tokenize to nothing) is done, with n_rows = 0
+        written = pl.read_written(spark, args.out, "sequences", run_id)
+        counts = written.groupBy(F.col("bucket").alias("part_id")).agg(
             F.count(F.lit(1)).alias("n_rows"),
             F.sum(F.col("complete").cast("long")).alias("n_valid"),
+            F.lit(True).alias("partition_valid"),
         )
-        # COMMIT every pending bucket, not just buckets observed in the
-        # input: on sparse corpora (fewer docs than --buckets) an empty
-        # bucket would otherwise never get a manifest row and the job
-        # could never reach "manifest complete".  An empty bucket is
-        # legitimately done — it commits with n_rows = 0.
-        processed = pending.select("part_id")
-        per_part = (
-            processed.join(stats, "part_id", "left")
-            .withColumn("n_rows", F.coalesce(F.col("n_rows"), F.lit(0)))
-            .withColumn("n_valid", F.coalesce(F.col("n_valid"), F.lit(0)))
-            .withColumn("n_invalid", F.col("n_rows") - F.col("n_valid"))
-            .withColumn("partition_valid", F.lit(True))
-        )
-        mf.append_results(
-            spark, args.manifest, per_part, run_id=run_id, source_path=args.docs
-        )
+        pl.commit_partitions(spark, args.manifest, frontier, counts, run_id, args.docs)
     print(f"pack_docs: run {run_id} complete")
     return 0
 

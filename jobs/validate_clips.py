@@ -12,16 +12,14 @@ via --py-files):
 
 Local smoke: spark-submit --master "local[4]" --py-files jschon_spark.zip ...
 
-Behavior: partitions already recorded in the manifest are skipped
-(anti-join; the part_id filter prunes parquet directories), violations /
-flag / audio results land under --out as parquet tagged with this run's
-run_id, and ONLY THEN does each completed partition append its manifest
-row (lineage + metrics) — the manifest append is the commit point.
-Writes are therefore at-least-once: a crash between the output writes
-and the manifest append leaves orphan output rows whose run_id never
-reached the manifest, and the rerun reprocesses those partitions under
-a new run_id. Read results through `manifest.read_committed` (semi-join
-on (part_id, run_id)) for exactly-once visibility.
+Behavior (the resume-and-commit protocol of every job, in `pipeline`):
+partitions the manifest records are skipped (the part_id filter prunes
+parquet directories), outputs land under --out tagged with the run_id,
+and ONLY THEN does each partition append its manifest row, counted from
+the flag rows this run wrote — the commit point. A crash before it
+leaves orphan rows whose run_id never reached the manifest (the rerun
+redoes those partitions); read through `manifest.read_committed` for
+exactly-once visibility over these at-least-once writes.
 """
 
 from __future__ import annotations
@@ -46,60 +44,47 @@ def main(argv=None) -> int:
     args = parse_args(argv if argv is not None else sys.argv[1:])
 
     from pyspark.sql import SparkSession
-    from pyspark.sql import functions as F
 
     from jschon_spark import manifest as mf
-    from jschon_spark.pipeline import run_validation
+    from jschon_spark import pipeline as pl
 
     spark = SparkSession.builder.appName("jschon_spark_validate_clips").getOrCreate()
     clips = spark.read.parquet(args.clips)
 
     if args.manifest:
-        from jschon_spark.pipeline import select_pending
-
-        all_parts = clips.select(args.partition_col).distinct()
-        pending = mf.pending_partitions(spark, args.manifest, all_parts)
-        clips, parts, n_pending = select_pending(clips, pending, args.partition_col)
-        if n_pending == 0:
+        clips, frontier, n = pl.resume_pending(spark, clips, args.manifest, args.partition_col)
+        if n == 0:
             print("validate_clips: manifest complete, nothing to do")
             return 0
-        print(f"validate_clips: processing {n_pending} pending partitions"
-              + (f": {parts}" if parts and len(parts) <= 50 else ""))
+        print(f"validate_clips: processing {n} pending partitions")
 
     transcripts = spark.read.parquet(args.transcripts) if args.transcripts else None
     run_id = args.run_id or mf.new_run_id()
 
-    out = run_validation(
-        spark,
-        clips,
-        transcripts=transcripts,
-        audio=not args.no_audio,
+    out = pl.run_validation(
+        spark, clips, transcripts=transcripts, audio=not args.no_audio,
         partition_col=args.partition_col,
     )
 
     # every output row carries the run_id; rows become visible to
-    # committed readers only after the manifest append below
-    def _write(df, name):
-        df.withColumn("run_id", F.lit(run_id)).write.mode("append").parquet(f"{args.out}/{name}")
-
-    _write(out["violations"], "violations")
-    _write(out["flag"], "flag")
-    _write(out["stats"], "column_stats")
-    _write(out["duplicates"], "duplicate_clip_ids")
+    # committed readers only after the manifest commit below
+    for name, key in [("violations", "violations"), ("flag", "flag"),
+                      ("column_stats", "stats"), ("duplicate_clip_ids", "duplicates")]:
+        pl.append_tagged(out[key], args.out, name, run_id)
     if not args.no_audio:
-        _write(out["audio_violations"], "audio_violations")
-        _write(out["audio_flag"], "audio_flag")
+        pl.append_tagged(out["audio_violations"], args.out, "audio_violations", run_id)
+        pl.append_tagged(out["audio_flag"], args.out, "audio_flag", run_id)
         out["audio"].unpersist()
     if transcripts is not None:
-        _write(out["missing_transcripts"], "missing_transcripts")
-        _write(out["orphan_transcripts"], "orphan_transcripts")
-        _write(out["transcript_mismatches"], "transcript_mismatches")
+        for name in ("missing_transcripts", "orphan_transcripts", "transcript_mismatches"):
+            pl.append_tagged(out[name], args.out, name, run_id)
         out["transcript_checks"].unpersist()
 
     if args.manifest:
-        # COMMIT: one manifest row per completed partition, after all
-        # output appends succeeded
-        mf.append_results(spark, args.manifest, out["flag"], run_id=run_id, source_path=args.clips)
+        # COMMIT the flag counts this run wrote, after every output append
+        flag = pl.read_written(spark, args.out, "flag", run_id)
+        counts = flag.withColumnRenamed(args.partition_col, "part_id")
+        pl.commit_partitions(spark, args.manifest, frontier, counts, run_id, args.clips)
     print(f"validate_clips: run {run_id} complete")
     return 0
 

@@ -2,22 +2,20 @@
 anti-join (north rule requirement; no jschon counterpart).
 
 The manifest is an append-only parquet table keyed by the (Iceberg-style)
-partition id. A resumable run:
-
-1. reads the manifest, takes the set of completed partitions,
-2. anti-joins the pending partition list against it,
-3. processes only pending partitions (partition-pruned scans via a
-   ``part_id`` filter → directory pruning on the partitioned layout),
-4. appends one manifest row per finished partition with metrics.
-
-At 10^12 rows the manifest has one row per partition (thousands), so it
-broadcasts trivially.
+partition id, one row per partition (thousands at 10^12 rows, so it
+broadcasts trivially). Every job resumes through
+``pipeline.resume_pending``: anti-join the partitions against the
+manifest, process only the pending ones (a partition filter prunes
+parquet directories), append the run_id-tagged outputs, then commit via
+``pipeline.commit_partitions``: one manifest row per partition, with
+counts read back from those outputs.
 """
 
 from __future__ import annotations
 
 import time
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -28,10 +26,15 @@ MANIFEST_DDL = (
 
 
 def read_manifest(spark: SparkSession, path: str) -> DataFrame:
+    """A missing path is an empty manifest (the first run; an empty RDD starts
+    no Python workers, as a local list would). Any other failure (unknown
+    filesystem, denied read) raises, lest every partition be redone."""
     try:
         return spark.read.schema(MANIFEST_DDL).parquet(path)
-    except Exception:
-        return spark.createDataFrame([], MANIFEST_DDL)
+    except AnalysisException as e:
+        if e.getCondition() != "PATH_NOT_FOUND":
+            raise
+        return spark.createDataFrame(spark.sparkContext.emptyRDD(), MANIFEST_DDL)
 
 
 def completed_partitions(spark: SparkSession, path: str) -> DataFrame:
@@ -52,18 +55,16 @@ def append_results(
     source_path: str = "",
 ) -> None:
     """Record per-partition flag summaries (lineage = run_id + source)."""
-    (
-        flag_rows.select(
-            F.col("part_id").cast("int"),
-            F.lit(run_id).alias("run_id"),
-            F.current_timestamp().alias("completed_at"),
-            F.col("n_rows").cast("long"),
-            F.col("n_valid").cast("long"),
-            F.col("n_invalid").cast("long"),
-            F.col("partition_valid"),
-            F.lit(source_path).alias("source_path"),
-        ).write.mode("append").parquet(path)
-    )
+    flag_rows.select(
+        F.col("part_id").cast("int"),
+        F.lit(run_id).alias("run_id"),
+        F.current_timestamp().alias("completed_at"),
+        F.col("n_rows").cast("long"),
+        F.col("n_valid").cast("long"),
+        F.col("n_invalid").cast("long"),
+        F.col("partition_valid"),
+        F.lit(source_path).alias("source_path"),
+    ).write.mode("append").parquet(path)
 
 
 def new_run_id() -> str:
@@ -79,9 +80,9 @@ def read_committed(
     """Filter an output table down to COMMITTED rows.
 
     Output parquet is append-only and written BEFORE the manifest row
-    (see append_results callers), so a crash mid-run leaves orphan
-    output rows tagged with a run_id that never reached the manifest.
-    The manifest append is the commit point: semi-joining outputs on
+    (``pipeline.append_tagged``, then ``commit_partitions``), so a crash
+    mid-run leaves orphan rows tagged with a run_id the manifest never
+    recorded. The manifest append is the commit point: semi-joining outputs on
     (partition, run_id) against it makes exactly-once reads out of
     at-least-once writes — the Iceberg-snapshot pattern in miniature.
     The manifest is one row per partition, so the join side broadcasts.

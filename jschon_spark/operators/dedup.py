@@ -238,7 +238,11 @@ def lsh_candidate_pairs(
     is a plain shuffle-hash equi-join on small keys; a pathological
     bucket (all-identical corpus) is bounded by distinct-per-bucket
     pairing and AQE skew splitting. A null signature explodes to no
-    bucket rows: its band hashes would all be ``xxhash64("")``."""
+    bucket rows: its band hashes would all be ``xxhash64("")``. A
+    signature whose width is not a multiple of ``bands`` fails the query:
+    its bands would drop the tail, or all be empty and collide."""
+    if bands < 1:
+        raise ValueError(f"bands={bands} must be >= 1")
     sig = F.col(minhash_col)
     n_perm_col = F.size(sig)
     rows_per_band = (n_perm_col / bands).cast("int")
@@ -249,6 +253,12 @@ def lsh_candidate_pairs(
             F.xxhash64(F.concat_ws(",", F.transform(F.slice(sig, b * rows_per_band + 1, rows_per_band), lambda x: x.cast("string")))).alias("band_hash"),
         ),
     )
+    band_structs = F.when(n_perm_col % bands == 0, band_structs).otherwise(F.raise_error(
+        F.format_string(
+            "lsh_candidate_pairs: signature width %d is not a multiple of bands=%d",
+            n_perm_col, F.lit(bands),
+        )
+    ))
     buckets = df.select(
         F.col(id_col), F.explode(F.when(sig.isNotNull(), band_structs)).alias("b")
     ).select(id_col, "b.band_id", "b.band_hash")

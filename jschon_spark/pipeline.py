@@ -5,9 +5,14 @@ the flag/basic outputs; a second, column-pruned projection feeds the
 Arrow audio stage; table-level checks (uniqueness, referential, drift)
 run as separate jobs over the same source. Drift is the one eager stage:
 a single grouping-sets aggregation bins both current-side distributions
-and the KS/PSI fold over those few bins runs on the driver. Per-partition
-results land in a checkpoint manifest for resume (SURVEY.md §3.3
-pipeline shape).
+and the KS/PSI fold over those few bins runs on the driver (SURVEY.md
+§3.3 pipeline shape).
+
+Every job in ``jobs/`` resumes and commits through this module:
+``resume_pending`` keeps the partitions the checkpoint manifest has not
+committed, ``append_tagged`` writes each output tagged with the run_id,
+then ``commit_partitions`` appends the manifest rows (the commit point)
+with counts read back from what the run wrote (``read_written``).
 """
 
 from __future__ import annotations
@@ -18,6 +23,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from jschon_spark import manifest as mf
 from jschon_spark.audio import with_audio_invariant
 from jschon_spark.compiler import compile_schema
 from jschon_spark.operators import table_checks as tc
@@ -40,14 +46,14 @@ CLIP_SCHEMA = {
     },
 }
 
-METADATA_COLS = ["clip_id", "sr_hz", "dur_ms", "codec", "transcript", "part_id"]
+METADATA_COLS = ["clip_id", "sr_hz", "dur_ms", "codec", "transcript"]
 
 
 def validate_clips_rows(clips: DataFrame, schema: Optional[dict] = None) -> DataFrame:
     """Per-row keyword validation — metadata columns only, so the scan
     never reads the audio payload (column pruning hygiene)."""
     compiled = compile_schema(schema or CLIP_SCHEMA)
-    cols = [c for c in METADATA_COLS if c in clips.columns and c != "part_id"]
+    cols = [c for c in METADATA_COLS if c in clips.columns]
     return compiled.validate(clips, instance_columns=cols)
 
 
@@ -62,7 +68,7 @@ def run_validation(
 ) -> dict:
     """Full pipeline. Returns a dict of result DataFrames + driver-side
     drift stats. Nothing is collected here except tiny aggregates."""
-    meta = clips.select(*[c for c in METADATA_COLS if c in clips.columns])
+    meta = clips.select(*[c for c in METADATA_COLS + [partition_col] if c in clips.columns])
     validated = validate_clips_rows(meta, schema)
 
     out: dict = {
@@ -133,44 +139,6 @@ def run_validation(
     return out
 
 
-def run_resumable(
-    spark: SparkSession,
-    clips_path: str,
-    manifest_path: str,
-    run_id: Optional[str] = None,
-    schema: Optional[dict] = None,
-    partition_col: str = "part_id",
-) -> dict:
-    """Checkpointed, partition-granular validation (north rule: resume
-    from a manifest keyed by the Iceberg-style partition).
-
-    1. anti-join the table's partitions against the manifest,
-    2. validate ONLY pending partitions — the ``part_id`` filter prunes
-       parquet directories, so completed partitions are never rescanned,
-    3. append one manifest row per finished partition (lineage = run_id
-       + source path, metrics = flag counts).
-
-    Crash-and-rerun resumes where the previous run stopped; an empty
-    pending set is a no-op.
-
-    Semantics: output/manifest appends are at-least-once, but the
-    manifest row is the COMMIT — readers use ``manifest.read_committed``
-    to see exactly-once results (orphan rows from a crashed run carry a
-    run_id the manifest never recorded)."""
-    from jschon_spark import manifest as mf
-
-    clips = spark.read.parquet(clips_path)
-    all_parts = clips.select(partition_col).distinct()
-    pending = mf.pending_partitions(spark, manifest_path, all_parts)
-    subset, parts, n_pending = select_pending(clips, pending, partition_col)
-    if n_pending == 0:
-        return {"run_id": run_id, "n_partitions": 0, "processed_partitions": []}
-    run_id = run_id or mf.new_run_id()
-    flags = flag_summary(validate_clips_rows(subset, schema), partition_col)
-    mf.append_results(spark, manifest_path, flags, run_id=run_id, source_path=clips_path)
-    return {"run_id": run_id, "n_partitions": n_pending, "processed_partitions": parts}
-
-
 # below this many pending partitions the literal IN-list is planned as a
 # static partition filter (directory pruning at plan time); above it the
 # list would bloat the plan, so a broadcast semi-join (runtime DPP) is
@@ -191,9 +159,57 @@ def select_pending(
     # small case; only an over-limit frontier pays a second (count) job
     rows = pending.limit(MAX_INLINE_PARTITIONS + 1).collect()
     n = len(rows)
-    if n == 0:
-        return clips.where(F.lit(False)), [], 0
     if n <= MAX_INLINE_PARTITIONS:
         parts = sorted(r[0] for r in rows)
         return clips.where(F.col(partition_col).isin(parts)), parts, n
     return clips.join(F.broadcast(pending), partition_col, "semi"), None, pending.count()
+
+
+def resume_pending(
+    spark: SparkSession, rows: DataFrame, manifest_path: str, key: str = "part_id",
+    frontier: Optional[DataFrame] = None,
+) -> tuple[DataFrame, DataFrame, int]:
+    """(pending rows, pending frontier, pending count).
+
+    ``key`` is the column of ``rows`` holding the partition id, aliased
+    to the manifest's ``part_id``. The frontier of all partitions is the
+    distinct keys of ``rows`` unless a job passes its own (``part_id``
+    column; ``pack_docs``' empty hash buckets). The pending frontier is
+    returned keyed ``part_id``; an inlined one as a literal of its ids, so
+    the commit neither rescans the source nor starts Python workers."""
+    if frontier is None:
+        frontier = rows.select(F.col(key).alias("part_id")).distinct()
+    pending = mf.pending_partitions(spark, manifest_path, frontier)
+    rows, parts, n = select_pending(rows, pending.withColumnRenamed("part_id", key), key)
+    if parts:
+        pending = spark.range(1).select(F.explode(F.lit(parts)).alias("part_id"))
+    return rows, pending, n
+
+
+def append_tagged(df: DataFrame, out: str, name: str, run_id: str) -> None:
+    """Append ``df`` to ``{out}/{name}`` tagged with the run's ``run_id``."""
+    df.withColumn("run_id", F.lit(run_id)).write.mode("append").parquet(f"{out}/{name}")
+
+
+def read_written(spark: SparkSession, out: str, name: str, run_id: str) -> DataFrame:
+    """This run's rows of ``{out}/{name}``. A reused run_id also counts a crashed
+    run's orphans, but it already breaks ``read_committed``: run_ids must be fresh."""
+    return spark.read.parquet(f"{out}/{name}").where(F.col("run_id") == run_id)
+
+
+def commit_partitions(
+    spark: SparkSession, manifest_path: str, frontier: DataFrame, counts: DataFrame,
+    run_id: str, source_path: str,
+) -> None:
+    """COMMIT one manifest row per pending partition. ``counts`` holds
+    the job's per-partition ``part_id``, ``n_rows``, ``n_valid`` and
+    optionally ``n_invalid`` (default ``n_rows - n_valid``) and
+    ``partition_valid`` (default ``n_invalid == 0``). A frontier
+    partition with no counts (all rows gated out, an empty bucket)
+    commits with zeros, or it would be reprocessed forever."""
+    per_part = frontier.join(counts, "part_id", "left").na.fill(0).na.fill(True)
+    if "n_invalid" not in counts.columns:
+        per_part = per_part.withColumn("n_invalid", F.col("n_rows") - F.col("n_valid"))
+    if "partition_valid" not in counts.columns:
+        per_part = per_part.withColumn("partition_valid", F.col("n_invalid") == 0)
+    mf.append_results(spark, manifest_path, per_part, run_id=run_id, source_path=source_path)

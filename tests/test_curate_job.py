@@ -173,3 +173,25 @@ def test_job_provenance_output(spark, corpus, tmp_path):
     # rerun: manifest complete → no provenance duplication
     assert main(["--clips", src, "--out", out, "--manifest", man, "--provenance"]) == 0
     assert spark.read.parquet(f"{out}/provenance").count() == len(pdf)
+
+
+def test_job_partition_col_other_than_part_id(spark, corpus, tmp_path):
+    """--partition-col names the table's partition column; the manifest
+    keys it as part_id, so the first run commits every partition (with
+    its processed and surviving counts) and the second is a no-op."""
+    from jschon_spark import manifest as mf
+
+    src = str(tmp_path / "clips_s")
+    out = str(tmp_path / "curated_s")
+    man = str(tmp_path / "man_s")
+    corpus.withColumnRenamed("part_id", "shard").write.partitionBy("shard").parquet(src)
+    argv = ["--clips", src, "--out", out, "--manifest", man, "--no-dedup",
+            "--partition-col", "shard"]
+    assert main(argv) == 0
+    m = mf.read_manifest(spark, man).toPandas()
+    assert sorted(m["part_id"]) == [0, 1, 2, 3]
+    assert m["n_rows"].sum() == corpus.count()
+    curated = mf.read_committed(spark, man, spark.read.parquet(f"{out}/curated"), "shard")
+    assert m["n_valid"].sum() == curated.count() == 23  # silent + broken gated out
+    assert main(argv) == 0
+    assert mf.read_manifest(spark, man).count() == 4

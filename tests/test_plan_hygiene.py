@@ -371,3 +371,30 @@ def test_one_struct_field_application():
         if isinstance(node, ast.Call) and getattr(node.func, "attr", None) == "field"
     ]
     assert sites == ["_apply_fields"], sites
+
+
+def test_one_manifest_commit_protocol():
+    """Every resumable job resumes and commits through the protocol in
+    ``pipeline``: the manifest's anti-join, the pending-partition
+    selection and the commit append are called nowhere else in the
+    package or the jobs."""
+    import ast
+    import pathlib
+
+    import jschon_spark
+
+    repo = pathlib.Path(jschon_spark.__file__).parent.parent
+    names = ("pending_partitions", "select_pending", "append_results")
+    sites = set()
+    for path in sorted([*(repo / "jschon_spark").rglob("*.py"), *(repo / "jobs").glob("*.py")]):
+        for top in ast.parse(path.read_text()).body:
+            for node in ast.walk(top):
+                func = getattr(node, "func", None)
+                name = getattr(func, "attr", None) or getattr(func, "id", None)
+                if isinstance(node, ast.Call) and name in names:
+                    sites.add((str(path.relative_to(repo)), getattr(top, "name", None), name))
+    assert sites == {
+        ("jschon_spark/pipeline.py", "resume_pending", "pending_partitions"),
+        ("jschon_spark/pipeline.py", "resume_pending", "select_pending"),
+        ("jschon_spark/pipeline.py", "commit_partitions", "append_results"),
+    }, sites

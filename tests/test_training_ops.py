@@ -465,3 +465,19 @@ def test_minhash_bands_must_divide_signature(spark, docs, bands):
     divide the signature is rejected."""
     with pytest.raises(ValueError, match="divide"):
         dedup.minhash_near_duplicates(docs, n_perm=16, bands=bands)
+
+
+def test_lsh_candidate_pairs_checks_band_count(spark):
+    """bands=32 over 16-wide signatures made every band an empty slice
+    with one constant hash: 40 distinct docs gave all C(40, 2) = 780
+    pairs. A band count that does not divide the width now fails the
+    query, naming both; bands < 1 is rejected before planning."""
+    rows = [(i, " ".join(f"w{i}x{j}" for j in range(12))) for i in range(40)]
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    sigs = docs.select("doc_id", dedup.minhash_udf(16, 5)(F.col("text")).alias("minhash"))
+    with pytest.raises(ValueError, match="bands=0"):
+        dedup.lsh_candidate_pairs(sigs, bands=0)
+    for bands in (32, 3):
+        with pytest.raises(Exception, match=f"signature width 16 is not a multiple of bands={bands}"):
+            dedup.lsh_candidate_pairs(sigs, bands=bands).count()
+    assert dedup.lsh_candidate_pairs(sigs, bands=4).count() == 0
