@@ -13,12 +13,15 @@ the one walk, so each accepts the same codecs:
 - ``pcm_mulaw`` / ``pcm_alaw`` (G.711): one 256-entry LUT gather over
   a zero-copy uint8 view;
 - ``adpcm_ima``: 4-bit IMA ADPCM blocks (audio/adpcm.py);
-- ``wav``: 16-bit mono PCM through an allocation-free RIFF header walk,
-  any other layout through the stdlib ``wave`` parser, then the IMA
-  ADPCM (fmt 0x11) container walk. The header's sample rate wins over
-  ``sr_hz``.
+- ``wav``: one RIFF/WAVE chunk walk (``wav_chunks``) over the borrowed
+  payload. Mono PCM with 2-byte frames (fmt 1, 9-16 bits) is a
+  zero-copy int16 view of the ``data`` chunk; mono 4-bit IMA ADPCM
+  (fmt 0x11) decodes its ``data`` chunk, trimmed to the ``fact`` sample
+  count. The header's sample rate wins over ``sr_hz``. ``wav_bytes`` is
+  the one WAV writer.
 
-A null payload, odd-length PCM, a corrupt header or any other codec
+A null payload, odd-length PCM (an odd-sized WAV ``data`` chunk
+included), a corrupt header, any other WAV layout or any other codec
 (flac/opus are reserved) does not decode; stages give such rows their
 fields' defaults.
 
@@ -34,9 +37,7 @@ vectorized numpy.
 
 from __future__ import annotations
 
-import io
 import struct
-import wave
 
 import numpy as np
 import pyarrow as pa
@@ -45,6 +46,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.pandas.types import to_arrow_type
 
+from jschon_spark.audio.adpcm import decode_ima_adpcm
 from jschon_spark.compiler.context import VIOLATION_DDL
 from jschon_spark.fixtures import clip_seed
 
@@ -89,88 +91,101 @@ ALAW_LUT = _g711_alaw_lut()
 G711_LUTS = {"pcm_mulaw": MULAW_LUT, "pcm_alaw": ALAW_LUT}
 
 
-def decode_pcm(blob: bytes, codec: str) -> tuple[np.ndarray | None, int | None]:
+def riff_chunks(buf, pos: int, end: int):
+    """The one RIFF chunk walk: yields ``(chunk_id, body_start,
+    body_end)`` for each chunk of ``buf[pos:end]``. The body range is
+    clamped to ``end`` and the pad byte after an odd-sized body is
+    skipped. ``buf`` is ``bytes`` or a borrowed memoryview; only the
+    4-byte ids are copied."""
+    while pos + 8 <= end:
+        (size,) = struct.unpack_from("<I", buf, pos + 4)
+        body = pos + 8
+        yield bytes(buf[pos : pos + 4]), body, min(body + size, end)
+        pos = body + size + (size & 1)
+
+
+def wav_chunks(buf):
+    """The chunks of a RIFF/WAVE payload (``riff_chunks`` after the
+    12-byte header; the RIFF size field is not consulted), or None when
+    ``buf`` is not one."""
+    if buf is None or len(buf) < 12 or bytes(buf[:4]) != b"RIFF" or bytes(buf[8:12]) != b"WAVE":
+        return None
+    return riff_chunks(buf, 12, len(buf))
+
+
+def wav_bytes(x: np.ndarray, sr: int) -> bytes:
+    """The one WAV writer: a canonical 44-byte RIFF header (``fmt `` then
+    ``data``) around 16-bit mono PCM — the interop export form
+    (conditioned payloads, tar-shard .wav members, fixtures)."""
+    data = x.astype("<i2").tobytes()
+    hdr = struct.pack(
+        "<4sI4s4sIHHIIHH4sI",
+        b"RIFF", 36 + len(data), b"WAVE",
+        b"fmt ", 16, 1, 1, sr, sr * 2, 2, 16,
+        b"data", len(data),
+    )
+    return hdr + data
+
+
+def _decode_wav(buf) -> tuple[np.ndarray | None, int | None]:
+    """The ``wav`` codec over the chunk walk. The last ``fmt `` chunk
+    before the first ``data`` chunk decides: mono PCM with 2-byte
+    frames is a zero-copy int16 view of ``data`` (an odd-sized body
+    does not decode); mono 4-bit IMA ADPCM decodes ``data`` at the
+    header's block align, trimmed to the ``fact`` sample count. Any
+    other layout does not decode."""
+    fmt = n_samples = None
+    for cid, b0, b1 in wav_chunks(buf) or ():
+        if cid == b"fmt ":
+            fmt = struct.unpack_from("<HHIIHH", buf, b0) if b1 - b0 >= 16 else None
+        elif cid == b"fact" and b1 - b0 >= 4:
+            (n_samples,) = struct.unpack_from("<I", buf, b0)
+        elif cid == b"data":
+            if fmt is None or fmt[1] != 1:
+                break
+            tag, _nch, sr, _rate, block_align, bits = fmt
+            if tag == 1 and (bits + 7) // 8 == 2 and (b1 - b0) % 2 == 0:
+                return np.frombuffer(buf, dtype="<i2", count=(b1 - b0) // 2, offset=b0), sr
+            if tag == 0x11 and bits == 4:
+                data = np.frombuffer(buf, dtype=np.uint8, count=b1 - b0, offset=b0)
+                dec = decode_ima_adpcm(data, block_align)
+                if dec is not None:
+                    return dec[:n_samples], sr
+            break
+    return None, None
+
+
+def decode_pcm(blob, codec: str) -> tuple[np.ndarray | None, int | None]:
     """Decode one clip (``bytes`` or a borrowed memoryview) to int16
     samples. Returns (samples, sr_from_header), or (None, None) when
     the payload does not decode. pcm_s16le is a zero-copy frombuffer
-    view; pcm_mulaw/pcm_alaw are one
-    vectorized 256-entry LUT gather (G.711 telephony); wav parses the
-    RIFF header with the stdlib ``wave`` module (no scipy/soundfile in
-    the sandbox)."""
+    view; pcm_mulaw/pcm_alaw are one vectorized 256-entry LUT gather
+    (G.711 telephony); wav is ``_decode_wav``."""
+    if blob is None:
+        return None, None
     if codec == "pcm_s16le":
-        if blob is None or len(blob) % 2 != 0:
+        if len(blob) % 2 != 0:
             return None, None
         return np.frombuffer(blob, dtype="<i2"), None
     lut = G711_LUTS.get(codec)
     if lut is not None:
-        if blob is None:
-            return None, None
         return lut[np.frombuffer(blob, dtype=np.uint8)], None
     if codec == "adpcm_ima":
-        from jschon_spark.audio.adpcm import decode_ima_adpcm
-
         return decode_ima_adpcm(blob), None
     if codec == "wav":
-        try:
-            with wave.open(io.BytesIO(blob), "rb") as w:
-                if w.getsampwidth() != 2 or w.getnchannels() != 1:
-                    return None, None
-                sr = w.getframerate()
-                data = w.readframes(w.getnframes())
-            return np.frombuffer(data, dtype="<i2"), sr
-        except Exception:
-            # the stdlib wave module rejects compressed fmt tags — try
-            # the IMA ADPCM container walk (WAVE fmt 0x11) before
-            # giving up
-            from jschon_spark.audio.adpcm import parse_wav_ima
-
-            got = parse_wav_ima(blob)
-            if got is not None:
-                return got
-            return None, None
+        return _decode_wav(blob)
     return None, None  # unknown codec (flac/opus reserved, not decodable here)
-
-
-def _parse_wav_header(raw: memoryview, start: int, end: int):
-    """Minimal RIFF/WAVE chunk walk over a borrowed buffer — no payload
-    copy. Returns (data_start, data_end, sample_rate) for 16-bit mono
-    PCM with a standard fmt-before-data layout, else None (caller falls
-    back to ``decode_pcm`` on a copied blob)."""
-    if end - start < 12:
-        return None
-    if bytes(raw[start : start + 4]) != b"RIFF" or bytes(raw[start + 8 : start + 12]) != b"WAVE":
-        return None
-    pos = start + 12
-    sr = None
-    while pos + 8 <= end:
-        cid = bytes(raw[pos : pos + 4])
-        (csz,) = struct.unpack_from("<I", raw, pos + 4)
-        body = pos + 8
-        if cid == b"fmt ":
-            if body + 16 > end:
-                return None
-            fmt_tag, nch, fr, _brate, _balign, bits = struct.unpack_from("<HHIIHH", raw, body)
-            if fmt_tag != 1 or nch != 1 or bits != 16:
-                return None
-            sr = fr
-        elif cid == b"data":
-            if sr is None:
-                return None  # nonstandard ordering → slow path
-            return body, min(body + csz, end), sr
-        pos = body + csz + (csz & 1)
-    return None
 
 
 def iter_decoded(batch):
     """The zero-copy decode walk: yields ``(row_index, int16_samples,
     sample_rate)`` for every decodable row of an Arrow batch with
-    ``bytes``, ``codec`` and ``sr_hz`` columns. Payloads are borrowed
-    slices of the binary column's value buffer, never per-row ``bytes``
-    objects; only a WAV that the header walk cannot place is copied for
-    the stdlib parse. ``sample_rate`` is the WAV header's rate when the
-    payload has one, else ``sr_hz``. Undecodable rows, and headerless
-    rows whose ``sr_hz`` is null, are not yielded — callers treat
-    absence as their not-ok state."""
+    ``bytes``, ``codec`` and ``sr_hz`` columns. Every row goes to
+    ``decode_pcm`` as a borrowed slice of the binary column's value
+    buffer, never as a per-row ``bytes`` object. ``sample_rate`` is the
+    WAV header's rate when the payload has one, else ``sr_hz``.
+    Undecodable rows, and headerless rows whose ``sr_hz`` is null, are
+    not yielded — callers treat absence as their not-ok state."""
     names = batch.schema.names
     blob = batch.column(names.index("bytes"))
     n = len(blob)
@@ -186,23 +201,14 @@ def iter_decoded(batch):
     for i in range(n):
         if row_valid is not None and not row_valid[i]:
             continue
-        s0, s1 = int(offs[i]), int(offs[i + 1])
-        c = codecs[i]
-        parsed = _parse_wav_header(raw, s0, s1) if c == "wav" else None
-        if parsed is not None:
-            d0, d1, hdr_sr = parsed
-            if (d1 - d0) % 2:
-                continue
-            dec = np.frombuffer(raw, dtype="<i2", count=(d1 - d0) // 2, offset=d0)
-        else:
-            dec, hdr_sr = decode_pcm(bytes(raw[s0:s1]) if c == "wav" else raw[s0:s1], c)
+        dec, sr = decode_pcm(raw[int(offs[i]) : int(offs[i + 1])], codecs[i])
         if dec is None:
             continue
-        if hdr_sr is None:
+        if sr is None:
             if np.isnan(srs[i]):  # a null sr_hz arrives as NaN
                 continue
-            hdr_sr = int(srs[i])
-        yield i, dec, hdr_sr
+            sr = int(srs[i])
+        yield i, dec, sr
 
 
 def map_decoded(

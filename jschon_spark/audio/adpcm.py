@@ -30,8 +30,6 @@ Microsoft WAVE fmt 0x11, RFC 3551).
 
 from __future__ import annotations
 
-import struct
-
 import numpy as np
 
 STEP_TABLE = np.array(
@@ -185,61 +183,3 @@ def encode_ima_adpcm(
     packed = (nibs[:, 0::2] | (nibs[:, 1::2] << 4)).astype(np.uint8)
     out[:, 4:] = packed
     return out.tobytes()
-
-
-def wav_ima_bytes(
-    x: np.ndarray, sr: int, block_align: int = DEFAULT_BLOCK_ALIGN
-) -> bytes:
-    """Mono fmt-0x11 (IMA ADPCM) WAV container around encode_ima_adpcm
-    — the interop export form; includes the spec's ``fact`` chunk with
-    the true sample count (the container-level truth a decoder uses to
-    trim block padding)."""
-    data = encode_ima_adpcm(x, block_align)
-    spb = samples_per_block(block_align)
-    byte_rate = sr * block_align // spb
-    fmt = struct.pack(
-        "<HHIIHHHH", 0x11, 1, sr, byte_rate, block_align, 4, 2, spb
-    )
-    fact = struct.pack("<I", len(np.asarray(x)))
-    hdr = b"RIFF" + struct.pack("<I", 4 + 8 + len(fmt) + 8 + 4 + 8 + len(data)) + b"WAVE"
-    hdr += b"fmt " + struct.pack("<I", len(fmt)) + fmt
-    hdr += b"fact" + struct.pack("<I", 4) + fact
-    hdr += b"data" + struct.pack("<I", len(data))
-    return hdr + data
-
-
-def parse_wav_ima(blob: bytes) -> "tuple[np.ndarray, int] | None":
-    """RIFF walk for fmt-0x11 mono 4-bit WAV: returns (samples, sr) or
-    None. Honors the ``fact`` chunk's sample count (trims encoder block
-    padding)."""
-    if blob is None or len(blob) < 12 or blob[:4] != b"RIFF" or blob[8:12] != b"WAVE":
-        return None
-    pos = 12
-    sr = block_align = None
-    n_samples = None
-    data = None
-    n = len(blob)
-    while pos + 8 <= n:
-        cid = blob[pos : pos + 4]
-        (csz,) = struct.unpack_from("<I", blob, pos + 4)
-        body = pos + 8
-        if cid == b"fmt " and body + 16 <= n:
-            tag, nch, fr, _br, balign, bits = struct.unpack_from("<HHIIHH", blob, body)
-            if tag != 0x11 or nch != 1 or bits != 4:
-                return None
-            sr, block_align = fr, balign
-        elif cid == b"fact" and body + 4 <= n:
-            (n_samples,) = struct.unpack_from("<I", blob, body)
-        elif cid == b"data":
-            if sr is None or block_align is None:
-                return None
-            data = blob[body : min(body + csz, n)]
-        pos = body + csz + (csz & 1)
-    if data is None or sr is None:
-        return None
-    dec = decode_ima_adpcm(data, block_align)
-    if dec is None:
-        return None
-    if n_samples is not None:
-        dec = dec[:n_samples]
-    return dec, sr

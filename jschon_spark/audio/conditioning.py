@@ -36,7 +36,7 @@ import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
-from jschon_spark.audio import iter_decoded
+from jschon_spark.audio import iter_decoded, wav_bytes
 
 TARGET_RMS_DBFS = -20.0
 PEAK_CEILING_DBFS = -1.0
@@ -89,20 +89,6 @@ def gain_for_target(
     want = (10.0 ** (target_rms_dbfs / 20.0)) * _FULL / rms
     cap = (10.0 ** (peak_ceiling_dbfs / 20.0)) * _FULL / peak
     return min(want, cap)
-
-
-def wav_bytes(x: np.ndarray, sr: int) -> bytes:
-    """Minimal canonical WAV container (44-byte RIFF header + 16-bit
-    mono PCM data) — the interop export form (tar-shard .wav members,
-    external tools). Round-trips through both our zero-copy header
-    parse and the stdlib ``wave`` module."""
-    import struct
-
-    data = x.astype("<i2").tobytes()
-    hdr = b"RIFF" + struct.pack("<I", 36 + len(data)) + b"WAVE"
-    hdr += b"fmt " + struct.pack("<IHHIIHH", 16, 1, 1, sr, sr * 2, 2, 16)
-    hdr += b"data" + struct.pack("<I", len(data))
-    return hdr + data
 
 
 def _condition_kernel(

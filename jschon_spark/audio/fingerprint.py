@@ -132,10 +132,6 @@ def subfingerprints_from_energies(e: np.ndarray) -> np.ndarray:
     return (bits << np.arange(32, dtype=np.uint32)).sum(axis=1, dtype=np.uint32)
 
 
-def subfingerprints(x: np.ndarray, sr: int, scratch: dict) -> np.ndarray:
-    return subfingerprints_from_energies(frame_band_energies(x, sr, scratch))
-
-
 def clip_fingerprint128(e: np.ndarray) -> tuple[int, int] | None:
     """Collapse an energy matrix to two signed int64 words: 4
     contiguous time segments × 32 band pairs, each bit the sign of the

@@ -41,16 +41,6 @@ def mel_to_hz(m):
     return 700.0 * (10.0 ** (np.asarray(m, dtype=np.float64) / 2595.0) - 1.0)
 
 
-def mel_centers(sr: int, n_mels: int, fmin: float = 0.0, fmax: float | None = None) -> np.ndarray:
-    """Center frequency (Hz) of each mel band — the synthesis-contract
-    oracle: a pure tone at ``f`` must put its energy argmax in the band
-    whose center is nearest ``f``."""
-    if fmax is None:
-        fmax = sr / 2.0
-    edges = mel_to_hz(np.linspace(hz_to_mel(fmin), hz_to_mel(fmax), n_mels + 2))
-    return edges[1:-1]
-
-
 def mel_filterbank(
     sr: int, n_fft: int, n_mels: int, fmin: float = 0.0, fmax: float | None = None
 ) -> np.ndarray:
@@ -159,14 +149,3 @@ def with_log_mel(
         return vals
 
     return map_decoded(df, clip, fields)
-
-
-def with_mfcc(
-    df: DataFrame,
-    n_mfcc: int = 13,
-    n_mels: int = 40,
-    win_ms: float = 25.0,
-    hop_ms: float = 10.0,
-) -> DataFrame:
-    """Convenience wrapper: log-mel + cepstral summaries in one pass."""
-    return with_log_mel(df, n_mels=n_mels, win_ms=win_ms, hop_ms=hop_ms, n_mfcc=n_mfcc)

@@ -37,6 +37,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
+from jschon_spark.audio import riff_chunks, wav_chunks
+
 _INFO_TAGS = {
     b"INAM": "title",
     b"IART": "artist",
@@ -69,8 +71,11 @@ META_FIELDS = [
 
 
 def parse_wav_metadata(blob: bytes) -> Optional[dict]:
-    """RIFF walk: fmt fields + LIST/INFO tags. None if not RIFF/WAVE."""
-    if blob is None or len(blob) < 12 or blob[:4] != b"RIFF" or blob[8:12] != b"WAVE":
+    """fmt fields + LIST/INFO tags over the one RIFF/WAVE chunk walk
+    (``audio.wav_chunks``; the INFO sub-chunks through
+    ``audio.riff_chunks``). None if not RIFF/WAVE."""
+    chunks = wav_chunks(blob)
+    if chunks is None:
         return None
     out = {
         "container": "wav",
@@ -80,31 +85,20 @@ def parse_wav_metadata(blob: bytes) -> Optional[dict]:
         "bits_per_sample": None,
         "tags": {},
     }
-    pos, n = 12, len(blob)
-    while pos + 8 <= n:
-        cid = blob[pos : pos + 4]
-        (csz,) = struct.unpack_from("<I", blob, pos + 4)
-        body = pos + 8
-        if cid == b"fmt " and body + 16 <= n:
-            tag, nch, sr, _br, _ba, bits = struct.unpack_from("<HHIIHH", blob, body)
+    for cid, b0, b1 in chunks:
+        if cid == b"fmt " and b1 - b0 >= 16:
+            tag, nch, sr, _br, _ba, bits = struct.unpack_from("<HHIIHH", blob, b0)
             out.update(
                 fmt_tag=int(tag), header_sr=int(sr),
                 n_channels=int(nch), bits_per_sample=int(bits),
             )
-        elif cid == b"LIST" and body + 4 <= n and blob[body : body + 4] == b"INFO":
-            p = body + 4
-            end = min(body + csz, n)
-            while p + 8 <= end:
-                sub = blob[p : p + 4]
-                (ssz,) = struct.unpack_from("<I", blob, p + 4)
-                val = blob[p + 8 : min(p + 8 + ssz, end)]
+        elif cid == b"LIST" and blob[b0 : b0 + 4] == b"INFO":
+            for sub, s0, s1 in riff_chunks(blob, b0 + 4, b1):
                 key = _INFO_TAGS.get(sub)
                 if key:
-                    out["tags"][key] = val.split(b"\x00", 1)[0].decode(
+                    out["tags"][key] = blob[s0:s1].split(b"\x00", 1)[0].decode(
                         "latin-1", "replace"
                     )
-                p += 8 + ssz + (ssz & 1)
-        pos = body + csz + (csz & 1)
     return out
 
 

@@ -171,28 +171,3 @@ def infer_schema(
     if required:
         out["required"] = required
     return out
-
-
-def schema_drift_report(
-    baseline: DataFrame,
-    batch: DataFrame,
-    enum_limit: int = DEFAULT_ENUM_LIMIT,
-    columns: list[str] | None = None,
-) -> tuple[DataFrame, dict[str, Any]]:
-    """The infer → validate → monitor loop in one call: infer a schema
-    from ``baseline``, validate ``batch`` against it through the real
-    compiler, and return (violation histogram, inferred schema).
-
-    A batch drawn from the baseline distribution reports an empty
-    histogram; new enum members, out-of-range numerics, new nulls in
-    previously-complete columns, and length/size excursions each
-    surface as their JSON Schema keyword with a pointer path —
-    structural drift detection complementing the statistical KS/PSI
-    checks in operators/table_checks.py."""
-    from jschon_spark.compiler import compile_schema
-    from jschon_spark.output import violation_histogram
-
-    schema = infer_schema(baseline, enum_limit=enum_limit, columns=columns)
-    cols = columns or [f.name for f in baseline.schema.fields]
-    validated = compile_schema(schema).validate(batch, instance_columns=cols)
-    return violation_histogram(validated), schema

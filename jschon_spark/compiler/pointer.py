@@ -83,40 +83,6 @@ def json_pointer_get(json_col: Column, pointer: str) -> Column:
     return F.get_json_object(json_col, json_pointer_to_jsonpath(pointer))
 
 
-def json_pointer_to_variant_path(pointer: str) -> str:
-    """RFC 6901 → variant extraction path (Spark 4 `variant_get`).
-
-    Variant paths quote keys with ' or " and support NO escape
-    sequences, so a key containing BOTH quote characters is
-    unaddressable (PointerError). Digit-only tokens are emitted as
-    array indexes — same convention as :func:`json_pointer_to_jsonpath`."""
-    path = "$"
-    for tok in parse_pointer(pointer):
-        if tok.isdigit():
-            path += f"[{tok}]"
-        elif "'" not in tok:
-            path += f"['{tok}']"
-        elif '"' not in tok:
-            path += f'["{tok}"]'
-        else:
-            raise PointerError(
-                f"variant paths cannot quote a key containing both \" and ': {tok!r}"
-            )
-    return path
-
-
-def variant_pointer_get(json_col: Column, pointer: str) -> Column:
-    """Pointer walk over a JSON STRING column via Spark 4's VARIANT type:
-    ``try_variant_get(parse_json(col), path, 'variant')``. Unlike
-    :func:`json_pointer_get` (Hive JSONPath), this addresses EMPTY
-    object keys; the result is a VARIANT column (cast or ``to_json`` it
-    downstream). Prefer this for dynamic payloads on Spark 4+; the
-    get_json_object form remains for string-out compatibility."""
-    return F.try_variant_get(
-        F.parse_json(json_col), json_pointer_to_variant_path(pointer), "variant"
-    )
-
-
 def relative_pointer(base: str, rel: str) -> str:
     """Apply a Relative JSON Pointer (up[±over]/ref) to a static base
     pointer (reference jschon/jsonpointer.py:358-392). Returns the new

@@ -18,9 +18,6 @@ against (SNR ≥ 30 dB, BASELINE.json input_hint).
 
 from __future__ import annotations
 
-import io
-import wave
-
 import numpy as np
 import pandas as pd
 
@@ -87,16 +84,6 @@ def synth_pcm(seed64: int, sr_hz: int, n_samples: int) -> np.ndarray:
     return np.clip(sig * 32767.0, -32768, 32767).astype(np.int16)
 
 
-def wrap_wav(pcm: np.ndarray, sr_hz: int) -> bytes:
-    buf = io.BytesIO()
-    with wave.open(buf, "wb") as w:
-        w.setnchannels(1)
-        w.setsampwidth(2)
-        w.setframerate(sr_hz)
-        w.writeframes(pcm.tobytes())
-    return buf.getvalue()
-
-
 def _transcript_text(ids: np.ndarray, stream: int = 7) -> list[str]:
     """Seeded word sequences, 0-4096 chars."""
     out = []
@@ -154,6 +141,8 @@ def gen_clips_batch(ids: np.ndarray, audio: bool = True, max_dur_ms: int = 4000)
     # audio bytes — frame count follows dur_ms EXCEPT the oversized
     # SLOT_MAX rows (capped; they intentionally fail the frame check too)
     if audio:
+        from jschon_spark.audio import wav_bytes  # audio imports clip_seed
+
         blobs = []
         for i in range(n):
             n_samp = int(int(sr[i]) * int(dur[i]) / 1000)
@@ -166,7 +155,7 @@ def gen_clips_batch(ids: np.ndarray, audio: bool = True, max_dur_ms: int = 4000)
                 pcm = np.clip(pcm.astype(np.int32) + burst, -32768, 32767).astype(np.int16)
             if slot[i] == SLOT_TRUNC:
                 pcm = pcm[: max(1, len(pcm) // 2)]
-            blobs.append(wrap_wav(pcm, int(sr[i])) if codec[i] == "wav" else pcm.tobytes())
+            blobs.append(wav_bytes(pcm, int(sr[i])) if codec[i] == "wav" else pcm.tobytes())
         bytes_col = blobs
     else:
         bytes_col = [b""] * n

@@ -53,20 +53,6 @@ def exact_duplicates(df: DataFrame, text_col: str = "text", id_col: str = "doc_i
     )
 
 
-def exact_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """Keep one representative (min id) per content hash. Implemented as
-    a groupBy on the hash — one shuffle of (hash, id), then a semi-join
-    back; no window over raw text."""
-    h = F.md5(F.col(text_col).cast("binary")).alias("content_hash")
-    keep = (
-        df.select(h, F.col(id_col))
-        .groupBy("content_hash")
-        .agg(F.min(id_col).alias(id_col))
-        .select(id_col)
-    )
-    return df.join(keep, on=id_col, how="semi")
-
-
 # -- MinHash + LSH: vectorized shingle hashing (Arrow) ----------------------
 #
 # Materializing shingle substrings JVM-side costs ~10us per shingle on

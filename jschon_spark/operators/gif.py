@@ -34,9 +34,7 @@ import struct
 
 import numpy as np
 
-
-class ImageDecodeError(ValueError):
-    pass
+from jschon_spark.operators.jpeg import ImageDecodeError
 
 
 # -- LZW ---------------------------------------------------------------------

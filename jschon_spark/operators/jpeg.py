@@ -40,13 +40,14 @@ import struct
 
 import numpy as np
 
-__all__ = ["encode_jpeg", "decode_jpeg"]
+__all__ = ["ImageDecodeError", "encode_jpeg", "decode_jpeg"]
 
 
 class ImageDecodeError(ValueError):
-    # re-bound by multimodal.py so callers see ONE error type; defined
-    # here too so this module imports standalone
-    pass
+    """Malformed/truncated/unsupported image payload — the one error
+    type of every built-in image codec (this module, operators/gif.py,
+    operators/multimodal.py). ``image_stats`` converts it into a
+    ``decode_error`` row instead of failing the task."""
 
 
 # -- constants from the public spec (ITU-T T.81 Annex K) ---------------------

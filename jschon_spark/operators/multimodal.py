@@ -39,6 +39,11 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+# the JPEG and GIF codecs are re-exported; every built-in codec raises
+# the one ImageDecodeError
+from jschon_spark.operators.gif import decode_gif, encode_gif  # noqa: F401
+from jschon_spark.operators.jpeg import ImageDecodeError, decode_jpeg, encode_jpeg  # noqa: F401
+
 MEDIA_META_TYPE = T.StructType(
     [
         T.StructField("media_type", T.StringType()),  # image|audio|video
@@ -66,11 +71,6 @@ _FEATURES_SCHEMA = T.StructType(
 # ---------------------------------------------------------------------------
 # Pure numpy/stdlib image codecs (no external libraries)
 # ---------------------------------------------------------------------------
-
-
-class ImageDecodeError(ValueError):
-    """Malformed/truncated/unsupported payload. ``image_stats`` converts
-    it into a ``decode_error`` row instead of failing the task."""
 
 
 def _as_hwc(arr: np.ndarray) -> np.ndarray:
@@ -325,45 +325,6 @@ def sniff_format(blob: bytes) -> Optional[str]:
     if blob[:4] == b"GIF8":
         return "gif"
     return None
-
-
-def encode_jpeg(arr: np.ndarray, quality: int = 85, **kw) -> bytes:
-    """Baseline JFIF JPEG (operators/jpeg.py — pure numpy/stdlib)."""
-    from jschon_spark.operators import jpeg as _jpeg
-
-    return _jpeg.encode_jpeg(arr, quality=quality, **kw)
-
-
-def decode_jpeg(blob: bytes) -> np.ndarray:
-    """Baseline sequential JPEG → HxWxC uint8 (operators/jpeg.py);
-    malformed/non-baseline payloads raise this module's
-    ``ImageDecodeError`` like every other built-in codec."""
-    from jschon_spark.operators import jpeg as _jpeg
-
-    try:
-        return _jpeg.decode_jpeg(blob)
-    except _jpeg.ImageDecodeError as e:
-        raise ImageDecodeError(str(e)) from None
-
-
-def encode_gif(arr: np.ndarray) -> bytes:
-    """Single-frame GIF89a (operators/gif.py — pure stdlib/numpy LZW)."""
-    from jschon_spark.operators import gif as _gif
-
-    try:
-        return _gif.encode_gif(arr)
-    except _gif.ImageDecodeError as e:
-        raise ImageDecodeError(str(e)) from None
-
-
-def decode_gif(blob: bytes) -> np.ndarray:
-    """First GIF frame → HxWx3/HxWx4 uint8 (operators/gif.py)."""
-    from jschon_spark.operators import gif as _gif
-
-    try:
-        return _gif.decode_gif(blob)
-    except _gif.ImageDecodeError as e:
-        raise ImageDecodeError(str(e)) from None
 
 
 _BUILTIN_DECODERS: dict[str, Callable[[bytes], np.ndarray]] = {

@@ -45,13 +45,6 @@ def hash_coin(key: Column, salt: str) -> Column:
     return F.substring(F.md5(F.concat(key.cast("string"), F.lit("|" + salt))), 1, 8)
 
 
-def deterministic_sample(
-    df: DataFrame, rate: float, key_col: str, salt: str = "sample-v1"
-) -> DataFrame:
-    """Uniform hash-gated Bernoulli sample at ``rate``."""
-    return df.where(hash_coin(F.col(key_col), salt) < F.lit(rate_threshold_hex(rate)))
-
-
 def stratified_sample(
     df: DataFrame,
     rates: dict[str, float],
@@ -68,16 +61,6 @@ def stratified_sample(
     for value, rate in sorted(rates.items()):
         thr = F.when(F.col(strata_col) == value, F.lit(rate_threshold_hex(rate))).otherwise(thr)
     return df.where(hash_coin(F.col(key_col), salt) < thr)
-
-
-def train_holdout_split(
-    df: DataFrame, holdout_frac: float, key_col: str, salt: str = "split-v1"
-) -> tuple[DataFrame, DataFrame]:
-    """Disjoint, exhaustive, reproducible train/holdout split on the
-    same coin (one row's membership never changes as the table grows)."""
-    t = F.lit(rate_threshold_hex(holdout_frac))
-    coin = hash_coin(F.col(key_col), salt)
-    return df.where(coin >= t), df.where(coin < t)
 
 
 def temperature_rates(

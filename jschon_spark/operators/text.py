@@ -42,24 +42,6 @@ def normalize_text(text: Column) -> Column:
     return F.trim(F.regexp_replace(F.lower(text), "[^a-z0-9]+", " "))
 
 
-def normalized_duplicates(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
-    """Groups of documents identical up to case/punctuation/whitespace:
-    `exact_duplicates` semantics over `normalize_text`. Same scale shape —
-    groupBy on a 16-byte md5 of the normalized form, map-side combine."""
-    h = F.md5(normalize_text(F.col(text_col)).cast("binary")).alias("norm_hash")
-    return (
-        df.select(h, F.col(id_col))
-        .groupBy("norm_hash")
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.sort_array(F.collect_list(id_col)).alias("doc_ids"),
-        )
-        .where(F.col("n_docs") > 1)
-    )
-
-
 def normalized_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
     """Keep one representative (min id) per normalized content hash."""
     h = F.md5(normalize_text(F.col(text_col)).cast("binary")).alias("norm_hash")

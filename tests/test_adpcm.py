@@ -1,10 +1,12 @@
 """IMA ADPCM codec (audio/adpcm.py): block-lane-vectorized decode
 pinned bit-identical against a textbook scalar decoder, round-trip SNR
-gates, the fmt-0x11 WAV container walk, malformed payloads, and the
-full Spark feature stage over adpcm_ima clips. The codec flows through
+gates, the fmt-0x11 WAV container through ``decode_pcm``, malformed
+payloads, and the full Spark feature stage over adpcm_ima clips. The codec flows through
 ``decode_pcm`` and the one ``audio.iter_decoded`` walk, so every audio
 operator accepts it; tests/test_clips_pipeline.py pins the SNR
 invariant's decode of it."""
+
+import struct
 
 import numpy as np
 import pytest
@@ -16,12 +18,23 @@ from jschon_spark.audio.adpcm import (
     STEP_TABLE,
     decode_ima_adpcm,
     encode_ima_adpcm,
-    parse_wav_ima,
     samples_per_block,
-    wav_ima_bytes,
 )
 
 SR = 16000
+
+
+def _ima_wav(x: np.ndarray, sr: int, block_align: int = DEFAULT_BLOCK_ALIGN) -> bytes:
+    """Mono fmt-0x11 (IMA ADPCM) WAV around encode_ima_adpcm, with the
+    spec's ``fact`` chunk holding the true sample count (what a decoder
+    trims the last block's padding to)."""
+    data = encode_ima_adpcm(x, block_align)
+    spb = samples_per_block(block_align)
+    fmt = struct.pack("<HHIIHHHH", 0x11, 1, sr, sr * block_align // spb, block_align, 4, 2, spb)
+    body = b"WAVE" + b"fmt " + struct.pack("<I", len(fmt)) + fmt
+    body += b"fact" + struct.pack("<II", 4, len(x))
+    body += b"data" + struct.pack("<I", len(data)) + data
+    return b"RIFF" + struct.pack("<I", len(body)) + body
 
 
 def _tone(freq=440.0, secs=1.0, amp=0.3):
@@ -94,16 +107,13 @@ def test_block_headers_make_blocks_independent():
 
 def test_wav_container_roundtrip_and_fact_trim():
     x = _tone(secs=0.731)  # not block-aligned: fact chunk must trim
-    wav = wav_ima_bytes(x, SR)
-    got = parse_wav_ima(wav)
-    assert got is not None
-    dec, sr = got
+    wav = _ima_wav(x, SR)
+    dec, sr = decode_pcm(wav, "wav")
     assert sr == SR and len(dec) == len(x)
     assert _snr(x, dec) > 30.0
-    # and through the generic decode_pcm("wav") dispatch (stdlib wave
-    # rejects fmt 0x11; the adpcm walk is the fallback)
-    dec2, sr2 = decode_pcm(wav, "wav")
-    assert sr2 == SR and np.array_equal(dec2, dec)
+    # the data chunk is the adpcm_ima payload; fact trims its padding
+    raw, _ = decode_pcm(encode_ima_adpcm(x), "adpcm_ima")
+    assert len(raw) > len(x) and np.array_equal(raw[: len(x)], dec)
 
 
 def test_malformed_payloads():
@@ -112,8 +122,8 @@ def test_malformed_payloads():
     blob = bytearray(encode_ima_adpcm(_tone(secs=0.1)))
     blob[2] = 120  # step index out of range
     assert decode_ima_adpcm(bytes(blob)) is None
-    assert parse_wav_ima(b"RIFFxxxxWAVE") is None
-    assert parse_wav_ima(None) is None
+    assert decode_pcm(b"RIFFxxxxWAVE", "wav") == (None, None)
+    assert decode_pcm(None, "wav") == (None, None)
     assert decode_pcm(b"", "adpcm_ima") is None or decode_pcm(b"", "adpcm_ima")[0] is None
 
 

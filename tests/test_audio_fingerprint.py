@@ -10,7 +10,7 @@ from jschon_spark.audio.fingerprint import (
     audio_near_duplicates,
     clip_fingerprint128,
     frame_band_energies,
-    subfingerprints,
+    subfingerprints_from_energies,
     subfp_ber,
     with_audio_fingerprint,
 )
@@ -60,6 +60,11 @@ def _hamming128(p, q) -> int:
 
 def _fp(x: np.ndarray):
     return clip_fingerprint128(frame_band_energies(x, SR, {}))
+
+
+def subfingerprints(x: np.ndarray, sr: int, scratch: dict) -> np.ndarray:
+    """The per-frame H–K sequence the fingerprint stage emits as ``subfp``."""
+    return subfingerprints_from_energies(frame_band_energies(x, sr, scratch))
 
 
 # -- kernel math --------------------------------------------------------------

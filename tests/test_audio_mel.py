@@ -11,13 +11,19 @@ from jschon_spark.audio.mel import (
     LOG_FLOOR_DB,
     hz_to_mel,
     log_mel,
-    mel_centers,
     mel_filterbank,
     mel_to_hz,
     with_log_mel,
 )
 
 SR = 16000
+
+
+def mel_centers(sr: int, n_mels: int) -> np.ndarray:
+    """Center frequency (Hz) of each HTK mel band over [0, sr/2] — the
+    synthesis-contract oracle: a pure tone at ``f`` must put its energy
+    argmax in the band whose center is nearest ``f``."""
+    return mel_to_hz(np.linspace(hz_to_mel(0.0), hz_to_mel(sr / 2.0), n_mels + 2))[1:-1]
 
 
 def tone(f0: float, secs: float = 1.0, amp: float = 0.5, sr: int = SR) -> np.ndarray:
@@ -127,9 +133,7 @@ def test_mfcc_constant_logmel_only_c0():
 
 
 def test_with_mfcc_stage(spark, clips):
-    from jschon_spark.audio.mel import with_mfcc
-
-    out = {r["clip_id"]: r for r in with_mfcc(clips, n_mfcc=13).collect()}
+    out = {r["clip_id"]: r for r in with_log_mel(clips, n_mfcc=13).collect()}
     assert len(out["good"]["mfcc_mean"]) == 13 and len(out["good"]["mfcc_std"]) == 13
     assert out["nullbytes"]["mfcc_mean"] is None
     # c0 tracks overall level: the tone clip is far above the floor

@@ -151,9 +151,10 @@ def test_audio_adversarial_payloads(spark):
     import numpy as np
 
     from jschon_spark.audio import ALAW_LUT, MULAW_LUT, with_audio_invariant
-    from jschon_spark.audio.adpcm import encode_ima_adpcm, wav_ima_bytes
+    from jschon_spark.audio.adpcm import encode_ima_adpcm
     from jschon_spark.audio.features import with_audio_features
     from jschon_spark.fixtures import clip_seed, synth_pcm
+    from tests.test_adpcm import _ima_wav
 
     def wav_bytes(samples, sr, nch=1):
         buf = io.BytesIO()
@@ -190,8 +191,8 @@ def test_audio_adversarial_payloads(spark):
         ("clip-ai", companded(signal("clip-ai"), MULAW_LUT), 16000, 100, "pcm_mulaw"),
         ("clip-aj", companded(signal("clip-aj"), ALAW_LUT), 16000, 100, "pcm_alaw"),
         ("clip-ak", encode_ima_adpcm(signal("clip-ak")), 16000, 100, "adpcm_ima"),
-        # IMA ADPCM WAV (the stdlib-fallback walk) whose header says 0 Hz
-        ("clip-al", wav_ima_bytes(signal("clip-al"), 0), 16000, 100, "wav"),
+        # IMA ADPCM WAV (fmt 0x11) whose header says 0 Hz
+        ("clip-al", _ima_wav(signal("clip-al"), 0), 16000, 100, "wav"),
         # headerless payloads at sr_hz 0 (no reference signal to
         # synthesize) and at a null sr_hz (no rate to decode at)
         ("clip-am", good.tobytes(), 0, 100, "pcm_s16le"),

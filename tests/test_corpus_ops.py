@@ -13,12 +13,7 @@ from jschon_spark.operators.corpus import (
     contamination_report,
     with_boilerplate_fraction,
 )
-from jschon_spark.operators.sampling import (
-    deterministic_sample,
-    rate_threshold_hex,
-    stratified_sample,
-    train_holdout_split,
-)
+from jschon_spark.operators.sampling import rate_threshold_hex, stratified_sample
 
 
 @pytest.fixture(scope="module")
@@ -82,24 +77,29 @@ def test_rate_threshold_hex_boundaries():
     assert rate_threshold_hex(0.25) == "40000000"
 
 
-def test_deterministic_sample_stable_and_partition_independent(spark):
+def _uniform_sample(df, rate, salt="mix-v1"):
+    # one stratum: default_rate gates every row
+    return sorted(r["k"] for r in stratified_sample(df, {}, "k", "k", rate, salt).collect())
+
+
+def test_uniform_sample_stable_and_partition_independent(spark):
     df1 = spark.range(0, 2000, 1, 4).withColumnRenamed("id", "k")
     df8 = spark.range(0, 2000, 1, 8).withColumnRenamed("id", "k")
-    s1 = sorted(r["k"] for r in deterministic_sample(df1, 0.3, "k").collect())
-    s2 = sorted(r["k"] for r in deterministic_sample(df1, 0.3, "k").collect())
-    s8 = sorted(r["k"] for r in deterministic_sample(df8, 0.3, "k").collect())
-    assert s1 == s2 == s8
+    s1 = _uniform_sample(df1, 0.3)
+    assert s1 == _uniform_sample(df1, 0.3) == _uniform_sample(df8, 0.3)
     # md5 is uniform: 30% +- a loose binomial bound
     assert 480 <= len(s1) <= 720
     # a different salt draws a different sample
-    s_other = sorted(r["k"] for r in deterministic_sample(df1, 0.3, "k", salt="other").collect())
-    assert s_other != s1
+    assert _uniform_sample(df1, 0.3, salt="other") != s1
+    # membership is stable as the table grows (same coin per key)
+    half = spark.range(1000).withColumnRenamed("id", "k")
+    assert _uniform_sample(half, 0.3) == [k for k in s1 if k < 1000]
 
 
-def test_deterministic_sample_boundary_rates(spark):
+def test_uniform_sample_boundary_rates(spark):
     df = spark.range(100).withColumnRenamed("id", "k")
-    assert deterministic_sample(df, 1.0, "k").count() == 100
-    assert deterministic_sample(df, 0.0, "k").count() == 0
+    assert len(_uniform_sample(df, 1.0)) == 100
+    assert _uniform_sample(df, 0.0) == []
 
 
 def test_stratified_sample_rates(spark):
@@ -121,20 +121,6 @@ def test_sampling_is_map_side_only(spark):
         ._jdf.queryExecution().executedPlan().toString()
     )
     assert "Exchange" not in plan  # pure scan filter: zero shuffles
-
-
-def test_train_holdout_split_disjoint_exhaustive(spark):
-    df = spark.range(1000).withColumnRenamed("id", "k")
-    train, hold = train_holdout_split(df, 0.2, "k")
-    t = {r["k"] for r in train.collect()}
-    h = {r["k"] for r in hold.collect()}
-    assert t | h == set(range(1000))
-    assert not (t & h)
-    assert 120 <= len(h) <= 280
-    # membership is stable as the table grows (same coin per key)
-    df2 = spark.range(2000).withColumnRenamed("id", "k")
-    _, hold2 = train_holdout_split(df2, 0.2, "k")
-    assert {r["k"] for r in hold2.collect() if r["k"] < 1000} == h
 
 
 # -- chunk plan --------------------------------------------------------------

@@ -9,11 +9,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from jschon_spark.operators.dedup import edit_similarity, edit_verified_pairs
-from jschon_spark.operators.text import (
-    normalize_text,
-    normalized_dedup,
-    normalized_duplicates,
-)
+from jschon_spark.operators.text import normalize_text, normalized_dedup
 
 
 @pytest.fixture(scope="module")
@@ -119,7 +115,7 @@ def test_normalize_text(spark):
     assert got == ["hello world 42", "hello world 42", ""]
 
 
-def test_normalized_duplicates_groups(spark):
+def test_normalized_dedup_keeps_one_per_group(spark):
     df = spark.createDataFrame(
         [
             (0, "Hello, World!"),
@@ -131,8 +127,7 @@ def test_normalized_duplicates_groups(spark):
         ],
         "doc_id long, text string",
     )
-    groups = {tuple(r["doc_ids"]): r["n_docs"] for r in normalized_duplicates(df).collect()}
-    assert groups == {(0, 1, 2): 3, (3, 4): 2}
+    # groups {0, 1, 2} and {3, 4} keep their min id
     kept = sorted(r["doc_id"] for r in normalized_dedup(df).collect())
     assert kept == [0, 3, 5]
 

@@ -150,6 +150,17 @@ def test_malformed_payloads_raise_decode_error(blob):
         mm.decode_image(blob)
 
 
+def test_one_image_decode_error():
+    """Every built-in codec raises the one ImageDecodeError, under each
+    module's name for it."""
+    from jschon_spark.operators import gif, jpeg
+
+    assert gif.ImageDecodeError is jpeg.ImageDecodeError is mm.ImageDecodeError
+    for decode in (mm.decode_jpeg, mm.decode_gif, mm.decode_png):
+        with pytest.raises(mm.ImageDecodeError):
+            decode(b"not an image")
+
+
 def test_png_zlib_garbage():
     import struct
     import zlib as _z

@@ -108,13 +108,19 @@ def test_column_subset(table):
     assert set(s["properties"]) == {"id", "status"}
 
 
-def test_schema_drift_report(spark, table):
-    """Baseline-vs-batch structural drift: a conforming batch reports
-    nothing; a drifted batch surfaces each drift as its keyword."""
-    from jschon_spark.compiler.infer import schema_drift_report
+def test_inferred_schema_flags_drift(spark, table):
+    """The infer → validate → monitor loop: a batch validated against
+    the baseline's inferred schema reports nothing when it conforms; a
+    drifted batch surfaces each drift as its keyword."""
+    from jschon_spark.output import violation_histogram
 
-    clean, _ = schema_drift_report(table, table)
-    assert clean.count() == 0
+    schema = infer_schema(table)
+    compiled = compile_schema(schema)
+
+    def drift(batch):
+        return violation_histogram(compiled.validate(batch, instance_columns=table.columns))
+
+    assert drift(table).count() == 0
 
     drifted = spark.createDataFrame(
         pd.DataFrame(
@@ -130,8 +136,7 @@ def test_schema_drift_report(spark, table):
         ),
         schema=table.schema,
     )
-    hist, schema = schema_drift_report(table, drifted)
-    got = {r["keyword"]: r["n_violations"] for r in hist.collect()}
+    got = {r["keyword"]: r["n_violations"] for r in drift(drifted).collect()}
     assert got.get("maximum") == 1
     assert got.get("enum") == 1
     assert schema["properties"]["status"] == {"enum": ["bad", "ok"]}

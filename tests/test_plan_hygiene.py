@@ -273,6 +273,30 @@ def test_one_arrow_decode_walk():
     assert "pandas_udf" not in (root / "audio" / "__init__.py").read_text()
 
 
+def test_one_wav_reader_and_writer():
+    """Only ``audio/__init__.py`` knows the RIFF/WAVE format: within the
+    package and the jobs, the byte literals ``b"RIFF"`` and ``b"WAVE"``
+    appear nowhere else, and no module imports the stdlib ``wave``."""
+    import ast
+    import pathlib
+
+    import jschon_spark
+
+    repo = pathlib.Path(jschon_spark.__file__).parent.parent
+    literals, wave_imports = set(), set()
+    for path in sorted([*(repo / "jschon_spark").rglob("*.py"), *(repo / "jobs").glob("*.py")]):
+        rel = str(path.relative_to(repo))
+        for node in ast.walk(ast.parse(path.read_text())):
+            if isinstance(node, ast.Constant) and node.value in (b"RIFF", b"WAVE"):
+                literals.add(rel)
+            elif isinstance(node, ast.Import) and any(a.name == "wave" for a in node.names):
+                wave_imports.add(rel)
+            elif isinstance(node, ast.ImportFrom) and node.module == "wave":
+                wave_imports.add(rel)
+    assert literals == {"jschon_spark/audio/__init__.py"}, literals
+    assert not wave_imports, wave_imports
+
+
 def test_one_band_self_join():
     """Every near-duplicate blocker (MinHash LSH, MinHash SQL bands,
     SimHash-128, embedding hyperplane LSH) ends in ``dedup.band_pairs``:

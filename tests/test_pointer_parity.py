@@ -29,10 +29,8 @@ from jschon_spark.compiler.pointer import (
     PointerError,
     format_pointer,
     json_pointer_get,
-    json_pointer_to_variant_path,
     parse_pointer,
     relative_pointer,
-    variant_pointer_get,
 )
 
 _HERE = os.path.dirname(os.path.abspath(__file__))
@@ -192,38 +190,6 @@ def test_json_pointer_get_empty_key_delta(spark):
         json_pointer_get("j", "/a").alias("a"),
     ).collect()[0]
     assert row.empty is None and row.a == "2"
-
-
-def test_variant_pointer_get_matches_reference(spark, ref_mod):
-    """The VARIANT walk (Spark 4 parse_json + try_variant_get) covers
-    the empty-key pointers the JSONPath walk can't, plus every pointer
-    of the parity docs — compared JSON-normalized against the
-    reference's evaluate."""
-    import pyspark.sql.functions as F
-
-    JSON, JSONPointer = ref_mod["JSON"], ref_mod["JSONPointer"]
-    docs = _DOCS + [{"": {"": [1, 2], "a'b": 3}, 'c"d': {"": None}}]
-    for doc in docs:
-        pointers = [p for p, _ in _all_pointers(doc) if p != ""]
-        df = spark.createDataFrame([(json.dumps(doc),)], "j string")
-        row = df.select(
-            *[
-                F.to_json(variant_pointer_get("j", p)).alias(f"p{i}")
-                for i, p in enumerate(pointers)
-            ]
-        ).collect()[0]
-        for i, p in enumerate(pointers):
-            want = JSONPointer(p).evaluate(JSON(doc))
-            if hasattr(want, "value"):
-                want = want.value
-            got = row[i]
-            assert got is not None, (p, want)
-            assert json.loads(got) == want, (p, got, want)
-
-
-def test_variant_path_rejects_doubly_quoted_key():
-    with pytest.raises(PointerError):
-        json_pointer_to_variant_path("/a'b\"c")
 
 
 def test_parse_format_roundtrip_matches_reference(ref_mod):
